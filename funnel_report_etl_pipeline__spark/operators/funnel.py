@@ -11,11 +11,15 @@ unpivoted into a typed funnel relation. The presentation layout
 Scale: the four input aggregates reduce 100 TB of raw events to four
 1-row frames executor-side (partial→final hash aggregation); only scalar
 totals ever reach the cross join. Per-entity reports for N entities run as
-ONE grouped job (``entity_funnel_metrics``), not the reference's
-sequential per-entity loop (run_reports.py:212).
+ONE grouped aggregate (``entity_funnel_metrics``): the four datasets are
+union-all'ed and grouped once on the entity key — one hash exchange, two
+Spark jobs per collect — not the reference's sequential per-entity loop
+(run_reports.py:212).
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -206,56 +210,53 @@ def entity_funnel_metrics(
     discovery_summary: DataFrame,
     user_funnel: DataFrame,
 ) -> DataFrame:
-    """All-entity metrics in ONE Spark job (the reference loops entities
-    sequentially on the driver, run_reports.py:212-243).
+    """All-entity metrics as ONE grouped aggregate (the reference loops
+    entities sequentially on the driver, run_reports.py:212-243).
 
-    Four grouped aggregations co-partitioned on the entity key, then
-    equi-joined. At 100 TB with a skewed entity distribution, AQE skew-join
-    handles the hot entities; the join sides are already aggregated (one
-    row per entity) so the join input is tiny regardless of raw volume.
+    Each dataset is projected to ``entity_id`` plus its own per-row value
+    columns; the four projections are union-all'ed (a dataset's missing
+    columns are NULL, which SUM/COUNT skip) and grouped once on the entity
+    key. Partial aggregation runs below the single hash exchange, so at
+    100 TB the shuffle carries |entities| rows per input partition no
+    matter how large the raw data is.
     """
-    st = uf_stages.groupBy(F.col("Entity_ID").alias("entity_id")).agg(
-        *[F.coalesce(F.sum(trunc_long(c)), F.lit(0)).alias(c) for c in STAGE_COLUMNS]
+    # SQL expression strings, not Column calls: under PySpark 4 every Column
+    # method or F.col call costs ~10 py4j round trips, and this plan is built
+    # for every report; selectExpr ships a whole projection in one call. The
+    # stage cast pair is trunc_long; the other projections are the per-row
+    # halves of otp_totals, discovery_totals and fi_status_counts.
+    parts = [
+        uf_stages.selectExpr(
+            "Entity_ID AS entity_id",
+            *[f"try_cast(try_cast({c} AS DOUBLE) AS BIGINT) AS {c}" for c in STAGE_COLUMNS],
+        ),
+        otp_summary.selectExpr(
+            "entity_id", *[f"try_cast({c} AS DOUBLE) AS Total_{c}" for c in OTP_COLUMNS]
+        ),
+        discovery_summary.selectExpr(
+            "entity_id",
+            *[f"try_cast(nullif({c}, '') AS DOUBLE) AS {c}_disc" for c in DISCOVERY_COLUMNS],
+        ),
+        user_funnel.where("fetch_status IN ('Not Attempted', 'Failed', 'Success')").selectExpr(
+            "entity_id",
+            "CASE WHEN fetch_status = 'Success' THEN 1 END AS fi_success",
+            "CASE WHEN fetch_status = 'Failed' THEN 1 END AS fi_failed",
+        ),
+    ]
+    rows = functools.reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    # entity spine for free: an entity seen in ANY dataset is one group, so
+    # an entity with e.g. only OTP rows still gets a (zeros-elsewhere)
+    # report row, as the reference's independent per-dataset queries give.
+    # The NULL key stays an all-zero row, not the sums of the keyless rows:
+    # no per-entity equality predicate ever selects NULL.
+    summed = [*STAGE_COLUMNS, *[f"Total_{c}" for c in OTP_COLUMNS],
+              *[c + "_disc" for c in DISCOVERY_COLUMNS]]
+    totals = rows.groupBy("entity_id").agg(
+        *[F.expr(f"if(entity_id IS NULL, NULL, sum({c})) AS {c}") for c in summed],
+        *[F.expr(f"if(entity_id IS NULL, NULL, count({c})) AS {c}")
+          for c in ("fi_success", "fi_failed")],
     )
-    ot = otp_summary.groupBy("entity_id").agg(
-        *[F.sum(F.col(c).try_cast("double")).alias(f"Total_{c}") for c in OTP_COLUMNS]
-    )
-    dc = discovery_summary.groupBy("entity_id").agg(
-        *[
-            F.sum(F.nullif(F.col(c), F.lit("")).try_cast("double")).alias(c + "_disc")
-            for c in DISCOVERY_COLUMNS
-        ]
-    )
-    fi = (
-        user_funnel.filter(
-            F.col("fetch_status").isin("Not Attempted", "Failed", "Success")
-            & (F.col("fetch_status") != "")
-        )
-        .groupBy("entity_id")
-        .agg(
-            F.count(F.when(F.col("fetch_status") == "Success", 1)).alias("fi_success"),
-            F.count(F.when(F.col("fetch_status") == "Failed", 1)).alias("fi_failed"),
-        )
-    )
-    # entity spine = every entity seen in ANY of the four datasets: the
-    # reference queries each dataset independently per entity, so an entity
-    # with e.g. only OTP rows still gets a (zeros-elsewhere) report row —
-    # anchoring on uf_stages alone would silently drop it. The aggregates
-    # are one-row-per-entity, so the distinct-union spine is tiny.
-    spine = (
-        st.select("entity_id")
-        .union(ot.select("entity_id"))
-        .union(dc.select("entity_id"))
-        .union(fi.select("entity_id"))
-        .distinct()
-    )
-    wide = (
-        spine.join(st, "entity_id", "left")
-        .join(ot, "entity_id", "left")
-        .join(dc, "entity_id", "left")
-        .join(fi, "entity_id", "left")
-    )
-    return wide.select("entity_id", *_metrics_columns())
+    return totals.select("entity_id", *_metrics_columns())
 
 
 # --------------------------------------------------------------------------

@@ -1,8 +1,8 @@
 """Round-6 queries: the grouped all-entity funnel production path under a
 full value-hash oracle, plus round-6 additions.
 
-``entity_funnel_metrics`` (operators/funnel.py:203) is the biggest
-architectural win over the reference — ONE grouped Spark job where
+``entity_funnel_metrics`` (operators/funnel.py:207) is the biggest
+architectural win over the reference — ONE grouped aggregate where
 run_reports.py:212-243 loops entities sequentially on the driver — but
 until this round it was golden-tested only. Here the four reference
 input datasets (uf-stages / otp-summary / discovery-summary /
@@ -108,12 +108,14 @@ def _oracle_stage_cols() -> str:
     )
 
 
-# The oracle mirrors entity_funnel_metrics exactly: four grouped aggregates,
-# distinct-union spine, left joins, then the waterfall arithmetic of
-# _metrics_columns (operators/funnel.py:95-167) — including total_users'
-# 7-column formula, the possibly-negative otp_ok_drop, and the
-# cross-dataset fi_fetch_drop. All cell values are integral so DuckDB's
-# round-on-cast and Spark's truncate-on-cast agree.
+# The oracle keeps the four-aggregate / distinct-union spine / left-join
+# form on purpose: entity_funnel_metrics computes the same rows as ONE
+# union-all aggregate, so this is an independent check that the two are
+# equivalent (an entity in one dataset only gets zeros elsewhere). Then
+# the waterfall arithmetic of _metrics_columns (operators/funnel.py:99-171)
+# — including total_users' 7-column formula, the possibly-negative
+# otp_ok_drop, and the cross-dataset fi_fetch_drop. All cell values are
+# integral so DuckDB's round-on-cast and Spark's truncate-on-cast agree.
 _ENTITY_WATERFALL_ORACLE = f"""
 WITH base AS (
   SELECT *, {_ENT} AS entity, CAST(user_id % 17 AS BIGINT) AS ent_i FROM events
@@ -216,15 +218,14 @@ FROM m
 )
 def entity_funnel_waterfall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-entity funnel waterfall through the REAL production operator
-    (`entity_funnel_metrics`, operators/funnel.py:203): four grouped
-    aggregations on the entity key, distinct-union entity spine, left
-    joins, then the reference waterfall arithmetic per entity — one Spark
-    job where the reference loops entities on the driver
+    (`entity_funnel_metrics`, operators/funnel.py:207): the four datasets
+    projected to their per-row values, union-all'ed and grouped once on
+    the entity key, then the reference waterfall arithmetic per entity —
+    one hash exchange where the reference loops entities on the driver
     (run_reports.py:212-243). Input datasets are derived from events over
-    overlapping entity ranges so the spine's only-in-one-dataset case is
-    live. Each join side is pre-aggregated to one row per entity, so at
-    100 TB the join input stays |entities|-sized regardless of raw
-    volume."""
+    overlapping entity ranges so the only-in-one-dataset case is live.
+    Partial aggregation runs below the single exchange, so at 100 TB the
+    shuffle stays |entities| × partitions regardless of raw volume."""
     from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
 
     uf, ot, dc, fi = _entity_inputs(spark, sf_dir)

@@ -113,19 +113,25 @@ def funnel_csv_paths(base: str, dataset: str, window: DateWindow) -> list[str]:
     ]
 
 
-def _existing_paths(spark: SparkSession, paths: list[str]) -> list[str]:
-    """Filter to paths that exist, via the Hadoop FileSystem API so it works
-    against HDFS/S3/GCS as well as file:// (os.path.exists only sees the
-    driver's local disk)."""
+def _filesystem(spark: SparkSession, paths: list[str]) -> tuple:
+    """(Path class, FileSystem) for a non-empty list of paths under one base.
+
+    The FileSystem is resolved once, from the first path, through the
+    Hadoop API, so HDFS/S3/GCS work as well as file:// (os.path.exists only
+    sees the driver's local disk); every further path then costs one JVM
+    round trip, not a ``getFileSystem`` lookup each."""
     jvm = spark.sparkContext._jvm
+    path_cls = jvm.org.apache.hadoop.fs.Path
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    out = []
-    for p in paths:
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(hconf)
-        if fs.exists(hpath):
-            out.append(p)
-    return out
+    return path_cls, path_cls(paths[0]).getFileSystem(hconf)
+
+
+def _existing_paths(spark: SparkSession, paths: list[str]) -> list[str]:
+    """Filter to paths that exist (exact per-path ``exists``)."""
+    if not paths:
+        return []
+    path_cls, fs = _filesystem(spark, paths)
+    return [p for p in paths if fs.exists(path_cls(p))]
 
 
 def _matching_globs(spark: SparkSession, globs: list[str]) -> list[str]:
@@ -133,13 +139,12 @@ def _matching_globs(spark: SparkSession, globs: list[str]) -> list[str]:
     Spark raises PATH_NOT_FOUND for a glob with zero matches, so an empty
     month in a window must be dropped BEFORE the read — not caught after,
     which would throw away the other months' data."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    if not globs:
+        return []
+    path_cls, fs = _filesystem(spark, globs)
     out = []
     for g in globs:
-        hpath = jvm.org.apache.hadoop.fs.Path(g)
-        fs = hpath.getFileSystem(hconf)
-        status = fs.globStatus(hpath)
+        status = fs.globStatus(path_cls(g))
         if status is not None and len(status) > 0:
             out.append(g)
     return out

@@ -135,3 +135,143 @@ def test_entity_only_in_otp_data_still_reported(spark):
     other = rows["FIU_OTHER"]
     assert other.otp_wrong == 777  # its OTP data is reported
     assert other.fi_req_ok == 0  # everything else degrades to zero
+
+
+# --------------------------------------------------------------------------
+# entity_funnel_metrics vs the spine + left-join formulation
+# --------------------------------------------------------------------------
+
+
+def _spine_join_reference(uf_stages, otp_summary, discovery_summary, user_funnel):
+    """The four-aggregate / distinct-union spine / four-left-join plan that
+    ``entity_funnel_metrics`` replaced, kept as the reference it must
+    match row for row."""
+    from pyspark.sql import functions as F
+
+    from funnel_report_etl_pipeline__spark.functions.core import trunc_long
+    from funnel_report_etl_pipeline__spark.operators.funnel import _metrics_columns
+    from funnel_report_etl_pipeline__spark.schemas import (
+        DISCOVERY_COLUMNS,
+        OTP_COLUMNS,
+        STAGE_COLUMNS,
+    )
+
+    st = uf_stages.groupBy(F.col("Entity_ID").alias("entity_id")).agg(
+        *[F.coalesce(F.sum(trunc_long(c)), F.lit(0)).alias(c) for c in STAGE_COLUMNS]
+    )
+    ot = otp_summary.groupBy("entity_id").agg(
+        *[F.sum(F.col(c).try_cast("double")).alias(f"Total_{c}") for c in OTP_COLUMNS]
+    )
+    dc = discovery_summary.groupBy("entity_id").agg(
+        *[
+            F.sum(F.nullif(F.col(c), F.lit("")).try_cast("double")).alias(c + "_disc")
+            for c in DISCOVERY_COLUMNS
+        ]
+    )
+    fi = (
+        user_funnel.filter(
+            F.col("fetch_status").isin("Not Attempted", "Failed", "Success")
+            & (F.col("fetch_status") != "")
+        )
+        .groupBy("entity_id")
+        .agg(
+            F.count(F.when(F.col("fetch_status") == "Success", 1)).alias("fi_success"),
+            F.count(F.when(F.col("fetch_status") == "Failed", 1)).alias("fi_failed"),
+        )
+    )
+    spine = (
+        st.select("entity_id")
+        .union(ot.select("entity_id"))
+        .union(dc.select("entity_id"))
+        .union(fi.select("entity_id"))
+        .distinct()
+    )
+    wide = (
+        spine.join(st, "entity_id", "left")
+        .join(ot, "entity_id", "left")
+        .join(dc, "entity_id", "left")
+        .join(fi, "entity_id", "left")
+    )
+    return wide.select("entity_id", *_metrics_columns())
+
+
+def _edge_frames(spark):
+    """Raw frames covering the cases where the union-all aggregate could
+    drift from the spine + left-join plan."""
+    from funnel_report_etl_pipeline__spark import schemas
+
+    stage = lambda ent, *v: (ent, "15-02-2026", *v)  # noqa: E731
+    uf_stages = spark.createDataFrame(
+        [
+            stage("E_ALL", "300.9", "x", "7", "", "1e3", "-2.5", "5", "5", "5", "5", "5"),
+            stage("E_ALL", "100", "200", "3", "4", "5", "6", "7", "8", "9", "10", "11"),
+            stage("E_ST", *["12"] * 11),
+            stage(None, *["40"] * 11),
+        ],
+        schemas.UF_STAGES_SCHEMA,
+    )
+    otp_summary = spark.createDataFrame(
+        [
+            ("E_ALL", "10", "x", "300.9"),
+            ("E_ALL", "", "20", "1"),
+            ("E_OT", "1", "2", "3"),
+            (None, "50", "50", "50"),
+        ],
+        schemas.OTP_SUMMARY_SCHEMA,
+    )
+    discovery_summary = spark.createDataFrame(
+        [
+            ("E_ALL", "", "300.9", "x", "4", "5"),
+            ("E_ALL", "1", "", "", "", "2"),
+            ("E_DC", "", "", "", "", ""),
+            (None, "60", "60", "60", "60", "60"),
+        ],
+        schemas.DISCOVERY_SUMMARY_SCHEMA,
+    )
+    user_funnel = spark.createDataFrame(
+        [("E_ALL", s) for s in ("Success", "Success", "Failed", "Not Attempted", "", "Bogus", None)]
+        + [("E_FI", "Failed")]
+        # only out-of-contract statuses: no dataset keeps this entity
+        + [("E_JUNK", "success"), ("E_JUNK", "")]
+        + [(None, "Success"), (None, "Failed")],
+        schemas.USER_FUNNEL_SCHEMA,
+    )
+    return uf_stages, otp_summary, discovery_summary, user_funnel
+
+
+def _rows_by_entity(df):
+    return {r.entity_id: r.asDict() for r in df.collect()}
+
+
+def test_entity_funnel_matches_spine_join_reference(spark):
+    from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
+
+    frames = _edge_frames(spark)
+    ours = _rows_by_entity(entity_funnel_metrics(*frames))
+    ref = _rows_by_entity(_spine_join_reference(*frames))
+    assert set(ours) == {"E_ALL", "E_ST", "E_OT", "E_DC", "E_FI", None}
+    assert ours == ref
+    # the NULL key matches nothing under the reference's equi-joins, so it
+    # reports zeros even though every dataset has keyless rows with values
+    assert all(v == 0 for k, v in ours[None].items() if k != "entity_id")
+    assert ours["E_ALL"]["otp_wrong"] == 20  # 'x' → NULL, '' → NULL
+    assert ours["E_FI"]["fi_req_ok"] == 1 and ours["E_FI"]["total_users"] == 0
+
+
+def test_entity_funnel_all_inputs_empty(spark):
+    """A window with no files: read_funnel_csv returns typed empty frames."""
+    from funnel_report_etl_pipeline__spark import schemas
+    from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
+
+    frames = [
+        spark.createDataFrame([], s)
+        for s in (
+            schemas.UF_STAGES_SCHEMA,
+            schemas.OTP_SUMMARY_SCHEMA,
+            schemas.DISCOVERY_SUMMARY_SCHEMA,
+            schemas.USER_FUNNEL_SCHEMA,
+        )
+    ]
+    ours = entity_funnel_metrics(*frames)
+    assert ours.collect() == []
+    assert ours.schema == _spine_join_reference(*frames).schema

@@ -57,6 +57,40 @@ def test_event_funnel_single_fact_shuffle(spark):
     assert p.count("Exchange hashpartitioning(user_id") == 1
 
 
+def test_entity_funnel_one_shuffle_no_join(spark):
+    """The per-entity report is one union-all aggregate: one hash exchange
+    with partial aggregation below it, no entity spine and no joins."""
+    from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
+    from funnel_report_etl_pipeline__spark.sources.mock import mock_funnel_frames
+
+    df = entity_funnel_metrics(*mock_funnel_frames(spark))
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("Exchange hashpartitioning") == 1
+    assert "partial_sum" in p
+    assert "Join" not in p
+
+
+def test_entity_funnel_collect_job_budget(spark):
+    """Per-operator job budget: collecting the all-entity metrics runs at
+    most 2 Spark jobs, the map stage of its one exchange and the result
+    stage."""
+    from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
+    from funnel_report_etl_pipeline__spark.sources.mock import mock_funnel_frames
+
+    sc = spark.sparkContext
+    df = entity_funnel_metrics(*mock_funnel_frames(spark))
+    group = "test_entity_funnel_collect_job_budget"
+    sc.setJobGroup(group, "entity_funnel_metrics collect")
+    try:
+        rows = df.collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(rows) == 2
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, f"{len(jobs)} jobs"
+
+
 PYTHON_PATH_EXCEPTIONS = {
     # the documented Arrow escape hatches — everything else must stay JVM-side
     "multimodal_meta",
@@ -181,10 +215,10 @@ WINDOW_SHUFFLE_BUDGET = {
     "median_order_gap": 1, "top_session_paths": 2, "source_drift_l1": 12,
     "per_source_holdout": 1, "column_stats_orders": 5,
     "train_val_test_split": 0,
-    # round-6 additions: the grouped entity waterfall (8 = four grouped
-    # datasets + spine + re-aggs), the iterative graph pair (per-iteration
-    # contribution shuffles), CDC diff, census joins
-    "entity_funnel_waterfall": 8, "incremental_daily_rollup": 2,
+    # round-6 additions: the grouped entity waterfall (1 = the single
+    # entity-key exchange of its union-all aggregate), the iterative graph
+    # pair (per-iteration contribution shuffles), CDC diff, census joins
+    "entity_funnel_waterfall": 1, "incremental_daily_rollup": 2,
     "linear_attribution": 2, "vocab_tokenize": 2, "fuzzy_dedup_names": 2,
     # pagerank: 11 since the round-14 rewrite (deg rides inside ranks —
     # one join per iteration instead of two, node count as a broadcast
