@@ -305,54 +305,6 @@ def jaccard_verify(
     return j.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
-# the single live gram cache as ((session id, semantic plan hash), frame) —
-# see minhash_dedup_pairs persist_grams. The session id is part of the key:
-# a new session with the same input must NOT reuse a frame bound to a
-# stopped session (the plan hash alone would collide).
-_PERSISTED_GRAMS: list[tuple[tuple[int, int], DataFrame]] = []
-
-# same single-slot discipline for the verified-pairs frame: dedup_clusters
-# consumes exactly the pair list dedup_minhash_lsh just computed (identical
-# analyzed plan → identical semantic hash), so caching it turns the cluster
-# pass into pairs-scan + label propagation instead of re-deriving the whole
-# gram → signature → band → verify pipeline. The 100 TB analogue is a
-# parquet checkpoint of the pair list between pipeline stages.
-_PERSISTED_PAIRS: list[tuple[tuple[int, int], DataFrame]] = []
-
-
-def reset_persisted_slots() -> None:
-    """Clear the single-slot gram/pair caches. MUST be called by any
-    harness that blanket-unpersists the session's RDDs between queries
-    (bench.py / time_sweep — via ``session.release_all_caches``):
-    after such an unpersist the slots would hand later queries an
-    UNPERSISTED frame that recomputes once per consumer, worse than
-    rebuilding the cache from scratch."""
-    _PERSISTED_GRAMS.clear()
-    _PERSISTED_PAIRS.clear()
-
-
-def _cache_single_slot(
-    slot: list[tuple[tuple[int, int], DataFrame]], frame: DataFrame
-) -> DataFrame:
-    """Return the cached frame when its (session, semantic-hash) key matches
-    the slot; otherwise evict the old cache and persist this frame."""
-    key = (
-        id(frame.sparkSession),
-        frame._jdf.queryExecution().analyzed().semanticHash(),
-    )
-    if slot and slot[0][0] == key:
-        return slot[0][1]
-    while slot:
-        old = slot.pop()[1]
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — cache bound to a stopped
-            pass  # session: nothing left to release
-    frame = frame.persist()
-    slot.append((key, frame))
-    return frame
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -362,8 +314,6 @@ def minhash_dedup_pairs(
     bands: int = 8,
     rows: int = 4,
     threshold: float = 0.8,
-    persist_grams: bool = False,
-    persist_pairs: bool = False,
     max_gram_freq: int | None = 1000,
     hash_family: str = "md5",
 ) -> DataFrame:
@@ -379,18 +329,13 @@ def minhash_dedup_pairs(
     corpus scale; the dropped grams carry no near-dup signal (they don't
     discriminate). Set None to disable (exact textbook semantics).
 
-    The gram frame feeds both the signature pass and the verify join.
-    ``persist_grams=True`` materializes it once and reuses it (measured
-    1.46s vs 2.16s warm at sf0.1 — the recompute costs more than the
-    cache). DataFrame caches are pinned by Spark's CacheManager until
-    explicitly unpersisted (ContextCleaner does NOT reap them), so this
-    module keeps at most ONE gram cache alive: each persisting call
-    releases the previous call's cache. Safe for sequential execution
-    (bench/verify drain each result before the next call); for concurrent
-    pipelines manage persistence externally. At 100 TB, materialize
-    grams/signatures to a parquet checkpoint between runs instead —
-    executor-memory caching of a corpus-sized gram frame would evict
-    itself."""
+    The gram frame feeds both the signature pass and the verify join, so
+    it is localCheckpointed once per call: both consumers read the same
+    materialized rows instead of re-running tokenization and the gram
+    frequency filter. The checkpoint lives only in this call's lineage,
+    so no other query's plan depends on it and nothing has to be reset
+    between queries. At 100 TB the same cut is a parquet checkpoint of the
+    gram frame between the two passes."""
     if bands * rows > num_perm:
         raise ValueError(
             f"bands*rows ({bands}*{rows}) exceeds signature length {num_perm}; "
@@ -399,22 +344,10 @@ def minhash_dedup_pairs(
     grams = gram_rows(df, id_col, text_col, ngram)
     if max_gram_freq is not None:
         grams = drop_frequent_grams(grams, max_gram_freq)
-    if persist_grams:
-        # one live cache, keyed by semantic plan hash: an identical call
-        # (same session/input/params — e.g. bench warm-up then timed run)
-        # REUSES the cached frame; a different input evicts the old cache
-        # first, so caches never accumulate across scale factors
-        grams = _cache_single_slot(_PERSISTED_GRAMS, grams)
+    grams = grams.localCheckpoint()
     sigs = minhash_signatures(grams, num_perm, hash_family)
     cands = lsh_candidate_pairs(sigs, bands, rows)
-    verified = jaccard_verify(cands, grams, threshold)
-    if persist_pairs:
-        # ``persist_pairs=True`` additionally caches the verified pair list
-        # (single slot, same keying) so a downstream consumer with the same
-        # parameters — dedup_assign_clusters after a near-dup report —
-        # starts from materialized pairs instead of re-running the pipeline.
-        verified = _cache_single_slot(_PERSISTED_PAIRS, verified)
-    return verified
+    return jaccard_verify(cands, grams, threshold)
 
 
 def ngram_decontaminate(

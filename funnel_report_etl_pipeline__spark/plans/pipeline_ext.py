@@ -65,10 +65,10 @@ def bigram_lm_support_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers and the only division is one BIGINT/BIGINT at the end — no
     float-sum ordering hazards. Scale shape: the bigram stream is re-derived
     per consumer branch (count tables partition on different keys, so no
-    exchange reuse — at 100 TB checkpoint the gram frame once, as the dedup
-    family's persist_grams does); the two count tables shuffle on
-    (w1,w2)/(w1); per-doc aggregation is one more key shuffle. No Python,
-    no windows, whole-stage codegen throughout."""
+    exchange reuse — at 100 TB checkpoint the gram frame once, as
+    minhash_dedup_pairs localCheckpoints its grams); the two count tables
+    shuffle on (w1,w2)/(w1); per-doc aggregation is one more key shuffle.
+    No Python, no windows, whole-stage codegen throughout."""
     docs = _t(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     bg = (

@@ -220,9 +220,7 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates → verify) is replicated in the DuckDB oracle and the result
     is value-hash verified, not merely rows-only."""
     docs = _t(spark, sf_dir, "documents")
-    return minhash_dedup_pairs(
-        docs, threshold=0.8, persist_grams=True, persist_pairs=True
-    ).orderBy("id_a", "id_b")
+    return minhash_dedup_pairs(docs, threshold=0.8).orderBy("id_a", "id_b")
 
 
 def _simhash_oracle() -> str:
@@ -1039,9 +1037,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(
-        docs, threshold=0.8, persist_grams=True, persist_pairs=True
-    ).select("id_a", "id_b")
+    pairs = minhash_dedup_pairs(docs, threshold=0.8).select("id_a", "id_b")
     return dedup_assign_clusters(docs, pairs)
 
 
@@ -1331,9 +1327,9 @@ def dedup_minhash_fast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from funnel_report_etl_pipeline__spark.operators.dedup import minhash_dedup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return minhash_dedup_pairs(
-        docs, threshold=0.8, persist_grams=True, hash_family="md5w"
-    ).orderBy("id_a", "id_b")
+    return minhash_dedup_pairs(docs, threshold=0.8, hash_family="md5w").orderBy(
+        "id_a", "id_b"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -786,9 +786,7 @@ def dedup_cluster_quality_canon_q(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(
-        docs, threshold=0.8, persist_grams=True, persist_pairs=True
-    ).select("id_a", "id_b")
+    pairs = minhash_dedup_pairs(docs, threshold=0.8).select("id_a", "id_b")
     clusters = dedup_assign_clusters(docs, pairs)
     toks = F.split(F.col("text"), " ")
     stops = F.array(*[F.lit(s) for s in STOPWORDS])

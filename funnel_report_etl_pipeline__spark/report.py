@@ -7,11 +7,10 @@ The engine's source of truth is the typed funnel DataFrame
   (report_engine.py:293-319) built from one collected metrics row.
 * ``write_funnel_excel`` — the formatted one-sheet workbook
   (run_reports.py:64-125: column widths, merged stage cells, gray/green/
-  brown formats, spacer row). Uses ``xlsxwriter`` when installed, else
-  the stdlib zip+xml backend (xlsx_lite) — the formatted writer executes
-  either way. Without xlsxwriter ``write_funnel_report`` additionally
-  writes a deterministic CSV twin with identical cell values and returns
-  its path (the historical contract tests and downstream consumers parse).
+  brown formats, spacer row), written by the stdlib zip+xml backend
+  (xlsx_lite). ``write_funnel_report`` additionally writes a deterministic
+  CSV twin with identical cell values and returns its path (the
+  historical contract tests and downstream consumers parse).
 * ``send_report_mail`` — MIME multipart (plain+HTML) + base64 attachments
   over SMTP (run_reports.py:132-165); skips quietly when unconfigured.
 
@@ -38,15 +37,6 @@ from funnel_report_etl_pipeline__spark.functions.core import pct_py
 log = logging.getLogger(__name__)
 
 Cell = object  # str | int | float — the reference's mixed-type layout
-
-# xlsxwriter is optional in this environment; the layout code is real and
-# runs whenever the library is present.
-try:  # pragma: no cover - exercised only where xlsxwriter is installed
-    import xlsxwriter  # noqa: F401
-
-    HAS_XLSX = True
-except ImportError:
-    HAS_XLSX = False
 
 
 def safe_filename(entity_id: str, date_spec: str) -> str:
@@ -127,12 +117,11 @@ _LAYOUT_FORMATS: dict[str, dict] = {
 def funnel_layout(
     table: list[list[Cell]],
 ) -> tuple[dict[tuple[int, int], tuple[Cell, str]], list[tuple[int, int, int, int]]]:
-    """Backend-neutral workbook layout (reference run_reports.py:64-125):
+    """Workbook layout (reference run_reports.py:64-125):
     {(row, col): (value, format_name)} plus merge ranges, replicating the
     reference's write order (later writes win, merges style every covered
-    cell and carry the value in the top-left). Consumed by both the
-    xlsxwriter backend and the stdlib zip+xml one, so the formatted sink
-    executes — and is round-trip testable — without xlsxwriter."""
+    cell and carry the value in the top-left). Consumed by the stdlib
+    zip+xml writer, so the formatted sink is round-trip testable."""
     out = [[""] * 7] + table  # U2: spacer row → reference row indices align
     cells: dict[tuple[int, int], tuple[Cell, str]] = {}
     merges: list[tuple[int, int, int, int]] = []
@@ -180,48 +169,18 @@ def funnel_layout(
 def write_funnel_excel(table: list[list[Cell]], filepath: str) -> None:
     """K1: formatted one-sheet workbook — widths, merged stage cells, gray/
     green/brown formats, 1 blank spacer row prepended (U2)
-    (reference run_reports.py:64-125). Uses xlsxwriter when installed,
-    else the stdlib zip+xml writer (xlsx_lite) — same layout either way."""
+    (reference run_reports.py:64-125), written by the stdlib zip+xml
+    writer (xlsx_lite)."""
     cells, merges = funnel_layout(table)
-    if not HAS_XLSX:
-        xlsx_lite.write_xlsx(
-            filepath, cells, merges, _LAYOUT_WIDTHS, _LAYOUT_FORMATS,
-            sheet_name="Funnel Dashboard",
-        )
-        return
-
-    wb = xlsxwriter.Workbook(filepath)
-    sheet = wb.add_worksheet("Funnel Dashboard")
-    for c, wdt in enumerate(_LAYOUT_WIDTHS):
-        sheet.set_column(c, c, wdt)
-    base = {"border": 1, "align": "left", "valign": "vcenter"}
-    fmts = {
-        name: wb.add_format(
-            {**base}
-            | ({"bg_color": spec["bg_color"]} if spec.get("bg_color") else {})
-            | ({"text_wrap": True} if spec.get("wrap") else {})
-        )
-        for name, spec in _LAYOUT_FORMATS.items()
-    }
-    merged = {(r, c) for r1, c1, r2, c2 in merges
-              for r in range(r1, r2 + 1) for c in range(c1, c2 + 1)}
-    for (r1, c1, r2, c2) in merges:
-        val, fmt = cells[(r1, c1)]
-        sheet.merge_range(r1, c1, r2, c2, val, fmts[fmt])
-    for (r, c), (val, fmt) in sorted(cells.items()):
-        if (r, c) in merged:
-            continue
-        if val is None or val == "":
-            sheet.write_blank(r, c, None, fmts[fmt])
-        else:
-            sheet.write(r, c, val, fmts[fmt])
-    wb.close()
+    xlsx_lite.write_xlsx(
+        filepath, cells, merges, _LAYOUT_WIDTHS, _LAYOUT_FORMATS,
+        sheet_name="Funnel Dashboard",
+    )
 
 
 def write_funnel_csv(table: list[list[Cell]], filepath: str) -> None:
-    """Deterministic unformatted fallback: same cells (incl. the U2 spacer
-    row), CSV instead of xlsx. Keeps the pipeline runnable where
-    xlsxwriter is absent."""
+    """Deterministic unformatted twin of the workbook: same cells (incl.
+    the U2 spacer row), CSV instead of xlsx."""
     with open(filepath, "w", newline="") as f:
         w = csv.writer(f)
         w.writerow([""] * 7)
@@ -229,13 +188,10 @@ def write_funnel_csv(table: list[list[Cell]], filepath: str) -> None:
 
 
 def write_funnel_report(table: list[list[Cell]], filepath: str) -> str:
-    """Write the formatted workbook at ``filepath`` (xlsxwriter or the
-    stdlib backend — always executes). Without xlsxwriter, also write the
-    CSV twin and return its path (the historical contract downstream
-    consumers parse); with it, return the xlsx path."""
+    """Write the formatted workbook at ``filepath`` and its CSV twin beside
+    it; return the CSV path (the historical contract downstream consumers
+    parse)."""
     write_funnel_excel(table, filepath)
-    if HAS_XLSX:
-        return filepath
     csv_path = os.path.splitext(filepath)[0] + ".csv"
     write_funnel_csv(table, csv_path)
     return csv_path

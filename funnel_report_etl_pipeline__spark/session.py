@@ -63,17 +63,16 @@ def get_spark(
 
 
 def release_all_caches(spark: SparkSession) -> None:
-    """Drop every cached/persisted block AND reset module-level persisted
-    slots — the between-queries hygiene step for single-JVM many-query
-    harnesses (bench.py, tools/time_sweep.py, A/B probes).
+    """Drop every cached/persisted block, then run a JVM GC — the
+    between-queries hygiene step for single-JVM many-query harnesses
+    (bench.py, tools/time_sweep.py, A/B probes).
 
     localCheckpoint pins MEMORY_AND_DISK RDDs for the session lifetime, so
     a ~200-query sweep accumulates checkpoint debt that GC-thrashes late
     memory-heavy queries (round-8 sweeps: bigram 77 s dirty vs 5.6 s
-    clean). After the blanket unpersist, operators/dedup's single-slot
-    persisted frames MUST be cleared too — they would otherwise hand the
-    next query an UNPERSISTED frame that recomputes once per consumer,
-    which is worse than rebuilding the cache. Failures are swallowed
+    clean). The engine keeps no materialized frame outside a query's own
+    lineage, so dropping the session's blocks is the whole reset: there
+    is no module state to clear alongside it. Failures are swallowed
     (printed, not raised): if one query broke the JVM/session, the
     cleanup must not also destroy the harness run that is collecting the
     remaining results.
@@ -90,12 +89,6 @@ def release_all_caches(spark: SparkSession) -> None:
         while it.hasNext():
             it.next().unpersist(False)
     except Exception as exc:  # noqa: BLE001 — harness hygiene, never fatal
-        print(f"release_all_caches: {type(exc).__name__}: {exc}", file=_sys.stderr)
-    try:
-        from funnel_report_etl_pipeline__spark.operators import dedup as _dedup
-
-        _dedup.reset_persisted_slots()
-    except Exception as exc:  # noqa: BLE001
         print(f"release_all_caches: {type(exc).__name__}: {exc}", file=_sys.stderr)
     try:
         # Round 15: explicit JVM GC as the LAST hygiene step, outside any

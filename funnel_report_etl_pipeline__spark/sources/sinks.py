@@ -1142,7 +1142,9 @@ def _manifest_rows(spark: SparkSession, table_dir: str) -> list:
     manifest surfaces as None (the round-10 mixed-table fail-open stays
     fixed), and rows come back as pyspark Rows so `r["v"]` /
     `r.__fields__` consumers are unchanged. Falls back to the Spark
-    reader off local filesystems."""
+    reader only when this environment cannot take the fast path (no
+    pyarrow, an OS-level read failure); a committed manifest directory
+    without data files is corruption and raises."""
     import glob as _glob
     import os as _os
 
@@ -1170,7 +1172,7 @@ def _manifest_rows(spark: SparkSession, table_dir: str) -> list:
                             fields.append(k)
         dicts.sort(key=lambda r: int(r["version"]))
         return [Row(**{k: r.get(k) for k in fields}) for r in dicts]
-    except Exception:  # noqa: BLE001 — non-local FS / unexpected layout
+    except (ImportError, OSError):  # no pyarrow / not a local filesystem
         return version_manifest(spark, table_dir).orderBy("version").collect()
 
 

@@ -145,7 +145,6 @@ _SLOW_PINNED = {
     "tests/test_versioned_v2.py::test_delete_then_readd_roundtrip",  # 7.1s
     "tests/test_registry_parity.py::test_query_matches_oracle[versioned_recommit_cdc_audit]",  # 7.0s
     "tests/test_registry_parity.py::test_query_matches_oracle[versioned_merge_audit]",  # 7.0s
-    "tests/test_dedup.py::test_persist_pairs_reused_by_identical_call",  # 7.0s
     "tests/test_dedup.py::test_fast_hash_family_same_verified_pairs",  # 7.0s
     "tests/test_similarity.py::test_pq_is_cluster_faithful_and_rerankable",  # 6.9s
     "tests/test_plan_shapes.py::test_windowed_query_shuffle_budget[versioned_span_feed]",  # 6.6s
@@ -173,7 +172,6 @@ _SLOW_PINNED = {
     "tests/test_versioned_v2.py::test_append_versioned_assembles_snapshots",  # 5.2s
     "tests/test_plan_shapes.py::test_windowed_query_shuffle_budget[versioned_timetravel_audit]",  # 5.2s
     "tests/test_versioned_r13.py::test_zorder_layout_clusters_at_compaction",  # 5.1s
-    "tests/test_dedup.py::test_persist_grams_keeps_single_live_cache",  # 5.1s
     "tests/test_corpus_refresh.py::test_second_run_writes_nothing_and_manifests_match",  # 5.1s
 }
 

@@ -161,42 +161,55 @@ def test_connected_components_raises_on_non_convergence(spark):
         connected_components(pairs, max_iter=2, driver_threshold=0)
 
 
-def test_persist_grams_keeps_single_live_cache(spark, docs):
-    from funnel_report_etl_pipeline__spark.operators import dedup as D
+def test_minhash_query_leaves_cache_manager_empty(spark):
+    """The registry's MinHash query materializes its grams with a
+    localCheckpoint inside its own lineage: nothing lands in the session's
+    CacheManager, so no later query's plan can pick up its subtree."""
+    from funnel_report_etl_pipeline__spark.plans.registry import load_all
 
-    D.minhash_dedup_pairs(docs, threshold=0.5, persist_grams=True).collect()
-    assert len(D._PERSISTED_GRAMS) == 1
-    k1 = D._PERSISTED_GRAMS[0][0]
-    D.minhash_dedup_pairs(docs, threshold=0.5, persist_grams=True).collect()
-    # identical call reuses the same cache entry (plan-hash match)
-    assert len(D._PERSISTED_GRAMS) == 1 and D._PERSISTED_GRAMS[0][0] == k1
-    D.minhash_dedup_pairs(docs.limit(3), threshold=0.5, persist_grams=True).collect()
-    # different input evicts the old cache and installs the new one
-    assert len(D._PERSISTED_GRAMS) == 1 and D._PERSISTED_GRAMS[0][0] != k1
+    from .conftest import SF_SMALL
+
+    spark.catalog.clearCache()
+    load_all()["dedup_minhash_lsh"].fn(spark, SF_SMALL).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_persist_pairs_reused_by_identical_call(spark, docs):
-    """persist_pairs caches the verified pair list (single slot) so a
-    downstream consumer with the same parameters — dedup_clusters after
-    dedup_minhash_lsh — starts from materialized pairs, and results are
-    identical to the uncached path."""
-    from funnel_report_etl_pipeline__spark.operators import dedup as D
+def _holds_frame(value) -> bool:
+    from pyspark.sql import DataFrame
 
-    plain = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in D.minhash_dedup_pairs(docs, threshold=0.5).collect()
-    }
-    cached1 = D.minhash_dedup_pairs(docs, threshold=0.5, persist_pairs=True)
-    assert {(r.id_a, r.id_b, r.jaccard) for r in cached1.collect()} == plain
-    assert len(D._PERSISTED_PAIRS) == 1
-    k1 = D._PERSISTED_PAIRS[0][0]
-    cached2 = D.minhash_dedup_pairs(docs, threshold=0.5, persist_pairs=True)
-    # identical call returns the SAME cached frame, no new slot
-    assert cached2 is cached1
-    assert len(D._PERSISTED_PAIRS) == 1 and D._PERSISTED_PAIRS[0][0] == k1
-    # different parameters evict and install a fresh pair cache
-    D.minhash_dedup_pairs(docs, threshold=0.9, persist_pairs=True).collect()
-    assert len(D._PERSISTED_PAIRS) == 1 and D._PERSISTED_PAIRS[0][0] != k1
+    if isinstance(value, DataFrame):
+        return True
+    if isinstance(value, dict):
+        value = [*value.keys(), *value.values()]
+    if isinstance(value, (list, tuple)):
+        return any(_holds_frame(v) for v in value)
+    return False
+
+
+def test_operators_hold_no_module_level_frames(spark):
+    """No operator module keeps a DataFrame at module level, directly or in
+    a list, tuple or dict — checked after the MinHash query ran, so a slot
+    an operator fills as a side effect would be populated here."""
+    import importlib
+    import pkgutil
+
+    from funnel_report_etl_pipeline__spark import operators
+    from funnel_report_etl_pipeline__spark.plans.registry import load_all
+
+    from .conftest import SF_SMALL
+
+    load_all()["dedup_minhash_lsh"].fn(spark, SF_SMALL).collect()
+    mods = [operators] + [
+        importlib.import_module(info.name)
+        for info in pkgutil.walk_packages(operators.__path__, operators.__name__ + ".")
+    ]
+    held = [
+        f"{m.__name__}.{k}"
+        for m in mods
+        for k, v in vars(m).items()
+        if not k.startswith("__") and _holds_frame(v)
+    ]
+    assert not held, held
 
 
 def test_gram_freq_cap_bounds_viral_passage(spark):

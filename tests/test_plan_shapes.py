@@ -180,13 +180,10 @@ WINDOW_SHUFFLE_BUDGET = {
     "partial_final_agg": 2, "stage_totals": 0, "union_all_days": 1,
     "conditional_sum": 0, "scalar_crossjoin": 0, "pct_bround": 1,
     "funnel_waterfall": 0,
-    # pipeline core; scan-speed ops must never shuffle
-    # the minhash plan's exchange count swings with the single-slot gram
-    # cache (16 when the persisted frame is reused, more when the plan
-    # string inlines the cached subtree), so a numeric ceiling is
-    # order-dependent — None skips the count; the structural verify-shape
-    # test below covers it instead
-    "dedup_exact": 1, "ngram_jaccard_pairs": 4, "dedup_minhash_lsh": None,
+    # pipeline core; scan-speed ops must never shuffle. The minhash plan
+    # reads its localCheckpointed gram frame; its 4 are per-doc aggregates
+    # over that frame (signatures, verify gram sets)
+    "dedup_exact": 1, "ngram_jaccard_pairs": 4, "dedup_minhash_lsh": 4,
     "dedup_simhash": 2, "text_quality": 0, "corpus_curation": 2,
     "similarity_topk_brute": 1, "similarity_ann_lsh": 3,
     "dedup_embedding_cosine": 0, "multimodal_meta": 0,
@@ -230,11 +227,10 @@ WINDOW_SHUFFLE_BUDGET = {
     # relational headliners
     "pricing_summary": 1, "join_equi": 1, "asof_join_events": 1,
     # round-7 window rotations: the 22 first-external-row queries. The
-    # fast-minhash plan shares dedup_minhash_lsh's single-slot gram cache,
-    # so its exchange count is cache-state-dependent (None = structural
-    # coverage only, same as the sibling). The kmeans trio re-plan from
-    # localCheckpointed assignment frames — counts are stable in-session.
-    "similarity_ann_ivf": 3, "dedup_minhash_fast": None,
+    # fast-minhash plan is dedup_minhash_lsh's shape with another hash
+    # family. The kmeans trio re-plan from localCheckpointed assignment
+    # frames — counts are stable in-session.
+    "similarity_ann_ivf": 3, "dedup_minhash_fast": 4,
     "bigram_lm_support": 3, "balanced_source_sample": 2,
     "length_buckets": 1, "price_histogram": 1,
     "winnow_containment_pairs": 6, "boilerplate_passages": 2,
@@ -259,9 +255,8 @@ WINDOW_SHUFFLE_BUDGET = {
     # round-8 window: the r7 TPC-H batch (each exactly its fact shuffles —
     # Q14/Q19 shapes and the capped RRF are map-side / TakeOrdered only),
     # the r8 additions, and the r2/r4-era fillers rotated back in.
-    # minhash_band_skew shares dedup_minhash_lsh's gram subtree, so cache
-    # substitution makes a numeric count order-dependent (None — covered
-    # structurally below, like the minhash siblings).
+    # minhash_band_skew builds its own gram -> signature chain (no
+    # checkpoint) plus the 8-row audit agg.
     "volume_shipping": 1, "returned_item_report": 1,
     "customer_order_distribution": 2, "promo_revenue_pct": 0,
     "large_volume_orders": 2, "lapsed_highvalue_customers": 2,
@@ -270,7 +265,7 @@ WINDOW_SHUFFLE_BUDGET = {
     "disjunctive_brand_revenue": 0, "sole_return_supplier": 2,
     "order_priority_return_check": 1, "sole_return_supplier_agg": 4,
     "chunk_documents": 0,
-    "embedding_drift_by_label": 4, "minhash_band_skew": None,
+    "embedding_drift_by_label": 4, "minhash_band_skew": 5,
     # round-8 late batch (TPC-H subquery shapes): Q2 = one fact agg + the
     # part-grain window repartition, every join broadcast; Q11 = nation
     # agg + the 1-row global re-agg; Q16 = the two-phase distinct agg;
@@ -279,9 +274,8 @@ WINDOW_SHUFFLE_BUDGET = {
     # carry a static hint)
     "min_cost_supplier": 2, "important_nation_value": 2,
     "supplier_part_variety": 2, "excess_shipment_suppliers": 5,
-    # shares the minhash gram subtree (cache-state-dependent count, like
-    # the dedup_minhash_* siblings) — structural coverage only
-    "minhash_jaccard_calibration": None,
+    # candidate join + per-(b, r) re-aggs over its own gram chain
+    "minhash_jaccard_calibration": 19,
     # privacy census: QI-grain agg + group-size-grain re-agg
     "k_anonymity_profile": 2,
     # Q6: all predicates pushed to the scan, map-side 1-row sum — the
@@ -376,13 +370,11 @@ WINDOW_SHUFFLE_BUDGET = {
     "modality_mixture_stats": 1,
     # round-9 second batch: user-keyed interval join + purchase-grain
     # window + view re-agg / doc-keyed position join + TakeOrdered / the
-    # cluster composition = pairs chain (cache-state-dependent like its
-    # dedup_minhash_* siblings would be, but the final label+quality
-    # frame plans stably at 3 here: CC label agg, quality join,
-    # component window)
+    # cluster composition plans from the checkpointed edge list at 3: CC
+    # label agg, quality join, component window
     "time_decay_attribution": 2,
     "phrase_proximity_search": 1,
-    "dedup_cluster_quality_canon": None,
+    "dedup_cluster_quality_canon": 3,
     # rank<=n rewrites to WindowGroupLimit: pre-limited rows through one
     # stratum exchange (structural assert below pins the group limit)
     "stratified_fixed_n_sample": 1,
@@ -543,8 +535,6 @@ def test_shuffle_budget_covers_whole_window():
 @pytest.mark.parametrize("name", sorted(WINDOW_SHUFFLE_BUDGET))
 def test_windowed_query_shuffle_budget(spark, name):
     budget = WINDOW_SHUFFLE_BUDGET[name]
-    if budget is None:
-        pytest.skip("cache-state-dependent plan; covered structurally")
     n = plan_of(spark, name).count("Exchange hashpartitioning")
     if budget == 0:
         assert n == 0, f"{name}: map-side-only query now shuffles ({n})"
@@ -733,9 +723,8 @@ def test_stratified_sample_uses_window_group_limit(spark):
 # so a refactor that adds an exchange surfaced only as an unexplained bench
 # delta a round later (the round-9 +80% minhash_band_skew flag cost a full
 # pinned-commit A/B to exonerate; this pin would have answered instantly).
-# Counts are measured with the dedup single-slot caches RESET (the minhash
-# chain's static plan otherwise depends on which sibling ran first) — that
-# is also why these queries' WINDOW_SHUFFLE_BUDGET entries are None.
+# Counts are measured after release_all_caches, so no block left by an
+# earlier test can stand in for a subtree of the plan.
 # exchanges/broadcast are exact pins of the reviewed shape, python must be
 # 0 (no Arrow hatch belongs on any of these chains), codegen is a floor.
 # ---------------------------------------------------------------------------
@@ -754,8 +743,8 @@ TOP_COST_PLAN_PINS = {
     "community_modularity":        (3,    4,     0),
     "semantic_dedup_clusters":     (2,    0,     0),
     "dedup_cluster_quality_canon": (3,    1,     0),  # CC label agg + quality join + window
-    "dedup_minhash_lsh":           (16,   7,     0),  # band self-join + verify chain
-    "dedup_minhash_fast":          (16,   7,     0),
+    "dedup_minhash_lsh":           (4,    3,     0),  # per-doc aggs over checkpointed grams
+    "dedup_minhash_fast":          (4,    3,     0),
     "dedup_clusters":              (2,    0,     0),
 }
 
@@ -766,9 +755,9 @@ def test_top_cost_query_plan_pins(spark, name):
 
     from funnel_report_etl_pipeline__spark.session import release_all_caches
 
-    # full cache hygiene, not just the slot lists: the session cache
-    # manager substitutes any registered cached subtree into new plans,
-    # so a stale persisted gram frame changes the static exchange count
+    # the session cache manager substitutes any registered cached subtree
+    # into new plans, so a frame another test persisted could change the
+    # static exchange count
     release_all_caches(spark)
     plan = plan_of(spark, name)
     exch = plan.count("Exchange hashpartitioning")

@@ -95,10 +95,10 @@ def test_demo_report_matches_reference_workbook(spark, tmp_path):
 
 @pytest.mark.skipif(not REFERENCE_XLSX.exists(), reason="reference artifact absent")
 def test_stdlib_xlsx_roundtrip_matches_reference_workbook(spark, tmp_path):
-    """The formatted Excel WRITER executes in-container (stdlib zip+xml
-    backend when xlsxwriter is absent) and its output, re-parsed with the
-    same stdlib reader, matches the reference's committed workbook cell
-    for cell — plus the exact same merged-cell ranges."""
+    """The formatted Excel WRITER (stdlib zip+xml backend) executes and
+    its output, re-parsed with the same stdlib reader, matches the
+    reference's committed workbook cell for cell — plus the exact same
+    merged-cell ranges."""
     from funnel_report_etl_pipeline__spark.cli import run
     from funnel_report_etl_pipeline__spark.config import EngineConfig
 
@@ -125,10 +125,8 @@ def test_stdlib_xlsx_writer_is_deterministic(tmp_path):
     """Byte-identical output for identical tables (fixed zip timestamps,
     first-use shared-string interning) — the single-day == degenerate-range
     guarantee the CSV twin gives must hold for the xlsx twin too."""
-    from funnel_report_etl_pipeline__spark.report import HAS_XLSX, write_funnel_excel
+    from funnel_report_etl_pipeline__spark.report import write_funnel_excel
 
-    if HAS_XLSX:
-        pytest.skip("xlsxwriter present; stdlib backend not in play")
     table = [[f"r{r}c{c}" if c else r * 10 for c in range(7)] for r in range(24)]
     a, b = tmp_path / "a.xlsx", tmp_path / "b.xlsx"
     write_funnel_excel(table, str(a))

@@ -252,6 +252,39 @@ def test_manifest_rows_pyarrow_fast_path_matches_spark_reader(spark, tmp_path):
             assert fr[k] == sr[k], f"field {k}: {fr[k]!r} != {sr[k]!r}"
 
 
+def test_manifest_rows_raises_on_manifest_dir_without_data(spark, tmp_path):
+    """A committed version whose manifest directory lost its part files is
+    corruption: the commit-log read and the snapshot read raise instead of
+    silently serving the previous version."""
+    from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
+        append_versioned,
+        read_versioned,
+        table_versions,
+        write_versioned,
+    )
+
+    t = str(tmp_path / "mtbl")
+    df = spark.range(20).selectExpr("id AS doc_id", "CAST(id AS STRING) AS text")
+    write_versioned(df, t, id_col="doc_id")
+    append_versioned(
+        spark.range(20, 25).selectExpr("id AS doc_id", "CAST(id AS STRING) AS text"),
+        t,
+        id_col="doc_id",
+    )
+    vs = table_versions(spark, t)
+    assert len(vs) == 2
+    mdir = os.path.join(t, "_versions", f"{vs[-1]}.parquet")
+    for name in os.listdir(mdir):
+        if name.endswith(".parquet"):
+            os.remove(os.path.join(mdir, name))
+    assert table_versions(spark, t) == vs
+    with pytest.raises(RuntimeError, match="manifest dir without data files"):
+        _manifest_rows(spark, t)
+    with pytest.raises(RuntimeError, match="manifest dir without data files"):
+        read_versioned(spark, t)
+
+
 def test_pinned_schema_scan_declines_on_evolved_chain(spark, tmp_path):
     """Round-15: the footer-pinned multi-dir scan only fires when every
     directory's footer schema is identical; a schema-evolved delta chain

@@ -21,9 +21,8 @@ Protocol (matches the round-7/8/9 recorded runs):
   adjacent pairs (0 vs 1, and 2 vs 3).
 * Per query per phase: one untimed warm-up, then ``--runs`` timed
   ``collect()``s; report median and min.
-* ``release_all_caches``-equivalent hygiene between queries, executed
-  against whichever tree's modules are active (the dedup single-slot
-  reset must hit the ACTIVE tree's module object, not HEAD's).
+* ``release_all_caches``-equivalent hygiene between queries: every
+  cached and checkpointed block of the session is dropped.
 
 Tree switching is done in-process: purge every
 ``funnel_report_etl_pipeline__spark*`` module from ``sys.modules`` and
@@ -56,20 +55,13 @@ def activate_tree(root: str):
 
 
 def release(spark) -> None:
-    """Cross-tree cache hygiene: blanket unpersist + the ACTIVE tree's
-    dedup single-slot reset (resolved via sys.modules, so it hits the
-    module object the current phase's queries actually use)."""
+    """Cross-tree cache hygiene: blanket unpersist of the session's
+    cached and checkpointed blocks."""
     try:
         spark.catalog.clearCache()
         it = spark._jsparkSession.sparkContext().getPersistentRDDs().valuesIterator()
         while it.hasNext():
             it.next().unpersist(False)
-    except Exception as exc:  # noqa: BLE001
-        print(f"release: {type(exc).__name__}: {exc}", file=sys.stderr)
-    try:
-        dedup = sys.modules.get("funnel_report_etl_pipeline__spark.operators.dedup")
-        if dedup is not None and hasattr(dedup, "reset_persisted_slots"):
-            dedup.reset_persisted_slots()
     except Exception as exc:  # noqa: BLE001
         print(f"release: {type(exc).__name__}: {exc}", file=sys.stderr)
 

@@ -83,10 +83,7 @@ def _docs(spark, n: int, parts: int = 32):
 def probe_minhash_incremental(spark, mult: int) -> dict:
     base = 20_000 * mult
     docs = _docs(spark, base + 1_000)
-    from funnel_report_etl_pipeline__spark.operators.dedup import (
-        minhash_dedup_pairs,
-        reset_persisted_slots,
-    )
+    from funnel_report_etl_pipeline__spark.operators.dedup import minhash_dedup_pairs
     from funnel_report_etl_pipeline__spark.operators.dedup_index import (
         ensure_minhash_index_versioned,
         minhash_pairs_prebuilt,
@@ -104,13 +101,11 @@ def probe_minhash_incremental(spark, mult: int) -> dict:
         n_pairs = minhash_pairs_prebuilt(spark, ix).count()
         inc_wall = time.monotonic() - t0
         assert m["maintenance"] == "incremental", m["maintenance"]
-        reset_persisted_slots()
         t0 = time.monotonic()
         n_full = minhash_dedup_pairs(
             read_versioned(spark, t), max_gram_freq=None
         ).count()
         full_wall = time.monotonic() - t0
-        reset_persisted_slots()
         assert n_pairs == n_full, (n_pairs, n_full)
         return {
             "probe": "minhash_incremental",

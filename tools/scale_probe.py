@@ -132,10 +132,7 @@ def main() -> int:
         n = docs.count()
 
         t0 = time.perf_counter()
-        # persist_grams matches the registered query (the gram frame feeds
-        # both the signature and verify passes; recomputing it was half the
-        # old probe's run-to-run variance)
-        n_pairs = minhash_dedup_pairs(docs, threshold=0.8, persist_grams=True).count()
+        n_pairs = minhash_dedup_pairs(docs, threshold=0.8).count()
         t_minhash = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
@@ -143,9 +140,7 @@ def main() -> int:
         t_curation = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
-        pairs = minhash_dedup_pairs(docs, threshold=0.8, persist_grams=True).select(
-            "id_a", "id_b"
-        )
+        pairs = minhash_dedup_pairs(docs, threshold=0.8).select("id_a", "id_b")
         n_clustered = dedup_assign_clusters(docs, pairs).filter(
             ~F.col("is_canonical")
         ).count()

@@ -50,7 +50,7 @@ def main() -> int:
         except Exception as exc:  # keep sweeping; report at the end
             results[name] = f"ERR {type(exc).__name__}: {exc}"
         # between-queries hygiene (shared with bench.py): drop persisted
-        # blocks + reset dedup's single-slot frames, failure-isolated
+        # and checkpointed blocks, failure-isolated
         release_all_caches(spark)
 
     errs = {k: v for k, v in results.items() if isinstance(v, str)}
