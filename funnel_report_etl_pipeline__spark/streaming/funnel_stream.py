@@ -574,8 +574,10 @@ def read_version_commits(spark: SparkSession, table_dir: str) -> DataFrame:
     is discovered on the next trigger, and the file-source checkpoint
     remembers which manifests were already processed, so a restarted
     consumer resumes from the exact commit where it left off. Orphaned
-    CAS attempts (`.tmp.*` directories) are invisible: the file source
-    skips dot-prefixed path components during listing."""
+    CAS attempts (`.tmp.*` directories) are invisible: the glob matches
+    only digit-named manifest directories. (Hadoop's `*` also matches
+    dot-prefixed names, so `*.parquet` read a losing or crashed
+    attempt's part file as a commit.)"""
     from funnel_report_etl_pipeline__spark.sources.sinks import (
         _MANIFEST_BASE_SCHEMA,
     )
@@ -583,7 +585,7 @@ def read_version_commits(spark: SparkSession, table_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(_MANIFEST_BASE_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(f"{table_dir}/_versions/*.parquet")
+        .parquet(f"{table_dir}/_versions/[0-9]*.parquet")
     )
 
 

@@ -325,3 +325,262 @@ def test_pinned_schema_scan_declines_on_evolved_chain(spark, tmp_path):
     assert "extra" in got.columns
     rows = {r["doc_id"]: r["extra"] for r in got.collect()}
     assert rows[3] is None and rows[12] == 24
+
+
+def _rewrite_manifest_with_spark(spark, mdir):
+    """Replace a committed manifest directory's contents with what the
+    Spark writer (the manifest writer before commits were written
+    locally) produced for the same row: createDataFrame + coalesce(1) +
+    write.parquet, types from the DDL schema the writer used."""
+    import shutil
+
+    from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _MANIFEST_BASE_SCHEMA,
+        _read_manifest_dir,
+    )
+
+    (row,) = _read_manifest_dir(mdir)
+    base = [f.split()[0] for f in _MANIFEST_BASE_SCHEMA.split(",")]
+    extra = [k for k in row if k not in base]
+    schema = _MANIFEST_BASE_SCHEMA + "".join(f", {k} long" for k in extra)
+    tmp = mdir + ".spark"
+    spark.createDataFrame([tuple(row.values())], schema).coalesce(1).write.parquet(tmp)
+    shutil.rmtree(mdir)
+    os.rename(tmp, mdir)
+
+
+def _is_spark_written(mdir) -> bool:
+    """Spark's writer stores its schema in the footer; pyarrow does not."""
+    import pyarrow.parquet as pq
+
+    from funnel_report_etl_pipeline__spark.sources.sinks import _SPARK_ROW_METADATA
+
+    (f,) = [f for f in os.listdir(mdir) if f.endswith(".parquet")]
+    return _SPARK_ROW_METADATA in (pq.read_schema(os.path.join(mdir, f)).metadata or {})
+
+
+def test_mixed_spark_and_local_manifests_read_identically(spark, tmp_path):
+    """A table whose early manifests were written by Spark and whose later
+    ones were written locally reads the same through the local commit-log
+    reader, the Spark `version_manifest` reader and batch-id time travel."""
+    from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
+        append_versioned,
+        merge_versioned,
+        read_versioned,
+        read_versioned_as_of_batch,
+        table_versions,
+        version_manifest,
+        write_versioned,
+    )
+
+    t = str(tmp_path / "mixed")
+    docs = spark.range(30).selectExpr("id AS doc_id", "CAST(id AS STRING) AS text")
+    write_versioned(docs.filter("doc_id < 20"), t, id_col="doc_id", batch_id=10)
+    append_versioned(docs.filter("doc_id >= 20"), t, id_col="doc_id", batch_id=11)
+    for v in (1, 2):
+        _rewrite_manifest_with_spark(spark, os.path.join(t, "_versions", f"{v}.parquet"))
+    # later commits build on the Spark-written predecessors
+    merge_versioned(
+        spark, t,
+        spark.range(25, 35).selectExpr("id AS doc_id", "'m' AS text"),
+        "doc_id", batch_id=12,
+    )
+    append_versioned(
+        spark.range(40, 42).selectExpr("id AS doc_id", "'a' AS text"),
+        t, id_col="doc_id", batch_id=13,
+    )
+    vs = table_versions(spark, t)
+    assert vs == [1, 2, 3, 4]
+    written_by_spark = [
+        _is_spark_written(os.path.join(t, "_versions", f"{v}.parquet")) for v in vs
+    ]
+    assert written_by_spark == [True, True, False, False]
+
+    local = _manifest_rows(spark, t)
+    remote = version_manifest(spark, t).orderBy("version").collect()
+    assert [r.asDict() for r in local] == [r.asDict() for r in remote]
+    assert [r["batch_id"] for r in local] == [10, 11, 12, 13]
+    assert [r["n_rows"] for r in local] == [20, 30, 35, 37]
+    # commit_ts stays strictly increasing across the writer change
+    ts = [r["commit_ts"] for r in local]
+    assert all(a < b for a, b in zip(ts, ts[1:]))
+    for bid, v in zip((10, 11, 12, 13), vs):
+        got = sorted(tuple(r) for r in read_versioned_as_of_batch(spark, t, bid).collect())
+        assert got == sorted(tuple(r) for r in read_versioned(spark, t, v).collect())
+    head = {r["doc_id"]: r["text"] for r in read_versioned(spark, t).collect()}
+    assert len(head) == 37 and head[27] == "m" and head[5] == "5" and head[41] == "a"
+
+
+def test_local_manifest_schema_and_null_round_trip(spark, tmp_path):
+    """A locally written manifest has the Spark writer's column names,
+    order and types (`_MANIFEST_BASE_SCHEMA` then the `extra` longs), and
+    NULL batch_id / tomb_dir plus the extra column round-trip through
+    both manifest readers."""
+    import pyarrow.parquet as pq
+
+    from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
+        version_manifest,
+        write_versioned,
+    )
+
+    t = str(tmp_path / "nulls")
+    write_versioned(
+        spark.range(5).selectExpr("id AS doc_id"), t, id_col="doc_id",
+        extra={"n_src": 7},
+    )
+    mdir = os.path.join(t, "_versions", "1.parquet")
+    assert not _is_spark_written(mdir)
+    (part,) = [f for f in os.listdir(mdir) if f.endswith(".parquet")]
+    local_schema = pq.read_schema(os.path.join(mdir, part))
+
+    (row,) = _manifest_rows(spark, t)
+    assert row["batch_id"] is None and row["tomb_dir"] is None
+    assert row["n_src"] == 7 and row["n_rows"] == 5 and row["kind"] == "snapshot"
+    (srow,) = version_manifest(spark, t).collect()
+    assert srow.asDict() == row.asDict()
+    assert version_manifest(spark, t).schema.simpleString() == (
+        "struct<version:bigint,n_rows:bigint,content_checksum:bigint,"
+        "batch_id:bigint,kind:string,data_dir:string,n_delta:bigint,"
+        "tomb_dir:string,n_tomb:bigint,commit_ts:bigint,n_src:bigint>"
+    )
+    # the Spark writer's file for the same row has the same parquet schema
+    _rewrite_manifest_with_spark(spark, mdir)
+    (spart,) = [f for f in os.listdir(mdir) if f.endswith(".parquet")]
+    spark_schema = pq.read_schema(os.path.join(mdir, spart))
+    assert spark_schema.equals(local_schema)  # metadata is not compared
+    assert _manifest_rows(spark, t)[0].asDict() == row.asDict()
+
+
+def test_uncommitted_tmp_manifest_is_invisible(spark, tmp_path):
+    """A `.tmp.*` manifest attempt without `_SUCCESS` (a crash between the
+    part file and the marker) is invisible to `table_versions` and to the
+    streaming commit-log source."""
+    import pyarrow.parquet as pq
+
+    from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_table,
+        table_versions,
+        write_versioned,
+    )
+    from funnel_report_etl_pipeline__spark.streaming.funnel_stream import (
+        read_version_commits,
+    )
+
+    t = str(tmp_path / "crash")
+    write_versioned(spark.range(3).selectExpr("id AS doc_id"), t, id_col="doc_id")
+    tmp = os.path.join(t, "_versions", ".tmp.crashed.2.parquet")
+    os.makedirs(tmp)
+    pq.write_table(
+        _manifest_table([2, 3, 0, None, "delta", "d-x", 0, None, 0, 1], []),
+        os.path.join(tmp, "part-00000-x-c000.snappy.parquet"),
+    )
+    assert table_versions(spark, t) == [1]
+    q = (
+        read_version_commits(spark, t)
+        .writeStream.format("memory")
+        .queryName("uncommitted_tmp_manifest")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = [r["version"] for r in spark.table("uncommitted_tmp_manifest").collect()]
+    assert got == [1]
+
+
+def test_tombstone_joins_ignore_right_side_duplicates(spark, tmp_path):
+    """Neither tombstone join depends on right-side multiplicity: deleting
+    an id requested three times removes each live row once, and a
+    tombstone directory holding an id twice (a duplicate-id table) removes
+    exactly those rows."""
+    from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
+        delete_versioned,
+        read_versioned,
+        write_versioned,
+    )
+
+    t = str(tmp_path / "dups")
+    rows = [(1, "a"), (1, "b"), (2, "c"), (3, "d"), (4, "e")]
+    write_versioned(spark.createDataFrame(rows, "doc_id long, text string"), t, id_col="doc_id")
+    ids = spark.createDataFrame([(1,), (1,), (2,), (2,), (2,), (9,)], "doc_id long")
+    v = delete_versioned(spark, t, ids, "doc_id")
+    head = _manifest_rows(spark, t)[-1]
+    assert head["version"] == v and head["n_delta"] == 3 and head["n_rows"] == 2
+    tomb = spark.read.parquet(os.path.join(t, head["data_dir"]))
+    assert sorted(r["doc_id"] for r in tomb.collect()) == [1, 1, 2]
+    got = sorted(tuple(r) for r in read_versioned(spark, t).collect())
+    assert got == [(3, "d"), (4, "e")]
+
+
+def test_pinned_schema_scan_compares_every_part_file(spark, tmp_path):
+    """Part files of one directory whose footers differ (a column only in
+    the second file) make the pinned scan decline; pinning the first
+    file's schema would silently drop the column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from funnel_report_etl_pipeline__spark.sources.sinks import _pinned_schema_scan
+
+    d = tmp_path / "two_schemas"
+    d.mkdir()
+    pq.write_table(pa.table({"doc_id": [1, 2]}), str(d / "part-00000.parquet"))
+    pq.write_table(
+        pa.table({"doc_id": [3], "extra": ["x"]}), str(d / "part-00001.parquet")
+    )
+    assert _pinned_schema_scan(spark, [str(d)]) is None
+    same = tmp_path / "same_schema"
+    same.mkdir()
+    pq.write_table(pa.table({"doc_id": [1, 2]}), str(same / "part-00000.parquet"))
+    pq.write_table(pa.table({"doc_id": [3]}), str(same / "part-00001.parquet"))
+    pinned = _pinned_schema_scan(spark, [str(same)])
+    assert sorted(r["doc_id"] for r in pinned.collect()) == [1, 2, 3]
+
+
+def test_pinned_schema_scan_raises_on_corrupt_footer(spark, tmp_path):
+    """The pinned scan declines only for environment limits — here a
+    type Spark's arrow conversion does not support (uint64), which the
+    discovery reader then serves — and raises on a corrupt footer instead
+    of silently handing the directory to the slower reader."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from funnel_report_etl_pipeline__spark.sources.sinks import _pinned_schema_scan
+
+    unsupported = tmp_path / "uint64"
+    unsupported.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2], pa.uint64())}),
+        str(unsupported / "part-00000.parquet"),
+    )
+    assert _pinned_schema_scan(spark, [str(unsupported)]) is None
+    assert spark.read.parquet(str(unsupported)).count() == 2
+
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    pq.write_table(pa.table({"doc_id": [1]}), str(corrupt / "part-00000.parquet"))
+    (corrupt / "part-00001.parquet").write_bytes(b"not a parquet footer" * 4)
+    with pytest.raises(pa.ArrowInvalid):
+        _pinned_schema_scan(spark, [str(corrupt)])
+
+
+def test_pinned_read_keeps_the_types_discovery_reads(spark, tmp_path):
+    """The footer-pinned read of a Spark-written directory has the schema
+    Spark's own inference gives it: a TIMESTAMP_NTZ column stays
+    TIMESTAMP_NTZ (the arrow mapping alone made it TIMESTAMP)."""
+    from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
+        read_versioned,
+        write_versioned,
+    )
+
+    t = str(tmp_path / "ntz")
+    df = spark.sql(
+        "SELECT id AS doc_id, TIMESTAMP_NTZ'2024-01-01 10:00:00' AS ts FROM range(3)"
+    )
+    write_versioned(df, t, id_col="doc_id")
+    data_dir = os.path.join(t, _manifest_rows(spark, t)[0]["data_dir"])
+    assert read_versioned(spark, t).schema == spark.read.parquet(data_dir).schema
+    assert dict(read_versioned(spark, t).dtypes)["ts"] == "timestamp_ntz"
