@@ -1,7 +1,8 @@
 """Scalar/aggregate expression helpers shared across operators.
 
 All helpers return Column expressions built from `pyspark.sql.functions`
-only — JVM-side, codegen'd, no Python in the data path. They encode the
+only — JVM-side, codegen'd, no Python in the data path — or, for the
+``*_sql`` twins, the same expression as a Spark SQL string. They encode the
 reference's numeric parity pitfalls (SURVEY.md §7.3):
 
 * Python ``round`` is HALF_EVEN → Spark ``bround`` (not ``round``).
@@ -50,6 +51,16 @@ def pct_of(value: Column, total: Column) -> Column:
     banker's rounding → ``bround``)."""
     return F.when(total > 0, F.bround(value.cast("double") / total * 100, 1)).otherwise(
         F.lit(0.0)
+    )
+
+
+def pct_of_sql(value: str, total: str) -> str:
+    """SQL-string twin of ``pct_of`` for ``selectExpr`` / ``F.expr`` plans;
+    the same expression tree, so the same DOUBLE values. The else branch
+    is ``0.0D``: a bare ``0.0`` in Spark SQL is DECIMAL(1,1), not DOUBLE."""
+    return (
+        f"CASE WHEN ({total}) > 0 THEN bround(CAST({value} AS DOUBLE) / ({total}) * 100, 1)"
+        " ELSE 0.0D END"
     )
 
 

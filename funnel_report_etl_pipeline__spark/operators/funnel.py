@@ -96,23 +96,35 @@ def fi_status_counts(user_funnel: DataFrame, entity_id: str | None = None) -> Da
     )
 
 
-def _metrics_columns(pfx: str = "") -> list[Column]:
-    """Derived funnel scalars over the cross-joined wide aggregate row.
+def _metrics_columns() -> list[str]:
+    """Derived funnel scalars over the wide aggregate row, as 25 SQL
+    expression strings (``expr AS name``) for one ``selectExpr``.
 
     Implements the reference waterfall (report_engine.py:239-291)
     faithfully, including its intentional asymmetries (SURVEY.md §2.9):
     discovery dropoff comes from the discovery dataset while the Discovery
     STAGE column still feeds total_users; otp_ok_drop may be negative.
+
+    Strings, not Column calls: under PySpark 4 every Column method or
+    ``F.col`` call costs ~10 py4j round trips, and as Column calls these
+    25 expressions cost more than a thousand per build. Every
+    sub-expression is parenthesised and sums fold left, so the analysed
+    plan is the one the Column form builds (same association order, hence
+    the same ANSI overflow behaviour).
     """
-    col = F.col
-    lng = lambda c: F.coalesce(col(c).try_cast("long"), F.lit(0))  # noqa: E731
+
+    def lng(c: str) -> str:
+        return f"coalesce(try_cast({c} AS BIGINT), 0)"
+
+    def add(*terms: str) -> str:
+        return functools.reduce(lambda a, b: f"({a} + {b})", terms)
 
     d1 = lng("AA_client_Initialization")
     d2 = lng("OTP_Based_Sign_in_Sign_up")
     view_drop = lng("View_Consent_Details")
-    auth_drop = d2 + view_drop
+    auth_drop = add(d2, view_drop)
     disc_vals = {c: lng(c + "_disc") for c in DISCOVERY_COLUMNS}
-    d3 = sum(disc_vals.values(), F.lit(0))
+    d3 = add("0", *disc_vals.values())
     d4 = lng("Linking")
     rej = lng("Rejected_Consent_Requests")
     appr = lng("Approved_Consent_Requests")
@@ -121,25 +133,25 @@ def _metrics_columns(pfx: str = "") -> list[Column]:
     fetch_ok = lng("Data_Fetch_Success")
     not_attempted = lng("Data_Fetch_Not_Attempted")
 
-    total_users = d1 + d2 + view_drop + lng("Discovery") + d4 + rej + appr
+    total_users = add(d1, d2, view_drop, lng("Discovery"), d4, rej, appr)
 
     n_consent = total_users
-    n_after_init = n_consent - d1
-    n_after_auth = n_after_init - auth_drop
-    n_after_disc = n_after_auth - d3
-    n_after_link = n_after_disc - d4
+    n_after_init = f"({n_consent} - {d1})"
+    n_after_auth = f"({n_after_init} - {auth_drop})"
+    n_after_disc = f"({n_after_auth} - {d3})"
+    n_after_link = f"({n_after_disc} - {d4})"
 
-    fi_req_ok = lng("fi_success") + lng("fi_failed")
-    fi_fetch_drop = fi_req_ok - fetch_ok
+    fi_req_ok = add(lng("fi_success"), lng("fi_failed"))
+    fi_fetch_drop = f"({fi_req_ok} - {fetch_ok})"
 
     otp_wrong = lng("Total_Incorrect_OTP_Entered")
     otp_miss = lng("Total_OTP_Not_Entered")
-    otp_ok_drop = d2 - (otp_wrong + otp_miss) + view_drop  # may be negative
+    otp_ok_drop = add(f"({d2} - {add(otp_wrong, otp_miss)})", view_drop)  # may be negative
 
     no_rec = disc_vals["Account_not_Found"]
     fip_fail = disc_vals["NO_STATUS"]
     some_fail = disc_vals["Failure"]
-    found_not_linked = disc_vals["Account_Discovered"] + disc_vals["FIP_Not_Selected"]
+    found_not_linked = add(disc_vals["Account_Discovered"], disc_vals["FIP_Not_Selected"])
 
     named = {
         "total_users": total_users,
@@ -168,7 +180,12 @@ def _metrics_columns(pfx: str = "") -> list[Column]:
         "n_after_disc": n_after_disc,
         "n_after_link": n_after_link,
     }
-    return [v.alias(pfx + k) for k, v in named.items()]
+    return [f"{v} AS {k}" for k, v in named.items()]
+
+
+def _metrics_select(df: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns plus the 25 waterfall scalars, in one call."""
+    return df.selectExpr(*keep, *_metrics_columns())
 
 
 def funnel_metrics(
@@ -201,7 +218,7 @@ def funnel_metrics(
         .crossJoin(F.broadcast(disc_renamed))
         .crossJoin(F.broadcast(fi_row))
     )
-    return wide.select(*_metrics_columns())
+    return _metrics_select(wide)
 
 
 def entity_funnel_metrics(
@@ -223,8 +240,10 @@ def entity_funnel_metrics(
     # SQL expression strings, not Column calls: under PySpark 4 every Column
     # method or F.col call costs ~10 py4j round trips, and this plan is built
     # for every report; selectExpr ships a whole projection in one call. The
-    # stage cast pair is trunc_long; the other projections are the per-row
-    # halves of otp_totals, discovery_totals and fi_status_counts.
+    # projections, the aggregate and the waterfall (_metrics_columns) are all
+    # strings, so one build is ~180 round trips.
+    # The stage cast pair is trunc_long; the other projections are the
+    # per-row halves of otp_totals, discovery_totals and fi_status_counts.
     parts = [
         uf_stages.selectExpr(
             "Entity_ID AS entity_id",
@@ -256,7 +275,7 @@ def entity_funnel_metrics(
         *[F.expr(f"if(entity_id IS NULL, NULL, count({c})) AS {c}")
           for c in ("fi_success", "fi_failed")],
     )
-    return totals.select("entity_id", *_metrics_columns())
+    return _metrics_select(totals, "entity_id")
 
 
 # --------------------------------------------------------------------------

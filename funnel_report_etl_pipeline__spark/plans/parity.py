@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from funnel_report_etl_pipeline__spark.functions.core import dsum, pct_of
+from funnel_report_etl_pipeline__spark.functions.core import dsum, pct_of, pct_of_sql
 from funnel_report_etl_pipeline__spark.plans.registry import register
 from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
@@ -449,28 +449,20 @@ def pct_bround(spark: SparkSession, sf_dir: str) -> DataFrame:
 def funnel_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference waterfall shape: conditional stage counts → one wide row →
     successive subtraction (M2, may go negative) → guarded HALF_EVEN pct."""
-    ev = _t(spark, sf_dir, "events")
-
-    def cnt(t: str):
-        return F.count(F.when(F.col("event_type") == t, 1))
-
-    tot = ev.agg(
-        cnt("signup").alias("n_signup"),
-        cnt("view").alias("n_view"),
-        cnt("click").alias("n_click"),
-        cnt("purchase").alias("n_purchase"),
-        cnt("error").alias("n_error"),
+    # SQL expression strings: each Column call costs ~10 py4j round trips
+    # under PySpark 4, a whole selectExpr about one. Sums and differences
+    # keep the Column form's left-to-right association.
+    stages = ("signup", "view", "click", "purchase", "error")
+    tot = _t(spark, sf_dir, "events").selectExpr(
+        *[f"count(CASE WHEN event_type = '{t}' THEN 1 END) AS n_{t}" for t in stages]
     )
-    c = F.col
-    total = c("n_signup") + c("n_view") + c("n_click") + c("n_purchase") + c("n_error")
-    return tot.select(
-        total.alias("total_users"),
-        (total - c("n_error")).alias("after_error"),
-        (c("n_signup") + c("n_view") + c("n_click") + c("n_purchase") - c("n_view")).alias(
-            "after_view"
-        ),
-        (c("n_signup") + c("n_click") + c("n_purchase") - c("n_click")).alias("after_click"),
-        (c("n_signup") + c("n_purchase") - c("n_signup")).alias("after_signup"),
-        (c("n_purchase") - (c("n_error") + c("n_view")) + c("n_click")).alias("net_engaged"),
-        pct_of(c("n_purchase"), total).alias("pct_purchased"),
+    total = "n_signup + n_view + n_click + n_purchase + n_error"
+    return tot.selectExpr(
+        f"{total} AS total_users",
+        f"({total}) - n_error AS after_error",
+        "n_signup + n_view + n_click + n_purchase - n_view AS after_view",
+        "n_signup + n_click + n_purchase - n_click AS after_click",
+        "n_signup + n_purchase - n_signup AS after_signup",
+        "n_purchase - (n_error + n_view) + n_click AS net_engaged",
+        f"{pct_of_sql('n_purchase', total)} AS pct_purchased",
     )

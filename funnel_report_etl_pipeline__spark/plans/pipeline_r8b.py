@@ -40,6 +40,7 @@ from funnel_report_etl_pipeline__spark.functions.core import dsum
 from funnel_report_etl_pipeline__spark.functions.hints import maybe_broadcast
 from funnel_report_etl_pipeline__spark.operators.dedup import gram_rows
 from funnel_report_etl_pipeline__spark.plans.registry import register
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -759,19 +760,25 @@ def event_path_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans as TakeOrderedAndProject over the path-grain frame. At
     100 TB: one user-grain shuffle, one ≤|event_type|³-grain aggregate.
     """
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    r = ev.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)
-    p = r.groupBy("user_id").agg(
-        *[
-            F.max(F.when(F.col("rn") == i, F.col("event_type"))).alias(f"e{i}")
-            for i in (1, 2, 3)
-        ]
+    # events through the shared catalog (no schema-inference job per
+    # build) and SQL strings, not Column calls (~10 py4j round trips each)
+    r = (
+        catalog_table(spark, sf_dir, "events")
+        .selectExpr(
+            "user_id",
+            "event_type",
+            "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn",
+        )
+        .where("rn <= 3")
     )
-    c = p.groupBy(
-        F.concat_ws(">", "e1", "e2", "e3").alias("path")
-    ).agg(F.count("*").cast("long").alias("n_users"))
-    return c.orderBy(F.col("n_users").desc(), "path").limit(10)
+    p = r.groupBy("user_id").agg(
+        *[F.expr(f"max(CASE WHEN rn = {i} THEN event_type END) AS e{i}") for i in (1, 2, 3)]
+    )
+    c = p.groupBy(F.expr("concat_ws('>', e1, e2, e3) AS path")).agg(
+        F.expr("count(*) AS n_users")
+    )
+    # F.desc, not F.expr("n_users DESC"): the string parses as an alias
+    return c.orderBy(F.desc("n_users"), "path").limit(10)
 
 
 # ---------------------------------------------------------------------------

@@ -312,6 +312,14 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# Each user's (micros, event_type) pairs in time order, for the funnel folds.
+# The two event-funnel builders are SQL strings, not Column calls: under
+# PySpark 4 each Column call costs ~10 py4j round trips, a selectExpr or
+# F.expr one to three, and the analysed plans are the ones the Column
+# forms build.
+_EVENT_TIMELINE = "array_sort(collect_list(struct(unix_micros(ts) AS us, event_type AS et)))"
+
+
 @register(
     "event_funnel_users",
     oracle="""
@@ -344,38 +352,28 @@ def event_funnel_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins over the event table — at 100 TB the join-chain formulation
     (the DuckDB oracle) would shuffle the fact table three times; this
     shuffles it once."""
-    ev = _t(spark, sf_dir, "events")
-    stages = ["signup", "view", "purchase"]
-    timeline = F.array_sort(
-        F.collect_list(
-            F.struct(F.unix_micros("ts").alias("us"), F.col("event_type").alias("et"))
-        )
-    )
     # walk the sorted timeline: state = (furthest stage index 0..3, ts of
     # the last advance). The strictly-greater guard matches the oracle's
     # `e.ts > t_prev` — an event tied with the previous stage's timestamp
-    # must NOT advance the funnel.
-    init = F.struct(F.lit(0).alias("d"), F.lit(-1).cast("long").alias("last"))
-    depth = F.aggregate(
-        timeline,
-        init,
-        lambda acc, x: F.when(
-            # try_element_at: once all stages are reached d+1 is past the
-            # end; NULL compares false and the state passes through
-            (x["et"] == F.try_element_at(F.lit(stages), acc["d"] + 1))
-            & (x["us"] > acc["last"]),
-            F.struct((acc["d"] + 1).alias("d"), x["us"].alias("last")),
-        ).otherwise(acc),
-    )["d"]
+    # must NOT advance the funnel. try_element_at: once all stages are
+    # reached d+1 is past the end; NULL compares false and the state
+    # passes through.
+    depth = f"""aggregate({_EVENT_TIMELINE}, struct(0 AS d, CAST(-1 AS BIGINT) AS last),
+        (acc, x) -> CASE
+          WHEN x.et = try_element_at(array('signup', 'view', 'purchase'), acc.d + 1)
+               AND x.us > acc.last
+          THEN struct(acc.d + 1 AS d, x.us AS last)
+          ELSE acc END).d AS depth"""
     per_user = (
-        ev.filter(F.col("event_type").isin(*stages))
+        _t(spark, sf_dir, "events")
+        .where("event_type IN ('signup', 'view', 'purchase')")
         .groupBy("user_id")
-        .agg(depth.alias("depth"))
+        .agg(F.expr(depth))
     )
-    return per_user.agg(
-        F.count(F.when(F.col("depth") >= 1, 1)).alias("n_signup"),
-        F.count(F.when(F.col("depth") >= 2, 1)).alias("n_signup_view"),
-        F.count(F.when(F.col("depth") >= 3, 1)).alias("n_signup_view_purchase"),
+    return per_user.selectExpr(
+        "count(CASE WHEN depth >= 1 THEN 1 END) AS n_signup",
+        "count(CASE WHEN depth >= 2 THEN 1 END) AS n_signup_view",
+        "count(CASE WHEN depth >= 3 THEN 1 END) AS n_signup_view_purchase",
     )
 
 
@@ -659,46 +657,25 @@ def event_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     collects the timeline; a state-machine fold ((t1,t2,t3) micros struct)
     walks it. The oracle's join-chain re-shuffles events three times."""
     window_us = 7 * 24 * 3600 * 1_000_000
-    ev = _t(spark, sf_dir, "events")
-    timeline = F.array_sort(
-        F.collect_list(
-            F.struct(F.unix_micros("ts").alias("us"), F.col("event_type").alias("et"))
-        )
-    )
-    NULL_ = F.lit(None).cast("long")
-    init = F.struct(NULL_.alias("t1"), NULL_.alias("t2"), NULL_.alias("t3"))
-
-    def step(acc, x):
-        t1, t2, t3 = acc["t1"], acc["t2"], acc["t3"]
-        new_t1 = F.when(t1.isNull() & (x["et"] == "signup"), x["us"]).otherwise(t1)
-        new_t2 = F.when(
-            t2.isNull()
-            & t1.isNotNull()
-            & (x["et"] == "view")
-            & (x["us"] > t1)
-            & (x["us"] <= t1 + window_us),
-            x["us"],
-        ).otherwise(t2)
-        new_t3 = F.when(
-            t3.isNull()
-            & t2.isNotNull()
-            & t1.isNotNull()
-            & (x["et"] == "purchase")
-            & (x["us"] > t2)
-            & (x["us"] <= t1 + window_us),
-            x["us"],
-        ).otherwise(t3)
-        return F.struct(new_t1.alias("t1"), new_t2.alias("t2"), new_t3.alias("t3"))
-
+    step = f"""(acc, x) -> struct(
+        CASE WHEN acc.t1 IS NULL AND x.et = 'signup' THEN x.us ELSE acc.t1 END AS t1,
+        CASE WHEN acc.t2 IS NULL AND acc.t1 IS NOT NULL AND x.et = 'view'
+                  AND x.us > acc.t1 AND x.us <= acc.t1 + {window_us}
+             THEN x.us ELSE acc.t2 END AS t2,
+        CASE WHEN acc.t3 IS NULL AND acc.t2 IS NOT NULL AND acc.t1 IS NOT NULL
+                  AND x.et = 'purchase' AND x.us > acc.t2 AND x.us <= acc.t1 + {window_us}
+             THEN x.us ELSE acc.t3 END AS t3)"""
+    init = ", ".join(f"CAST(NULL AS BIGINT) AS t{i}" for i in (1, 2, 3))
     per_user = (
-        ev.filter(F.col("event_type").isin("signup", "view", "purchase"))
+        _t(spark, sf_dir, "events")
+        .where("event_type IN ('signup', 'view', 'purchase')")
         .groupBy("user_id")
-        .agg(F.aggregate(timeline, init, step).alias("s"))
+        .agg(F.expr(f"aggregate({_EVENT_TIMELINE}, struct({init}), {step}) AS s"))
     )
-    return per_user.agg(
-        F.count(F.when(F.col("s.t1").isNotNull(), 1)).alias("n_signup"),
-        F.count(F.when(F.col("s.t2").isNotNull(), 1)).alias("n_view_7d"),
-        F.count(F.when(F.col("s.t3").isNotNull(), 1)).alias("n_purchase_7d"),
+    return per_user.selectExpr(
+        "count(CASE WHEN s.t1 IS NOT NULL THEN 1 END) AS n_signup",
+        "count(CASE WHEN s.t2 IS NOT NULL THEN 1 END) AS n_view_7d",
+        "count(CASE WHEN s.t3 IS NOT NULL THEN 1 END) AS n_purchase_7d",
     )
 
 

@@ -120,8 +120,9 @@ def _filesystem(spark: SparkSession, paths: list[str]) -> tuple:
     Hadoop API, so HDFS/S3/GCS work as well as file:// (os.path.exists only
     sees the driver's local disk); every further path then costs one JVM
     round trip, not a ``getFileSystem`` lookup each."""
-    jvm = spark.sparkContext._jvm
-    path_cls = jvm.org.apache.hadoop.fs.Path
+    # one lookup by full name: the attribute chain jvm.org.apache... costs
+    # five round trips, four of them classpath misses that scan every jar
+    path_cls = getattr(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     return path_cls, path_cls(paths[0]).getFileSystem(hconf)
 

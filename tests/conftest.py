@@ -35,6 +35,30 @@ def spark():
     yield s
 
 
+def py4j_round_trips(spark, fn):
+    """Run ``fn()``; return (its result, the py4j commands it sent to the JVM).
+
+    Memory-delete detaches (commands starting ``m\nd\n``) are not counted:
+    Python's GC sends them whenever it frees a JVM reference, so their
+    number depends on GC timing, not on what ``fn`` does."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal sent
+        if not command.startswith("m\nd\n"):
+            sent += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        client.send_command = send
+    return out, sent
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

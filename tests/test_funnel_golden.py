@@ -142,6 +142,64 @@ def test_entity_only_in_otp_data_still_reported(spark):
 # --------------------------------------------------------------------------
 
 
+def _metrics_columns_reference():
+    """The Column-API form of ``funnel._metrics_columns`` that the SQL
+    strings replaced, kept as the reference they must match plan for plan."""
+    from pyspark.sql import functions as F
+
+    from funnel_report_etl_pipeline__spark.schemas import DISCOVERY_COLUMNS
+
+    col = F.col
+    lng = lambda c: F.coalesce(col(c).try_cast("long"), F.lit(0))  # noqa: E731
+
+    d1 = lng("AA_client_Initialization")
+    d2 = lng("OTP_Based_Sign_in_Sign_up")
+    view_drop = lng("View_Consent_Details")
+    auth_drop = d2 + view_drop
+    disc_vals = {c: lng(c + "_disc") for c in DISCOVERY_COLUMNS}
+    d3 = sum(disc_vals.values(), F.lit(0))
+    d4 = lng("Linking")
+    rej = lng("Rejected_Consent_Requests")
+    appr = lng("Approved_Consent_Requests")
+    total_users = d1 + d2 + view_drop + lng("Discovery") + d4 + rej + appr
+    n_after_init = total_users - d1
+    n_after_auth = n_after_init - auth_drop
+    n_after_disc = n_after_auth - d3
+    fi_req_ok = lng("fi_success") + lng("fi_failed")
+    fetch_ok = lng("Data_Fetch_Success")
+    otp_wrong = lng("Total_Incorrect_OTP_Entered")
+    otp_miss = lng("Total_OTP_Not_Entered")
+
+    named = {
+        "total_users": total_users,
+        "d1": d1,
+        "auth_drop": auth_drop,
+        "otp_wrong": otp_wrong,
+        "otp_miss": otp_miss,
+        "otp_ok_drop": d2 - (otp_wrong + otp_miss) + view_drop,
+        "d3": d3,
+        "no_rec": disc_vals["Account_not_Found"],
+        "fip_fail": disc_vals["NO_STATUS"],
+        "some_fail": disc_vals["Failure"],
+        "found_not_linked": disc_vals["Account_Discovered"] + disc_vals["FIP_Not_Selected"],
+        "d4": d4,
+        "rej": rej,
+        "appr": appr,
+        "fip_rej": lng("FIP_Rejected_Consent_Artefacts"),
+        "fip_ok": lng("FIP_Accepted_Consent_Artefacts"),
+        "fi_req_ok": fi_req_ok,
+        "not_attempted": lng("Data_Fetch_Not_Attempted"),
+        "fetch_ok": fetch_ok,
+        "fi_fetch_drop": fi_req_ok - fetch_ok,
+        "n_consent": total_users,
+        "n_after_init": n_after_init,
+        "n_after_auth": n_after_auth,
+        "n_after_disc": n_after_disc,
+        "n_after_link": n_after_disc - d4,
+    }
+    return [v.alias(k) for k, v in named.items()]
+
+
 def _spine_join_reference(uf_stages, otp_summary, discovery_summary, user_funnel):
     """The four-aggregate / distinct-union spine / four-left-join plan that
     ``entity_funnel_metrics`` replaced, kept as the reference it must
@@ -149,7 +207,6 @@ def _spine_join_reference(uf_stages, otp_summary, discovery_summary, user_funnel
     from pyspark.sql import functions as F
 
     from funnel_report_etl_pipeline__spark.functions.core import trunc_long
-    from funnel_report_etl_pipeline__spark.operators.funnel import _metrics_columns
     from funnel_report_etl_pipeline__spark.schemas import (
         DISCOVERY_COLUMNS,
         OTP_COLUMNS,
@@ -192,7 +249,7 @@ def _spine_join_reference(uf_stages, otp_summary, discovery_summary, user_funnel
         .join(dc, "entity_id", "left")
         .join(fi, "entity_id", "left")
     )
-    return wide.select("entity_id", *_metrics_columns())
+    return wide.select("entity_id", *_metrics_columns_reference())
 
 
 def _edge_frames(spark):
@@ -275,3 +332,56 @@ def test_entity_funnel_all_inputs_empty(spark):
     ours = entity_funnel_metrics(*frames)
     assert ours.collect() == []
     assert ours.schema == _spine_join_reference(*frames).schema
+
+
+def _column_built(monkeypatch, build, *args):
+    """``build(*args)`` with the waterfall projected by the Column-API
+    reference instead of the SQL strings; nothing else in the plan differs."""
+    from funnel_report_etl_pipeline__spark.operators import funnel
+
+    with monkeypatch.context() as m:
+        m.setattr(
+            funnel,
+            "_metrics_select",
+            lambda df, *keep: df.select(*keep, *_metrics_columns_reference()),
+        )
+        return build(*args)
+
+
+def test_entity_funnel_sql_strings_match_column_plan(spark, monkeypatch):
+    from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
+
+    for frames in (mock_funnel_frames(spark), _edge_frames(spark)):
+        ours = entity_funnel_metrics(*frames)
+        ref = _column_built(monkeypatch, entity_funnel_metrics, *frames)
+        assert ours.sameSemantics(ref)
+        assert ours.schema == ref.schema
+
+
+def test_funnel_metrics_sql_strings_match_column_plan(spark, monkeypatch):
+    st, ot, dc, fi = mock_funnel_frames(spark)
+    aggs = (
+        stage_totals(st, MOCK_ENTITY),
+        otp_totals(ot, MOCK_ENTITY),
+        discovery_totals(dc, MOCK_ENTITY),
+        fi_status_counts(fi, MOCK_ENTITY),
+    )
+    ours = funnel_metrics(*aggs)
+    ref = _column_built(monkeypatch, funnel_metrics, *aggs)
+    assert ours.sameSemantics(ref)
+    assert ours.schema == ref.schema
+
+
+def test_pct_of_sql_matches_pct_of(spark):
+    """Same DOUBLE type and values for a positive, a zero and a negative
+    total (the SQL form's else branch must not be a DECIMAL 0.0)."""
+    from pyspark.sql import functions as F
+
+    from funnel_report_etl_pipeline__spark.functions.core import pct_of, pct_of_sql
+
+    df = spark.createDataFrame([(1250, 7700), (5, 0), (3, -4)], "v long, t long")
+    ours = df.selectExpr(f"{pct_of_sql('v', 't')} AS pct")
+    ref = df.select(pct_of(F.col("v"), F.col("t")).alias("pct"))
+    assert ours.schema == ref.schema
+    assert dict(ours.dtypes)["pct"] == "double"
+    assert [r.pct for r in ours.collect()] == [r.pct for r in ref.collect()] == [16.2, 0.0, 0.0]

@@ -13,7 +13,7 @@ import pytest
 
 from funnel_report_etl_pipeline__spark.plans.registry import load_all
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, py4j_round_trips
 
 SPECS = load_all()
 
@@ -96,6 +96,50 @@ def test_entity_funnel_collect_job_budget(spark):
     rows, jobs = _jobs_under_group(spark, "test_entity_funnel_collect_job_budget", df.collect)
     assert len(rows) == 2
     assert 1 <= jobs <= 2, f"{jobs} jobs"
+
+
+# py4j round trips per plan build, counted on a second build (catalog
+# warm). The report-path plans are built from SQL expression strings; under
+# PySpark 4 every Column method or F.col call costs ~10-13 round trips.
+# Measured builds: entity funnel 177, the four funnel registry queries
+# 22 / 26 / 26 / 75; their Column-API forms took 1,420 and 861 / 529 /
+# 842 / 384.
+ENTITY_FUNNEL_PY4J_BUDGET = 200
+FUNNEL_QUERY_PY4J_BUDGET = {
+    "funnel_waterfall": 40,
+    "event_funnel_users": 40,
+    "event_funnel_windowed": 40,
+    "event_path_topk": 100,
+}
+
+
+def test_entity_funnel_build_py4j_budget(spark):
+    from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
+    from funnel_report_etl_pipeline__spark.sources.mock import mock_funnel_frames
+
+    frames = mock_funnel_frames(spark)
+    entity_funnel_metrics(*frames)
+    _, sent = py4j_round_trips(spark, lambda: entity_funnel_metrics(*frames))
+    assert sent <= ENTITY_FUNNEL_PY4J_BUDGET, f"{sent} py4j round trips"
+
+
+@pytest.mark.parametrize("name", sorted(FUNNEL_QUERY_PY4J_BUDGET))
+def test_funnel_query_build_py4j_budget(spark, name):
+    build = SPECS[name].fn
+    build(spark, SF_SMALL)
+    _, sent = py4j_round_trips(spark, lambda: build(spark, SF_SMALL))
+    assert sent <= FUNNEL_QUERY_PY4J_BUDGET[name], f"{sent} py4j round trips"
+
+
+def test_event_path_topk_build_runs_no_spark_job(spark):
+    """events comes from the shared catalog, so building the plan infers no
+    parquet schema (a direct spark.read.parquet ran one job per build)."""
+    build = SPECS["event_path_topk"].fn
+    build(spark, SF_SMALL)
+    _, jobs = _jobs_under_group(
+        spark, "test_event_path_topk_build_runs_no_spark_job", lambda: build(spark, SF_SMALL)
+    )
+    assert jobs == 0, f"{jobs} jobs"
 
 
 def _snapshot_and_merge_source(spark):
