@@ -30,14 +30,8 @@ from funnel_report_etl_pipeline__spark.session import (  # noqa: E402
 )
 
 
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or 0)
-
-    spark = get_spark(app_name="bench")
-    specs = {n: s for n, s in load_all().items() if s.bench}
-
-    # warm-up: JVM classloading + codegen paths, not billed to any query
+def _warm_up(spark, sf_dir: str) -> None:
+    """JVM classloading + codegen paths, not billed to any query."""
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     # Round-15 measurement fix (declared in OPTIMIZATION_r15.md, old
     # numbers kept there): the single range-sum warm-up left the JVM
@@ -62,7 +56,21 @@ def main() -> int:
         spark.range(997).selectExpr("id AS k", "id * 2 AS w2").hint("broadcast"),
         "k",
     ).groupBy("k").count().collect()
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).limit(10_000).collect()
+    # the parquet-scan warm-up needs the scale factor's lineitem; a data
+    # directory without it still benches whatever its queries can read
+    lineitem = os.path.join(sf_dir, "lineitem.parquet")
+    if os.path.exists(lineitem):
+        spark.read.parquet(lineitem).limit(10_000).collect()
+
+
+def main() -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or 0)
+
+    spark = get_spark(app_name="bench")
+    specs = {n: s for n, s in load_all().items() if s.bench}
+
+    _warm_up(spark, sf_dir)
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float | None] = {}

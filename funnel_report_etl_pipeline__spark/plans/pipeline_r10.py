@@ -845,9 +845,9 @@ def _ensure_version_history(spark: SparkSession, sf_dir: str) -> str:
     from funnel_report_etl_pipeline__spark.operators.dedup import exact_dedup
     from funnel_report_etl_pipeline__spark.operators.text import quality_keep_expr
     from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
         read_versioned,
         table_versions,
-        version_manifest,
         write_versioned,
     )
 
@@ -858,7 +858,7 @@ def _ensure_version_history(spark: SparkSession, sf_dir: str) -> str:
     def is_current(path: str) -> bool:
         if table_versions(spark, path) != [1, 2, 3]:
             return False
-        committed = version_manifest(spark, path).filter("version = 1").collect()
+        committed = [r for r in _manifest_rows(spark, path) if r["version"] == 1]
         if not committed:
             return False
         # content signature, not just count: a regenerated corpus with the

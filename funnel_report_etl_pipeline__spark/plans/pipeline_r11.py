@@ -845,11 +845,11 @@ def versioned_tombstone_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
         append_versioned,
         compact_versioned,
         delete_versioned,
         read_versioned,
-        version_manifest,
         write_versioned,
     )
 
@@ -874,9 +874,8 @@ def versioned_tombstone_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 12 == 0), table, id_col="doc_id"
         )
         compact_versioned(spark, table, id_col="doc_id")
-        m = version_manifest(spark, table).orderBy("version").collect()
         out = []
-        for r in m:
+        for r in _manifest_rows(spark, table):
             live = read_versioned(spark, table, int(r["version"])).count()
             out.append(
                 (int(r["version"]), r["kind"], int(r["n_rows"]),

@@ -211,11 +211,11 @@ def versioned_merge_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
         append_versioned,
         merge_versioned,
         read_versioned,
         version_changes,
-        version_manifest,
         write_versioned,
     )
 
@@ -245,13 +245,12 @@ def versioned_merge_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             table,
             id_col="doc_id",
         )
-        m = version_manifest(spark, table).orderBy("version").collect()
         out = []
-        for r in m:
+        for r in _manifest_rows(spark, table):
             v = int(r["version"])
-            snap = read_versioned(spark, table, v)
-            live = snap.count()
-            marked = snap.filter(F.col("text") == "MERGED").count()
+            live, marked = read_versioned(spark, table, v).selectExpr(
+                "count(*)", "count_if(text = 'MERGED')"
+            ).first()
             if v == 1:
                 ins, upd = live, 0
             else:

@@ -105,11 +105,11 @@ def versioned_span_feed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
         _id_checksum_col,
+        _manifest_rows,
         append_versioned,
         delete_versioned,
         merge_versioned,
         version_changes,
-        version_manifest,
         write_versioned,
     )
 
@@ -134,7 +134,7 @@ def versioned_span_feed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = version_changes(spark, table, 1, 5, "doc_id")
         base_dir = {
             int(r["version"]): r["data_dir"]
-            for r in version_manifest(spark, table).collect()
+            for r in _manifest_rows(spark, table)
         }[1]
         if any(base_dir in f for f in feed.inputFiles()):
             raise RuntimeError(
@@ -333,11 +333,11 @@ def versioned_timetravel_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
         _id_checksum_col,
+        _manifest_rows,
         append_versioned,
         delete_versioned,
         merge_versioned,
         read_versioned_as_of_timestamp,
-        version_manifest,
         write_versioned,
     )
 
@@ -357,7 +357,7 @@ def versioned_timetravel_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stamps = {
             int(r["version"]): int(r["commit_ts"])
-            for r in version_manifest(spark, table).collect()
+            for r in _manifest_rows(spark, table)
         }
         ordered = [stamps[v] for v in sorted(stamps)]
         if ordered != sorted(set(ordered)):

@@ -247,10 +247,10 @@ def versioned_update_span_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from funnel_report_etl_pipeline__spark.sources.sinks import (
         _id_checksum_col,
+        _manifest_rows,
         append_versioned,
         delete_versioned,
         version_changes,
-        version_manifest,
         write_versioned,
     )
 
@@ -275,7 +275,7 @@ def versioned_update_span_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame
         feed = version_changes(spark, table, 1, 3, "doc_id", detect_updates=True)
         base_rel = {
             int(r["version"]): r["data_dir"]
-            for r in version_manifest(spark, table).collect()
+            for r in _manifest_rows(spark, table)
         }[1]
         base_name = base_rel.rstrip("/").split("/")[-1]
         base_scans = [
@@ -365,10 +365,10 @@ def versioned_recommit_cdc_audit_q(spark: SparkSession, sf_dir: str) -> DataFram
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
         _id_checksum_col,
+        _manifest_rows,
         append_versioned,
         delete_versioned,
         version_changes,
-        version_manifest,
         write_versioned,
     )
 
@@ -393,7 +393,7 @@ def versioned_recommit_cdc_audit_q(spark: SparkSession, sf_dir: str) -> DataFram
         )
         dirs = {
             int(r["version"]): r["data_dir"]
-            for r in version_manifest(spark, table).collect()
+            for r in _manifest_rows(spark, table)
         }
         membership = version_changes(spark, table, 1, 4, "doc_id")
         offending = [
@@ -470,9 +470,9 @@ def versioned_sql_timetravel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
         append_versioned,
         delete_versioned,
-        version_manifest,
         versioned_table_view,
         write_versioned,
     )
@@ -490,7 +490,7 @@ def versioned_sql_timetravel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stamps = {
             int(r["version"]): int(r["commit_ts"])
-            for r in version_manifest(spark, table).collect()
+            for r in _manifest_rows(spark, table)
         }
         versioned_table_view(spark, table, "r14_hist_v1", version=1)
         versioned_table_view(spark, table, "r14_hist_head")

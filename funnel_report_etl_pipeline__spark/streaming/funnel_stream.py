@@ -442,10 +442,11 @@ def write_stream_versioned(
     makes the original commit either fully visible — manifest present —
     or an invisible orphan, so the presence check is exact). The guard
     fails CLOSED: `batch_id` is a base manifest column every writer
-    stamps (NULL for batch commits) and manifests are read with
-    mergeSchema, so on a non-empty table whose log somehow lacks the
-    column the sink RAISES instead of silently skipping the replay check
-    (the round-10 verdict's fail-open on mixed batch+stream tables).
+    stamps (NULL for batch commits) and the log is read with schema
+    promotion (`_manifest_rows`), so on a non-empty table whose log
+    somehow lacks the column the sink RAISES instead of silently skipping
+    the replay check (the round-10 verdict's fail-open on mixed
+    batch+stream tables).
     Readers time-travel the ingest history for free: version N is the
     table as of micro-batch N's commit.
 
@@ -500,9 +501,10 @@ def commit_stream_batch(
     Fails CLOSED: a non-empty commit log without the `batch_id` ledger
     column means we cannot prove this batch is not a replay — raise
     rather than guess (the round-10 fail-open, where schema inference
-    dropped the column on mixed batch+stream tables; `version_manifest`
-    now mergeSchema-reads and every writer stamps the column, so this
-    raise only fires on legacy/corrupt logs).
+    dropped the column on mixed batch+stream tables; the commit log is
+    now read locally with schema promotion by `_manifest_rows`, no Spark
+    job, and every writer stamps the column, so this raise only fires on
+    legacy/corrupt logs).
 
     ``mode='append'`` delta-commits the batch (insert-only ingest).
     ``mode='merge'`` UPSERTS it (the CDC-apply shape: a re-keyed row
@@ -513,19 +515,19 @@ def commit_stream_batch(
     per batch must pre-reduce to its latest row (an ordering the SOURCE
     defines; silently keeping an arbitrary one would be wrong)."""
     from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
         append_versioned,
-        version_manifest,
     )
 
     spark = batch_df.sparkSession
-    committed = version_manifest(spark, table_dir)
-    if "batch_id" not in committed.columns:
+    committed = _manifest_rows(spark, table_dir)
+    if committed and "batch_id" not in committed[0].__fields__:
         raise RuntimeError(
             f"versioned table {table_dir} has commit manifests without "
             f"the batch_id ledger column; cannot prove batch "
             f"{batch_id} is not a replay — refusing to commit"
         )
-    if committed.filter(F.col("batch_id") == batch_id).count() > 0:
+    if any(r["batch_id"] == batch_id for r in committed):
         return False  # replayed batch: its version already committed
     # the batch id rides in the commit row itself (one atomic step — no
     # stamp-after-commit window), and the CAS commit protocol makes a
@@ -668,12 +670,12 @@ def apply_replicated_commit(
     import os
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
         append_versioned,
         delete_versioned,
         merge_versioned,
         read_versioned,
         table_versions,
-        version_manifest,
         write_versioned,
     )
 
@@ -681,17 +683,17 @@ def apply_replicated_commit(
     has_replica = bool(table_versions(spark, replica_table))
     applied_max = None
     if has_replica:
-        m = version_manifest(spark, replica_table)
-        if "batch_id" not in m.columns:
+        m = _manifest_rows(spark, replica_table)
+        if m and "batch_id" not in m[0].__fields__:
             raise RuntimeError(
                 f"replica {replica_table} has commit manifests without the "
                 f"batch_id ledger column; cannot prove source version {v} "
                 f"is not a replay — refusing to commit"
             )
-        if m.filter(F.col("batch_id") == v).count() > 0:
+        applied = [int(r["batch_id"]) for r in m if r["batch_id"] is not None]
+        if v in applied:
             return False
-        r0 = m.agg(F.max("batch_id").alias("mx")).collect()[0]
-        applied_max = None if r0["mx"] is None else int(r0["mx"])
+        applied_max = max(applied, default=None)
         if applied_max is not None and v <= applied_max:
             # late/duplicate delivery of an already-SUPERSEDED commit:
             # the replica holds source@applied_max, whose state already
@@ -717,11 +719,9 @@ def apply_replicated_commit(
         )
         if want_n is None or want_s is None:
             return  # legacy source manifest without stats
-        got = (
-            version_manifest(spark, replica_table)
-            .filter(F.col("batch_id") == v)
-            .collect()
-        )
+        got = [
+            r for r in _manifest_rows(spark, replica_table) if r["batch_id"] == v
+        ]
         if not got:
             return
         if (int(got[0]["n_rows"]), int(got[0]["content_checksum"])) != (

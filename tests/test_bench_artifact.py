@@ -3,7 +3,7 @@ last 2000 characters of bench output (every BENCH_r07-r09 artifact shows
 tail_len exactly 2000 with parsed=null once the registry outgrew the
 window), so the last stdout line must parse from a bounded tail capture
 no matter how many queries the registry holds. No Spark needed — pure
-string logic."""
+string logic — except for the warm-up test at the end."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import os
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import tail_safe_line  # noqa: E402
+from bench import _warm_up, tail_safe_line  # noqa: E402
 
 
 def _full(n: int) -> dict:
@@ -65,3 +65,16 @@ def test_failed_marker_survives_truncation():
     full["queries"]["query_name_of_ordinary_length_000"] = None
     obj = json.loads(tail_safe_line(full, 1900))
     assert obj["failed"] == ["query_name_of_ordinary_length_000"]
+
+
+def test_warm_up_runs_without_lineitem(spark, tmp_path):
+    """A data directory without lineitem.parquet skips only the parquet
+    warm-up read; the synthetic warm-ups still run."""
+    sc = spark.sparkContext
+    group = "test_warm_up_runs_without_lineitem"
+    sc.setJobGroup(group, group)
+    try:
+        _warm_up(spark, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group)

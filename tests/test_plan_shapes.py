@@ -219,6 +219,95 @@ def test_versioned_commit_job_budgets(spark, tmp_path):
     assert maint_jobs <= 4, f"compact + vacuum ran {maint_jobs} jobs"
 
 
+# The commit log has one batch reader, local pyarrow: the budgets below
+# are 0, where Spark's mergeSchema scan of the manifests ran 2 jobs for a
+# version_manifest collect, 3 each for the stream and replication replay
+# guards, and 2 to build an as-of-batch read (against 0 for read_versioned
+# of the same version). Counted at local[4] on the 4-version table below.
+def _stream_table(spark, t):
+    """A 4-version table committed by the stream sink, batch ids 0-3."""
+    from funnel_report_etl_pipeline__spark.streaming.funnel_stream import commit_stream_batch
+
+    docs, _ = _snapshot_and_merge_source(spark)
+    for b in range(4):
+        assert commit_stream_batch(docs.filter(f"doc_id % 4 = {b}"), t, "doc_id", b)
+    return docs
+
+
+def test_version_manifest_collect_runs_no_spark_job(spark, tmp_path):
+    from funnel_report_etl_pipeline__spark.sources import sinks
+
+    t = str(tmp_path / "stream")
+    _stream_table(spark, t)
+    rows, jobs = _jobs_under_group(
+        spark, "test_version_manifest_collect_runs_no_spark_job",
+        lambda: sinks.version_manifest(spark, t).collect(),
+    )
+    assert [r["batch_id"] for r in rows] == [0, 1, 2, 3]
+    assert jobs == 0, f"{jobs} jobs"
+
+
+def test_stream_replay_guard_runs_no_spark_job(spark, tmp_path):
+    from funnel_report_etl_pipeline__spark.sources import sinks
+    from funnel_report_etl_pipeline__spark.streaming.funnel_stream import commit_stream_batch
+
+    t = str(tmp_path / "stream")
+    docs = _stream_table(spark, t)
+    replayed, jobs = _jobs_under_group(
+        spark, "test_stream_replay_guard_runs_no_spark_job",
+        lambda: commit_stream_batch(docs, t, "doc_id", 2),
+    )
+    assert replayed is False and sinks.table_versions(spark, t) == [1, 2, 3, 4]
+    assert jobs == 0, f"{jobs} jobs"
+
+
+def test_read_as_of_batch_build_runs_no_more_jobs_than_read_versioned(spark, tmp_path):
+    from funnel_report_etl_pipeline__spark.sources import sinks
+
+    t = str(tmp_path / "stream")
+    _stream_table(spark, t)
+    group = "test_read_as_of_batch_build_runs_no_more_jobs_than_read_versioned"
+    _, as_of_jobs = _jobs_under_group(
+        spark, f"{group}:as_of", lambda: sinks.read_versioned_as_of_batch(spark, t, 2)
+    )
+    _, read_jobs = _jobs_under_group(
+        spark, f"{group}:read", lambda: sinks.read_versioned(spark, t, 3)
+    )
+    assert as_of_jobs <= read_jobs, f"{as_of_jobs} jobs against {read_jobs}"
+
+
+def test_replication_replay_guard_runs_no_spark_job(spark, tmp_path):
+    from funnel_report_etl_pipeline__spark.sources import sinks
+    from funnel_report_etl_pipeline__spark.streaming.funnel_stream import apply_replicated_commit
+
+    t, rep = str(tmp_path / "stream"), str(tmp_path / "replica")
+    _stream_table(spark, t)
+    src_rows = sinks._manifest_rows(spark, t)
+    for r in src_rows:
+        assert apply_replicated_commit(spark, t, rep, r, "doc_id")
+    again, jobs = _jobs_under_group(
+        spark, "test_replication_replay_guard_runs_no_spark_job",
+        lambda: apply_replicated_commit(spark, t, rep, src_rows[-1], "doc_id"),
+    )
+    assert again is False and sinks.table_versions(spark, rep) == [1, 2, 3, 4]
+    assert jobs == 0, f"{jobs} jobs"
+
+
+# Spark jobs run while building versioned_merge_audit (its versioned
+# commits, reads and change feeds). Measured 53 at sf0.001 and sf0.01,
+# local[4]; 66 when the commit log was read through Spark and each
+# version's live and MERGED counts were two count() jobs.
+MERGE_AUDIT_CONSTRUCT_JOB_BUDGET = 53
+
+
+def test_versioned_merge_audit_construct_job_budget(spark):
+    _, jobs = _jobs_under_group(
+        spark, "test_versioned_merge_audit_construct_job_budget",
+        lambda: SPECS["versioned_merge_audit"].fn(spark, SF_SMALL),
+    )
+    assert jobs <= MERGE_AUDIT_CONSTRUCT_JOB_BUDGET, f"{jobs} construct jobs"
+
+
 def test_read_versioned_tombstone_side_has_no_aggregate_or_exchange(spark, tmp_path):
     """The tombstone side of the merge-on-read anti join is a bare scan:
     no distinct, so no HashAggregate and no hash exchange in the plan

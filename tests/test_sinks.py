@@ -220,18 +220,28 @@ def test_orc_roundtrip_partition_prune_and_pushdown(spark, tmp_path):
         write_columnar(df, out, fmt="avro")
 
 
+def _spark_manifest_reference(spark, t):
+    """Test-only reference reader of the commit log, independent of the
+    engine's pyarrow reader: Spark's mergeSchema scan of every committed
+    manifest directory (absent columns → NULL), as the engine read the
+    log before it was read only locally."""
+    from funnel_report_etl_pipeline__spark.sources.sinks import table_versions
+
+    paths = [os.path.join(t, "_versions", f"{v}.parquet") for v in table_versions(spark, t)]
+    return spark.read.option("mergeSchema", "true").parquet(*paths)
+
+
 def test_manifest_rows_pyarrow_fast_path_matches_spark_reader(spark, tmp_path):
     """Round-15: _manifest_rows reads the per-version manifests locally
     with pyarrow (no Spark jobs). Parity contract with the mergeSchema
-    Spark read it replaced: same rows, same version order, and a ledger
-    column absent from OLDER manifests (schema evolution of the commit
-    log itself, e.g. the round-13 'kind'/'tomb_dir' columns on a table
-    whose v1 predates them) surfaces as None — field present on EVERY
-    row."""
+    Spark read (`_spark_manifest_reference`): same rows, same version
+    order, and a ledger column absent from OLDER manifests (schema
+    evolution of the commit log itself, e.g. the round-13
+    'kind'/'tomb_dir' columns on a table whose v1 predates them)
+    surfaces as None — field present on EVERY row."""
     from funnel_report_etl_pipeline__spark.sources.sinks import (
         _manifest_rows,
         append_versioned,
-        version_manifest,
         write_versioned,
     )
 
@@ -244,7 +254,7 @@ def test_manifest_rows_pyarrow_fast_path_matches_spark_reader(spark, tmp_path):
         id_col="doc_id",
     )
     fast = _manifest_rows(spark, t)
-    slow = version_manifest(spark, t).orderBy("version").collect()
+    slow = _spark_manifest_reference(spark, t).orderBy("version").collect()
     assert [int(r["version"]) for r in fast] == [int(r["version"]) for r in slow]
     for fr, sr in zip(fast, slow):
         assert set(fr.__fields__) >= set(sr.__fields__)
@@ -339,7 +349,7 @@ def _rewrite_manifest_with_spark(spark, mdir):
         _read_manifest_dir,
     )
 
-    (row,) = _read_manifest_dir(mdir)
+    (row,) = _read_manifest_dir(mdir).to_pylist()
     base = [f.split()[0] for f in _MANIFEST_BASE_SCHEMA.split(",")]
     extra = [k for k in row if k not in base]
     schema = _MANIFEST_BASE_SCHEMA + "".join(f", {k} long" for k in extra)
@@ -362,7 +372,8 @@ def _is_spark_written(mdir) -> bool:
 def test_mixed_spark_and_local_manifests_read_identically(spark, tmp_path):
     """A table whose early manifests were written by Spark and whose later
     ones were written locally reads the same through the local commit-log
-    reader, the Spark `version_manifest` reader and batch-id time travel."""
+    reader, its `version_manifest` view, the Spark mergeSchema reference
+    and batch-id time travel."""
     from funnel_report_etl_pipeline__spark.sources.sinks import (
         _manifest_rows,
         append_versioned,
@@ -398,8 +409,9 @@ def test_mixed_spark_and_local_manifests_read_identically(spark, tmp_path):
     assert written_by_spark == [True, True, False, False]
 
     local = _manifest_rows(spark, t)
-    remote = version_manifest(spark, t).orderBy("version").collect()
+    remote = _spark_manifest_reference(spark, t).orderBy("version").collect()
     assert [r.asDict() for r in local] == [r.asDict() for r in remote]
+    assert version_manifest(spark, t).collect() == local
     assert [r["batch_id"] for r in local] == [10, 11, 12, 13]
     assert [r["n_rows"] for r in local] == [20, 30, 35, 37]
     # commit_ts stays strictly increasing across the writer change
@@ -416,7 +428,7 @@ def test_local_manifest_schema_and_null_round_trip(spark, tmp_path):
     """A locally written manifest has the Spark writer's column names,
     order and types (`_MANIFEST_BASE_SCHEMA` then the `extra` longs), and
     NULL batch_id / tomb_dir plus the extra column round-trip through
-    both manifest readers."""
+    the commit-log reader and the Spark mergeSchema reference."""
     import pyarrow.parquet as pq
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
@@ -438,7 +450,7 @@ def test_local_manifest_schema_and_null_round_trip(spark, tmp_path):
     (row,) = _manifest_rows(spark, t)
     assert row["batch_id"] is None and row["tomb_dir"] is None
     assert row["n_src"] == 7 and row["n_rows"] == 5 and row["kind"] == "snapshot"
-    (srow,) = version_manifest(spark, t).collect()
+    (srow,) = _spark_manifest_reference(spark, t).collect()
     assert srow.asDict() == row.asDict()
     assert version_manifest(spark, t).schema.simpleString() == (
         "struct<version:bigint,n_rows:bigint,content_checksum:bigint,"
@@ -451,6 +463,42 @@ def test_local_manifest_schema_and_null_round_trip(spark, tmp_path):
     spark_schema = pq.read_schema(os.path.join(mdir, spart))
     assert spark_schema.equals(local_schema)  # metadata is not compared
     assert _manifest_rows(spark, t)[0].asDict() == row.asDict()
+
+
+def test_v1_manifest_then_current_manifests_match_reference_schema(spark, tmp_path):
+    """A v1-protocol manifest (version, n_rows, content_checksum and an
+    `extra` column) followed by current manifests: the commit log has the
+    mergeSchema reference's column order and types — first-seen order, so
+    the v1 extra column sits before the later ledger columns — and its
+    values, with NULL where the v1 manifest lacks a column."""
+    from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _manifest_rows,
+        append_versioned,
+        version_manifest,
+        write_versioned,
+    )
+
+    t = str(tmp_path / "v1mixed")
+    docs = spark.range(12).selectExpr("id AS doc_id", "CAST(id AS STRING) AS text")
+    os.makedirs(os.path.join(t, "_versions"))
+    docs.filter("doc_id < 5").write.parquet(os.path.join(t, "v=1"))
+    spark.createDataFrame(
+        [(1, 5, 12345, 3)], "version long, n_rows long, content_checksum long, n_src long"
+    ).coalesce(1).write.parquet(os.path.join(t, "_versions", "1.parquet"))
+    write_versioned(docs.filter("doc_id < 8"), t, id_col="doc_id", batch_id=20)
+    append_versioned(docs.filter("doc_id >= 8"), t, id_col="doc_id", batch_id=21)
+
+    ref = _spark_manifest_reference(spark, t).orderBy("version")
+    got = version_manifest(spark, t)
+    assert got.schema == ref.schema
+    assert got.columns[:5] == ["version", "n_rows", "content_checksum", "n_src", "batch_id"]
+    rows = _manifest_rows(spark, t)
+    assert [r.__fields__ for r in rows] == [ref.columns] * 3
+    assert [tuple(r) for r in rows] == [tuple(r) for r in ref.collect()]
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in rows]
+    assert [r["batch_id"] for r in rows] == [None, 20, 21]
+    assert [r["n_src"] for r in rows] == [3, None, None]
+    assert rows[0]["kind"] is None and rows[1]["kind"] == "snapshot"
 
 
 def test_uncommitted_tmp_manifest_is_invisible(spark, tmp_path):

@@ -40,12 +40,12 @@ from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.session import get_spark
 from funnel_report_etl_pipeline__spark.sources.sinks import (
+    _manifest_rows,
     append_versioned,
     delete_versioned,
     merge_versioned,
     read_versioned,
     table_versions,
-    version_manifest,
     write_versioned,
 )
 
@@ -116,7 +116,7 @@ def probe_replication(spark, mult: int) -> dict:
             ),
             id_col="doc_id",
         )
-        rows = version_manifest(spark, src).orderBy("version").collect()
+        rows = _manifest_rows(spark, src)
         # bootstrap the replica with the O(snapshot) initial copy (untimed)
         apply_replicated_commit(spark, src, rep, rows[0], "doc_id")
         t0 = time.monotonic()

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.session import get_spark
 from funnel_report_etl_pipeline__spark.sources.sinks import (
+    _manifest_rows,
     _multiplicity_changes,
     _read_tomb_ids,
     append_versioned,
@@ -52,7 +53,6 @@ from funnel_report_etl_pipeline__spark.sources.sinks import (
     merge_versioned,
     read_versioned,
     version_changes,
-    version_manifest,
     write_versioned,
 )
 
@@ -146,7 +146,7 @@ def probe_detect_updates_span(spark, mult: int) -> dict:
             spark, t, 1, 4, "doc_id", detect_updates=True
         ).count()
         fast_wall = time.monotonic() - t0
-        rows = version_manifest(spark, t).collect()
+        rows = _manifest_rows(spark, t)
         mt = [
             os.path.join(t, r["tomb_dir"])
             for r in rows

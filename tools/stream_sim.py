@@ -912,7 +912,6 @@ def main() -> int:
             _data_dirs_for,
             _manifest_rows,
             read_versioned,
-            version_manifest,
         )
         from funnel_report_etl_pipeline__spark.streaming.funnel_stream import (
             write_stream_versioned,
@@ -959,11 +958,11 @@ def main() -> int:
     #     and the forced replay being SKIPPED.
     def _replication():
         from funnel_report_etl_pipeline__spark.sources.sinks import (
+            _manifest_rows,
             append_versioned,
             delete_versioned,
             merge_versioned,
             read_versioned,
-            version_manifest,
             write_versioned,
         )
         from funnel_report_etl_pipeline__spark.streaming.funnel_stream import (
@@ -990,17 +989,15 @@ def main() -> int:
             spark, src, rep, f"{tmp}/repl_ckpt", "user_id", "ss_replication"
         )
         q.awaitTermination()
-        last = max(
-            version_manifest(spark, src).collect(), key=lambda r: r["version"]
-        )
+        last = _manifest_rows(spark, src)[-1]
         replay_skipped = (
             apply_replicated_commit(spark, src, rep, last, "user_id") is False
         )
         s = read_versioned(spark, rep).toPandas()
         b = read_versioned(spark, src).toPandas()
         res = _canon_ok(s, b)
-        rm = version_manifest(spark, rep).orderBy("version").collect()
-        sm = version_manifest(spark, src).orderBy("version").collect()
+        rm = _manifest_rows(spark, rep)
+        sm = _manifest_rows(spark, src)
         manifest_parity = len(rm) == len(sm) == 4 and all(
             r["n_rows"] == s2["n_rows"]
             and r["content_checksum"] == s2["content_checksum"]
@@ -1027,9 +1024,9 @@ def main() -> int:
     #     intermediate CDC state.
     def _merge_ingest():
         from funnel_report_etl_pipeline__spark.sources.sinks import (
+            _manifest_rows,
             read_versioned,
             table_versions,
-            version_manifest,
         )
         from funnel_report_etl_pipeline__spark.streaming.funnel_stream import (
             commit_stream_batch,
@@ -1089,8 +1086,7 @@ def main() -> int:
             .toPandas()
         )
         res = _canon_ok(s, b)
-        m = version_manifest(spark, t).orderBy("version").collect()
-        kinds = [r["kind"] for r in m]
+        kinds = [r["kind"] for r in _manifest_rows(spark, t)]
         res["replay_skipped"] = replay_skipped
         res["kinds"] = kinds
         res["n_versions"] = len(table_versions(spark, t))
