@@ -29,7 +29,10 @@ the corpus². Index builds are idempotent: a content signature
 (row count + order-independent id checksum) is stored in the meta table
 and re-verified on load; ``ensure_*`` skips the build when the saved
 signature matches, so concurrent/repeated builders converge on one
-artifact.
+artifact. The meta is a one-row table written and read locally
+(``sources.sinks._write_meta`` / ``_read_meta``, no Spark job); an
+absent or unfinished meta means build, a corrupt one raises. Artifacts
+are read footer-pinned through ``sources.sinks._read_dir``.
 
 Reference parity note: the reference engine (report_engine.py,
 run_reports.py) has no ANN surface — this is beyond-reference
@@ -48,6 +51,14 @@ from funnel_report_etl_pipeline__spark.operators.similarity import (
     _nearest_medoid_cells,
     _norm,
     medoid_cells,
+)
+from funnel_report_etl_pipeline__spark.sources.sinks import (
+    _read_dir,
+    _read_meta,
+    _write_meta,
+    read_versioned,
+    table_versions,
+    version_changes,
 )
 
 __all__ = [
@@ -82,70 +93,6 @@ def corpus_signature(corpus: DataFrame, id_col: str) -> tuple[int, int]:
     return int(row["n"]), int(row["sig"])
 
 
-def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    spark.createDataFrame([tuple(str(v) for v in meta.values())], list(meta)).coalesce(
-        1
-    ).write.mode("overwrite").parquet(path)
-
-
-def _local_parquet_files(path: str) -> list[str]:
-    """Data files of a Spark-written parquet directory on the LOCAL
-    filesystem (ignores _SUCCESS/.crc sidecars); [path] for a bare file;
-    [] when absent/non-local."""
-    import glob
-
-    if os.path.isfile(path):
-        return [path]
-    return sorted(glob.glob(os.path.join(path, "*.parquet")))
-
-
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    # fast path (round-14 optimization, guide §5 "the driver should do
-    # almost no data work" inverted: a 1-row meta table does not need a
-    # Spark job at all): read the tiny parquet directly with pyarrow —
-    # no JVM scan job, no schema-inference pass (~0.2-0.4 s per ensure_*
-    # call on the serve path). Falls back to the Spark reader off local
-    # filesystems. Values were written as strings; both paths return them
-    # unchanged.
-    try:
-        files = _local_parquet_files(path)
-        if files:
-            import pyarrow.parquet as _pq
-
-            rows: list[dict] = []
-            for f in files:
-                rows.extend(_pq.read_table(f).to_pylist())
-            return rows[0] if rows else None
-    except Exception:  # noqa: BLE001 — fall through to the Spark reader
-        pass
-    try:
-        rows = spark.read.parquet(path).collect()
-    except Exception:  # noqa: BLE001 — missing/garbled meta = no index
-        return None
-    return rows[0].asDict() if rows else None
-
-
-def _read_artifact(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the footer schema pre-read locally via
-    pyarrow and pinned — skips the JVM schema-inference pass every
-    serve-path artifact read otherwise pays (measured 0.37 s -> 0.11 s
-    per read+collect of a small artifact; the ANN serve queries read
-    3-5 artifacts each). Schema pinning never changes values: the pinned
-    schema IS the file footer's. Falls back to plain inference when the
-    path is not a local parquet file/directory."""
-    try:
-        files = _local_parquet_files(path)
-        if files:
-            import pyarrow.parquet as _pq
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            schema = from_arrow_schema(_pq.read_schema(files[0]))
-            return spark.read.schema(schema).parquet(path)
-    except Exception:  # noqa: BLE001 — fall through to inference
-        pass
-    return spark.read.parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # IVF (medoid quantizer)
 # ---------------------------------------------------------------------------
@@ -166,7 +113,7 @@ def build_ivf_medoid_index(
     med = medoid_cells(corpus, n_cells, id_col, vec_col)
     med.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "cells.parquet"))
     spark.catalog.refreshByPath(os.path.join(out_dir, "cells.parquet"))
-    saved_med = _read_artifact(spark, os.path.join(out_dir, "cells.parquet"))
+    saved_med = _read_dir(spark, os.path.join(out_dir, "cells.parquet"))
     c = corpus.select(
         F.col(id_col).alias("cid"), F.col(vec_col).cast("array<double>").alias("__v")
     )
@@ -181,42 +128,42 @@ def build_ivf_medoid_index(
         "n_vectors": n,
         "corpus_sig": sig,
     }
-    _write_meta(spark, os.path.join(out_dir, "meta.parquet"), meta)
+    _write_meta(os.path.join(out_dir, "meta.parquet"), meta)
     return meta
 
 
-def _install_index(spark: SparkSession, tmp_dir: str, out_dir: str, is_current) -> dict:
-    """Atomically install a freshly-built index directory. Three cases:
+def _install_index(tmp_dir: str, out_dir: str, is_current) -> dict:
+    """Install the index built in ``tmp_dir`` at ``out_dir`` and return
+    the meta of the index served there. Three cases:
 
     * ``out_dir`` absent → one ``os.rename`` (atomic on one filesystem);
-    * ``out_dir`` present and CURRENT (``is_current(meta)``) → a
+    * ``out_dir`` present and current (``is_current(meta)``) → a
       concurrent builder of the same deterministic index won the rename
-      race; our identical tmp build is discarded (round-10 finding: the
-      gate's parallel shards each ran an ensure_* against a fresh SF and
-      one read a half-written in-place build — builds must never write
-      into the served path);
-    * ``out_dir`` present and STALE (we are rebuilding after a corpus
-      change) → swap: rename old away, rename tmp in, delete old.
+      race: the tmp build is discarded and the served directory is left
+      untouched (builds never write into the served path — parallel
+      ensure_* calls once read a half-written in-place build);
+    * ``out_dir`` present and stale, or its meta write never finished →
+      swap: rename the old index away, rename tmp in, delete the old one.
 
-    Residual race (reader mid-swap / two swappers) needs a lock or
-    versioned directories — out of scope for a single-writer daily job;
-    the deterministic-content property makes any rename winner correct."""
+    A committed meta that cannot be read raises (`_read_meta`). A reader
+    mid-swap or two concurrent swappers need a lock or versioned
+    directories — out of scope for a single-writer daily job; the
+    deterministic-content property makes any rename winner correct."""
     import shutil
 
+    meta_path = os.path.join(out_dir, "meta.parquet")
     try:
         os.rename(tmp_dir, out_dir)
-        return _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
     except OSError:
-        pass
-    existing = _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
-    if existing is not None and is_current(existing):
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        return existing
-    old = f"{out_dir}.old.{os.getpid()}"
-    os.rename(out_dir, old)
-    os.rename(tmp_dir, out_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    return _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
+        existing = _read_meta(meta_path)
+        if existing is not None and is_current(existing):
+            shutil.rmtree(tmp_dir, ignore_errors=True)
+            return existing
+        old = f"{out_dir}.old.{os.getpid()}"
+        os.rename(out_dir, old)
+        os.rename(tmp_dir, out_dir)
+        shutil.rmtree(old, ignore_errors=True)
+    return _read_meta(meta_path)
 
 
 def ensure_ivf_medoid_index(
@@ -243,12 +190,12 @@ def ensure_ivf_medoid_index(
             n, sig = corpus_signature(corpus, id_col)
         return int(meta["n_vectors"]) == n and int(meta["corpus_sig"]) == sig
 
-    meta = _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
+    meta = _read_meta(os.path.join(out_dir, "meta.parquet"))
     if meta is not None and is_current(meta):
         return meta
     tmp = f"{out_dir}.build.{os.getpid()}"
     build_ivf_medoid_index(corpus, tmp, n_cells, id_col, vec_col)
-    return _install_index(spark, tmp, out_dir, is_current)
+    return _install_index(tmp, out_dir, is_current)
 
 
 def _span_changes(
@@ -265,11 +212,6 @@ def _span_changes(
     medium finding). The caller picks the maintenance strategy per kind
     set: pure inserts append-encode, pure deletes mask, churn does
     both, anything else rebuilds."""
-    from funnel_report_etl_pipeline__spark.sources.sinks import (
-        table_versions,
-        version_changes,
-    )
-
     head = table_versions(spark, table_dir)[-1]
     if head == from_version:
         return head, None, set()
@@ -295,7 +237,7 @@ def _read_mask(spark: SparkSession, index_dir: str) -> DataFrame | None:
     p = _mask_path(index_dir)
     if not os.path.exists(p):
         return None
-    return _read_artifact(spark, p).select("cid")
+    return _read_dir(spark, p).select("cid")
 
 
 def _live_assignments(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -307,7 +249,7 @@ def _live_assignments(spark: SparkSession, index_dir: str) -> DataFrame:
     the join strategy is left to the size-gated planner — a small mask
     still broadcasts under the session threshold, a near-trigger one
     degrades to a shuffled join instead of an OOM (round-13 review)."""
-    assign = _read_artifact(spark, os.path.join(index_dir, "assignments.parquet"))
+    assign = _read_dir(spark, os.path.join(index_dir, "assignments.parquet"))
     mask = _read_mask(spark, index_dir)
     if mask is None:
         return assign
@@ -361,7 +303,7 @@ def _append_delete_mask(
     to_add.write.mode("overwrite" if mask is None else "append").parquet(
         _mask_path(index_dir)
     )
-    return _read_artifact(spark, _mask_path(index_dir)).distinct().count()
+    return _read_dir(spark, _mask_path(index_dir)).distinct().count()
 
 
 def ensure_ivf_index_versioned(
@@ -421,10 +363,8 @@ def ensure_ivf_index_versioned(
     and the mask count is re-read from the files before the meta
     write. Returns the meta dict plus ``maintenance`` ∈ {'current',
     'incremental', 'masked', 'churn', 'rebuilt'} (not persisted)."""
-    from funnel_report_etl_pipeline__spark.sources.sinks import read_versioned
-
     corpus = read_versioned(spark, table_dir)
-    meta = _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
+    meta = _read_meta(os.path.join(out_dir, "meta.parquet"))
     n, sig = None, None
 
     def params_match(m: dict) -> bool:
@@ -440,18 +380,14 @@ def ensure_ivf_index_versioned(
 
     head = None
     if meta is not None and is_current(meta):
-        from funnel_report_etl_pipeline__spark.sources.sinks import (
-            table_versions as _tv,
-        )
-
         if "indexed_version" not in meta:
             # a signature-current index built by the plain ensure_* just
             # needs the version ledger stamped — the deterministic-build
             # property makes a rebuild bit-identical, i.e. pure waste
-            stamped = {**meta, "indexed_version": _tv(spark, table_dir)[-1]}
-            _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+            stamped = {**meta, "indexed_version": table_versions(spark, table_dir)[-1]}
+            _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
             return {**stamped, "maintenance": "current"}
-        if int(meta["indexed_version"]) == _tv(spark, table_dir)[-1]:
+        if int(meta["indexed_version"]) == table_versions(spark, table_dir)[-1]:
             return {**meta, "maintenance": "current"}
         # signature-current but the ledger lags the head: the id
         # signature is MEMBERSHIP-only, so a span of membership-
@@ -468,7 +404,7 @@ def ensure_ivf_index_versioned(
             # no-op recommits): nothing changed — restamp the ledger,
             # the artifacts stay exactly valid
             stamped = {**meta, "indexed_version": head}
-            _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+            _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
             return {**stamped, "maintenance": "current"}
         if ch is None and is_current(meta):
             return {**meta, "maintenance": "current"}
@@ -521,7 +457,7 @@ def ensure_ivf_index_versioned(
                 > 0
             )
             cells_path = os.path.join(out_dir, "cells.parquet")
-            saved_med = _read_artifact(spark, cells_path)
+            saved_med = _read_dir(spark, cells_path)
             if (
                 not readded_masked
                 and not still_live
@@ -548,7 +484,7 @@ def ensure_ivf_index_versioned(
                                 F.col(vec_col).cast("array<double>").alias("__v"),
                             )
                         )
-                        done = _read_artifact(spark, assign_path).select("cid")
+                        done = _read_dir(spark, assign_path).select("cid")
                         fresh = _nearest_medoid_cells(
                             newv, saved_med, "cid", 1
                         ).join(done, "cid", "left_anti")
@@ -563,9 +499,7 @@ def ensure_ivf_index_versioned(
                         "indexed_version": head,
                         "n_masked": n_masked,
                     }
-                    _write_meta(
-                        spark, os.path.join(out_dir, "meta.parquet"), new_meta
-                    )
+                    _write_meta(os.path.join(out_dir, "meta.parquet"), new_meta)
                     label = (
                         "churn"
                         if has_inserts and has_deletes
@@ -577,8 +511,6 @@ def ensure_ivf_index_versioned(
     # fraction past the trigger, or a legacy index without the
     # indexed_version ledger: full rebuild (installs a fresh
     # directory — the tombstone mask disappears with it)
-    from funnel_report_etl_pipeline__spark.sources.sinks import table_versions
-
     head = head if head is not None else table_versions(spark, table_dir)[-1]
     tmp = f"{out_dir}.build.{os.getpid()}"
     build_ivf_medoid_index(corpus, tmp, n_cells, id_col, vec_col)
@@ -593,10 +525,10 @@ def ensure_ivf_index_versioned(
             and str(m.get("indexed_version", "")) == str(head)
         )
 
-    installed = _install_index(spark, tmp, out_dir, install_current)
+    installed = _install_index(tmp, out_dir, install_current)
     stamped = {**installed, "indexed_version": head}
     stamped.pop("maintenance", None)
-    _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+    _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
     return {**stamped, "maintenance": "rebuilt"}
 
 
@@ -617,7 +549,7 @@ def cosine_topk_ivf_prebuilt(
     (pinned in tests) — the only difference is where the quantization
     came from."""
     spark = corpus.sparkSession
-    med = _read_artifact(spark, os.path.join(index_dir, "cells.parquet"))
+    med = _read_dir(spark, os.path.join(index_dir, "cells.parquet"))
     assign = _live_assignments(spark, index_dir)  # tombstone-masked deletes
     c = corpus.select(
         F.col(id_col).alias("cid"), F.col(vec_col).cast("array<double>").alias("cv")
@@ -704,7 +636,7 @@ def build_pq_index(
         os.path.join(out_dir, "codebook.parquet")
     )
     spark.catalog.refreshByPath(os.path.join(out_dir, "codebook.parquet"))
-    saved = _read_artifact(spark, os.path.join(out_dir, "codebook.parquet"))
+    saved = _read_dir(spark, os.path.join(out_dir, "codebook.parquet"))
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     corp = corpus.select(F.col(id_col).alias("cid"), dv.alias("v"))
     joined = corp.crossJoin(F.broadcast(saved))
@@ -748,7 +680,7 @@ def build_pq_index(
         "n_vectors": n,
         "corpus_sig": sig,
     }
-    _write_meta(spark, os.path.join(out_dir, "meta.parquet"), meta)
+    _write_meta(os.path.join(out_dir, "meta.parquet"), meta)
     return meta
 
 
@@ -779,12 +711,12 @@ def ensure_pq_index(
             n, sig = corpus_signature(corpus, id_col)
         return int(meta["n_vectors"]) == n and int(meta["corpus_sig"]) == sig
 
-    meta = _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
+    meta = _read_meta(os.path.join(out_dir, "meta.parquet"))
     if meta is not None and is_current(meta):
         return meta
     tmp = f"{out_dir}.build.{os.getpid()}"
     build_pq_index(corpus, tmp, n_segments, seg_dim, n_codes, id_col, vec_col)
-    return _install_index(spark, tmp, out_dir, is_current)
+    return _install_index(tmp, out_dir, is_current)
 
 
 def pq_topk_prebuilt(
@@ -805,8 +737,8 @@ def pq_topk_prebuilt(
     exactly like ``pq_topk`` — results are bit-identical to the fresh
     build (pinned in tests)."""
     spark = queries.sparkSession
-    anchors = _read_artifact(spark, os.path.join(index_dir, "codebook.parquet"))
-    codes = _read_artifact(spark, os.path.join(index_dir, "codes.parquet"))
+    anchors = _read_dir(spark, os.path.join(index_dir, "codebook.parquet"))
+    codes = _read_dir(spark, os.path.join(index_dir, "codes.parquet"))
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     q = queries.select(F.col(id_col).alias("qid"), dv.alias("qv"))
     qj = q.crossJoin(F.broadcast(anchors))
@@ -874,10 +806,10 @@ def ivfpq_topk_prebuilt(
     value-hash oracle like its parents. Returns (qid, cid, adc_dist,
     rnk) over the probed-cell candidates."""
     spark = queries.sparkSession
-    med = _read_artifact(spark, os.path.join(ivf_dir, "cells.parquet"))
+    med = _read_dir(spark, os.path.join(ivf_dir, "cells.parquet"))
     assign = _live_assignments(spark, ivf_dir)  # tombstone-masked deletes
-    anchors = _read_artifact(spark, os.path.join(pq_dir, "codebook.parquet"))
-    codes = _read_artifact(spark, os.path.join(pq_dir, "codes.parquet"))
+    anchors = _read_dir(spark, os.path.join(pq_dir, "codebook.parquet"))
+    codes = _read_dir(spark, os.path.join(pq_dir, "codes.parquet"))
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     q = queries.select(F.col(id_col).alias("qid"), dv.alias("qv"))
     q_cell = _nearest_medoid_cells(
@@ -1010,8 +942,8 @@ def build_ivfpq_residual_index(
     IVF index (cells + assignments) — pass the same corpus to both
     ensure_* calls."""
     spark = corpus.sparkSession
-    med = _read_artifact(spark, os.path.join(ivf_dir, "cells.parquet"))
-    assign = _read_artifact(spark, os.path.join(ivf_dir, "assignments.parquet"))
+    med = _read_dir(spark, os.path.join(ivf_dir, "cells.parquet"))
+    assign = _read_dir(spark, os.path.join(ivf_dir, "assignments.parquet"))
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     corp = corpus.select(F.col(id_col).alias("cid"), dv.alias("v"))
     # residual per corpus vector: v − medoid of its assigned cell
@@ -1047,7 +979,7 @@ def build_ivfpq_residual_index(
         os.path.join(out_dir, "codebook.parquet")
     )
     spark.catalog.refreshByPath(os.path.join(out_dir, "codebook.parquet"))
-    saved = _read_artifact(spark, os.path.join(out_dir, "codebook.parquet"))
+    saved = _read_dir(spark, os.path.join(out_dir, "codebook.parquet"))
     joined = res.crossJoin(F.broadcast(saved))
     # ONE pass over the residuals: per (cid, code) row, emit every
     # segment's distance via explode — the union-over-segments form the
@@ -1097,7 +1029,7 @@ def build_ivfpq_residual_index(
         "anchor_ids": anchor_ids,
         "medoid_ids": medoid_ids,
     }
-    _write_meta(spark, os.path.join(out_dir, "meta.parquet"), meta)
+    _write_meta(os.path.join(out_dir, "meta.parquet"), meta)
     return meta
 
 
@@ -1130,14 +1062,14 @@ def ensure_ivfpq_residual_index(
             n, sig = corpus_signature(corpus, id_col)
         return int(meta["n_vectors"]) == n and int(meta["corpus_sig"]) == sig
 
-    meta = _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
+    meta = _read_meta(os.path.join(out_dir, "meta.parquet"))
     if meta is not None and is_current(meta):
         return meta
     tmp = f"{out_dir}.build.{os.getpid()}"
     build_ivfpq_residual_index(
         corpus, tmp, ivf_dir, n_segments, seg_dim, n_codes, id_col, vec_col
     )
-    return _install_index(spark, tmp, out_dir, is_current)
+    return _install_index(tmp, out_dir, is_current)
 
 
 def ensure_ivfpq_residual_index_versioned(
@@ -1178,13 +1110,8 @@ def ensure_ivfpq_residual_index_versioned(
     index vs a fresh full build is pinned in tests/test_ann_index.py.
     Returns meta plus ``maintenance`` ∈ {'current', 'incremental',
     'masked', 'rebuilt'}."""
-    from funnel_report_etl_pipeline__spark.sources.sinks import (
-        read_versioned,
-        table_versions,
-    )
-
     corpus = read_versioned(spark, table_dir)
-    meta = _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
+    meta = _read_meta(os.path.join(out_dir, "meta.parquet"))
     n, sig = None, None
 
     def params_match(m: dict) -> bool:
@@ -1205,18 +1132,14 @@ def ensure_ivfpq_residual_index_versioned(
         return int(m["n_vectors"]) == n and int(m["corpus_sig"]) == sig
 
     if meta is not None and is_current(meta):
-        from funnel_report_etl_pipeline__spark.sources.sinks import (
-            table_versions as _tv,
-        )
-
         if "indexed_version" not in meta:
             # a signature-current index built by the plain ensure_* just
             # needs the version ledger stamped — rebuilding a provably
             # bit-identical artifact would waste a full corpus pass
-            stamped = {**meta, "indexed_version": _tv(spark, table_dir)[-1]}
-            _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+            stamped = {**meta, "indexed_version": table_versions(spark, table_dir)[-1]}
+            _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
             return {**stamped, "maintenance": "current"}
-        if int(meta["indexed_version"]) == _tv(spark, table_dir)[-1]:
+        if int(meta["indexed_version"]) == table_versions(spark, table_dir)[-1]:
             return {**meta, "maintenance": "current"}
         # signature-current but the ledger lags the head: the id
         # signature is MEMBERSHIP-only — a span of membership-preserving
@@ -1250,7 +1173,7 @@ def ensure_ivfpq_residual_index_versioned(
         (medoids: the IVF build identity every residual is relative to;
         anchors: the codebook pick over the live corpus)."""
         nonlocal n, sig
-        ivf_meta = _read_meta(spark, os.path.join(ivf_dir, "meta.parquet"))
+        ivf_meta = _read_meta(os.path.join(ivf_dir, "meta.parquet"))
         if n is None:
             n, sig = corpus_signature(corpus, id_col)
         if not (
@@ -1259,7 +1182,7 @@ def ensure_ivfpq_residual_index_versioned(
             and int(ivf_meta["corpus_sig"]) == sig
         ):
             return False
-        med = _read_artifact(spark, os.path.join(ivf_dir, "cells.parquet"))
+        med = _read_dir(spark, os.path.join(ivf_dir, "cells.parquet"))
         live_medoids = ",".join(
             str(r["mid"])
             for r in med.select("cell", "mid").orderBy("cell").collect()
@@ -1329,10 +1252,10 @@ def ensure_ivfpq_residual_index_versioned(
             return None  # partially-deleted duplicate id stays live
         if not _quantizers_unchanged():
             return None
-        med = _read_artifact(spark, os.path.join(ivf_dir, "cells.parquet"))
+        med = _read_dir(spark, os.path.join(ivf_dir, "cells.parquet"))
         codes_path = os.path.join(out_dir, "codes.parquet")
         per_cid = (
-            _read_artifact(spark, codes_path)
+            _read_dir(spark, codes_path)
             .groupBy("cid")
             .agg(F.count("*").alias("__k"))
         )
@@ -1347,12 +1270,8 @@ def ensure_ivfpq_residual_index_versioned(
                 return None  # dead fraction past the trigger: rebuild
             n_masked = masked
         if has_inserts:
-            assign = _read_artifact(spark, 
-                os.path.join(ivf_dir, "assignments.parquet")
-            )
-            saved_cb = _read_artifact(spark, 
-                os.path.join(out_dir, "codebook.parquet")
-            )
+            assign = _read_dir(spark, os.path.join(ivf_dir, "assignments.parquet"))
+            saved_cb = _read_dir(spark, os.path.join(out_dir, "codebook.parquet"))
             dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
             newc = (
                 corpus.join(new_ids, id_col, "semi")
@@ -1395,7 +1314,7 @@ def ensure_ivfpq_residual_index_versioned(
             "indexed_version": head,
             "n_masked": n_masked,
         }
-        _write_meta(spark, os.path.join(out_dir, "meta.parquet"), new_meta)
+        _write_meta(os.path.join(out_dir, "meta.parquet"), new_meta)
         label = (
             "churn"
             if has_inserts and has_deletes
@@ -1409,7 +1328,7 @@ def ensure_ivfpq_residual_index_versioned(
             # non-empty span with an EMPTY feed (pure compaction /
             # no-op recommits): nothing changed — restamp the ledger
             stamped = {**meta, "indexed_version": head}
-            _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+            _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
             return {**stamped, "maintenance": "current"}
         if _ch is None and is_current(meta):
             return {**meta, "maintenance": "current"}
@@ -1429,10 +1348,10 @@ def ensure_ivfpq_residual_index_versioned(
             and str(m.get("indexed_version", "")) == str(head)
         )
 
-    installed = _install_index(spark, tmp, out_dir, install_current)
+    installed = _install_index(tmp, out_dir, install_current)
     stamped = {**installed, "indexed_version": head}
     stamped.pop("maintenance", None)
-    _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+    _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
     return {**stamped, "maintenance": "rebuilt"}
 
 
@@ -1458,10 +1377,10 @@ def ivfpq_residual_topk_prebuilt(
     faithful. Corpus raw vectors are never read; compute stays
     ∝ |Q|·corpus·n_probe/n_cells at n_segments bytes/vector."""
     spark = queries.sparkSession
-    med = _read_artifact(spark, os.path.join(ivf_dir, "cells.parquet"))
+    med = _read_dir(spark, os.path.join(ivf_dir, "cells.parquet"))
     assign = _live_assignments(spark, ivf_dir)  # tombstone-masked deletes
-    anchors = _read_artifact(spark, os.path.join(res_dir, "codebook.parquet"))
-    codes = _read_artifact(spark, os.path.join(res_dir, "codes.parquet"))
+    anchors = _read_dir(spark, os.path.join(res_dir, "codebook.parquet"))
+    codes = _read_dir(spark, os.path.join(res_dir, "codes.parquet"))
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     q = queries.select(F.col(id_col).alias("qid"), dv.alias("qv"))
     q_cell = _nearest_medoid_cells(

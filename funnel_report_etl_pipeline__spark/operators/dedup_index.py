@@ -67,12 +67,10 @@ from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.operators.ann_index import (
     _append_delete_mask,
-    _read_artifact,
+    _install_index,
     _read_mask,
-    _read_meta,
     _readded_masked_id,
     _span_changes,
-    _write_meta,
     corpus_signature,
 )
 from funnel_report_etl_pipeline__spark.operators.dedup import (
@@ -80,6 +78,13 @@ from funnel_report_etl_pipeline__spark.operators.dedup import (
     gram_rows,
     jaccard_verify,
     minhash_signatures,
+)
+from funnel_report_etl_pipeline__spark.sources.sinks import (
+    _read_dir,
+    _read_meta,
+    _write_meta,
+    read_versioned,
+    table_versions,
 )
 
 __all__ = [
@@ -180,7 +185,7 @@ def build_minhash_index(
     )
     bkts.write.mode("overwrite").parquet(os.path.join(out_dir, "buckets.parquet"))
     spark.catalog.refreshByPath(os.path.join(out_dir, "buckets.parquet"))
-    saved = _read_artifact(spark, os.path.join(out_dir, "buckets.parquet"))
+    saved = _read_dir(spark, os.path.join(out_dir, "buckets.parquet"))
     a, b = saved.alias("a"), saved.alias("b")
     cand = (
         a.join(
@@ -203,7 +208,7 @@ def build_minhash_index(
         "n_docs": n,
         "corpus_sig": sig,
     }
-    _write_meta(spark, os.path.join(out_dir, "meta.parquet"), meta)
+    _write_meta(os.path.join(out_dir, "meta.parquet"), meta)
     return meta
 
 
@@ -214,7 +219,7 @@ def minhash_pairs_prebuilt(spark: SparkSession, index_dir: str) -> DataFrame:
     contract. No forced broadcast: the mask may legally grow to the
     dead-fraction trigger, so the join strategy stays with the
     size-gated planner."""
-    pairs = _read_artifact(spark, os.path.join(index_dir, "pairs.parquet"))
+    pairs = _read_dir(spark, os.path.join(index_dir, "pairs.parquet"))
     mask = _read_mask(spark, index_dir)
     if mask is None:
         return pairs
@@ -250,16 +255,8 @@ def ensure_minhash_index_versioned(
 
     Returns the meta dict plus ``maintenance`` ∈ {'current',
     'incremental', 'masked', 'churn', 'rebuilt'} (not persisted)."""
-    from funnel_report_etl_pipeline__spark.operators.ann_index import (
-        _install_index,
-    )
-    from funnel_report_etl_pipeline__spark.sources.sinks import (
-        read_versioned,
-        table_versions,
-    )
-
     corpus = read_versioned(spark, table_dir)
-    meta = _read_meta(spark, os.path.join(out_dir, "meta.parquet"))
+    meta = _read_meta(os.path.join(out_dir, "meta.parquet"))
     n, sig = None, None
     want = _params_meta(
         num_perm, ngram, bands, rows_per_band, threshold, hash_family,
@@ -281,7 +278,7 @@ def ensure_minhash_index_versioned(
     if meta is not None and is_current(meta):
         if "indexed_version" not in meta:
             stamped = {**meta, "indexed_version": table_versions(spark, table_dir)[-1]}
-            _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+            _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
             return {**stamped, "maintenance": "current"}
         if int(meta["indexed_version"]) == table_versions(spark, table_dir)[-1]:
             return {**meta, "maintenance": "current"}
@@ -299,7 +296,7 @@ def ensure_minhash_index_versioned(
             # non-empty span with an EMPTY feed (pure compaction /
             # no-op recommits): nothing changed — restamp the ledger
             stamped = {**meta, "indexed_version": head}
-            _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+            _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
             return {**stamped, "maintenance": "current"}
         if ch is None and is_current(meta):
             return {**meta, "maintenance": "current"}
@@ -344,7 +341,7 @@ def ensure_minhash_index_versioned(
                         )
                         bkt_path = os.path.join(out_dir, "buckets.parquet")
                         done = (
-                            _read_artifact(spark, bkt_path).select("id").distinct()
+                            _read_dir(spark, bkt_path).select("id").distinct()
                         )
                         # crash-idempotent append: a replayed maintenance
                         # re-signs the delta but appends nothing twice
@@ -352,7 +349,7 @@ def ensure_minhash_index_versioned(
                             "append"
                         ).parquet(bkt_path)
                         spark.catalog.refreshByPath(bkt_path)
-                        store = _read_artifact(spark, bkt_path)
+                        store = _read_dir(spark, bkt_path)
                         # probe ONLY the new docs' buckets against the
                         # store (which now includes them, so new↔new and
                         # new↔old candidates are both complete); masked
@@ -375,7 +372,7 @@ def ensure_minhash_index_versioned(
                             corpus, cand, id_col, text_col, ngram, threshold
                         )
                         pair_path = os.path.join(out_dir, "pairs.parquet")
-                        have = _read_artifact(spark, pair_path).select(
+                        have = _read_dir(spark, pair_path).select(
                             "id_a", "id_b"
                         )
                         fresh.join(
@@ -388,9 +385,7 @@ def ensure_minhash_index_versioned(
                         "indexed_version": head,
                         "n_masked": n_masked,
                     }
-                    _write_meta(
-                        spark, os.path.join(out_dir, "meta.parquet"), new_meta
-                    )
+                    _write_meta(os.path.join(out_dir, "meta.parquet"), new_meta)
                     label = (
                         "churn"
                         if has_inserts and has_deletes
@@ -418,8 +413,8 @@ def ensure_minhash_index_versioned(
             and str(m.get("indexed_version", "")) == str(head)
         )
 
-    installed = _install_index(spark, tmp, out_dir, install_current)
+    installed = _install_index(tmp, out_dir, install_current)
     stamped = {**installed, "indexed_version": head}
     stamped.pop("maintenance", None)
-    _write_meta(spark, os.path.join(out_dir, "meta.parquet"), stamped)
+    _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
     return {**stamped, "maintenance": "rebuilt"}

@@ -46,10 +46,7 @@ from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.plans import pipeline_ops, pipeline_r5  # noqa: F401
 from funnel_report_etl_pipeline__spark.plans.registry import REGISTRY, register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 
 def _index_root(sf_dir: str) -> str:
@@ -83,7 +80,7 @@ def ann_ivf_prebuilt_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_ivf_medoid_index,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     idx = os.path.join(_index_root(sf_dir), "ivf16")
     ensure_ivf_medoid_index(emb, idx, n_cells=16)
     queries = emb.filter(F.col("vec_id") < 10)
@@ -113,7 +110,7 @@ def ann_pq_prebuilt_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_topk_prebuilt,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     idx = os.path.join(_index_root(sf_dir), "pq8x16")
     ensure_pq_index(emb, idx, n_segments=8, seg_dim=8, n_codes=16)
     queries = emb.filter(F.col("vec_id") % 100 == 0)
@@ -212,7 +209,7 @@ def corpus_refresh_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from funnel_report_etl_pipeline__spark.operators.curation import curate_documents
     from funnel_report_etl_pipeline__spark.sources.sinks import ensure_training_shards
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     seen = (
         docs.filter(F.col("doc_id") % 3 == 0)
         .select(F.md5("text").alias("__h"))
@@ -338,7 +335,7 @@ def ann_recall_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_topk_ivf_medoid,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     brute = cosine_topk_brute(emb, q, k=_RECALL_K).select("qid", "cid")
     ivf = cosine_topk_ivf_medoid(
@@ -399,7 +396,7 @@ def oov_rate_by_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-grain count capped by TakeOrderedAndProject (per-partition
     bounded heaps, broadcast after — never a corpus-grain sort); the
     coverage pass re-aggregates per (source), all map-side combinable."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     toks = docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
     vocab = (
         toks.groupBy("tok")
@@ -579,7 +576,7 @@ def ann_ivfpq_prebuilt_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_topk_prebuilt,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     ivf_dir = os.path.join(_index_root(sf_dir), "ivf16")
     pq_dir = os.path.join(_index_root(sf_dir), "pq8x16")
     ensure_ivf_medoid_index(emb, ivf_dir, n_cells=16)
@@ -646,7 +643,7 @@ def zorder_curve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarded day and o_custkey are small non-negative ints."""
     from funnel_report_etl_pipeline__spark.sources.layout import zorder_key
 
-    o = _t(spark, sf_dir, "orders")
+    o = catalog_table(spark, sf_dir, "orders")
     day = F.greatest(
         F.lit(0),
         F.datediff(F.col("o_orderdate"), F.lit("1992-01-01").cast("timestamp")),
@@ -685,7 +682,7 @@ def ann_ivfpq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_rerank_topk_prebuilt,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     ivf_dir = os.path.join(_index_root(sf_dir), "ivf16")
     pq_dir = os.path.join(_index_root(sf_dir), "pq8x16")
     ensure_ivf_medoid_index(emb, ivf_dir, n_cells=16)
@@ -764,7 +761,7 @@ def dim_truncation_fidelity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_topk_brute,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     trunc = emb.select(
         "vec_id", F.slice(F.col("embedding"), 1, _TRUNC_DIM).alias("embedding")
     )
@@ -851,7 +848,7 @@ def _ensure_version_history(spark: SparkSession, sf_dir: str) -> str:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = os.path.join(_versioned_root(sf_dir), "docs_table")
     v1 = docs.filter(F.col("doc_id") % 3 == 0)
 
@@ -970,7 +967,7 @@ def incremental_dedup_bloom_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_member_cond,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     seen = (
         docs.filter(F.col("doc_id") % 3 == 0)
         .select(F.md5("text").alias("__h"))

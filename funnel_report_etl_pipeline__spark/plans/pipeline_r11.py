@@ -37,12 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.plans.registry import register
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 _DIM = 64  # testdata embeddings dimension (n_segments * seg_dim)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _index_root(sf_dir: str) -> str:
@@ -110,6 +107,7 @@ def versioned_vacuum_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from funnel_report_etl_pipeline__spark.sources.sinks import (
+        _read_dir,
         append_versioned,
         read_versioned,
         table_versions,
@@ -117,7 +115,7 @@ def versioned_vacuum_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_vacuum_audit_")
     try:
         v1 = docs.filter(F.col("doc_id") % 3 == 0)
@@ -136,7 +134,7 @@ def versioned_vacuum_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             orphan_data = [v for v in victims if not v.startswith("_versions")]
             orphan_rows = 0
             for rel in orphan_data:
-                orphan_rows += spark.read.parquet(os.path.join(table, rel)).count()
+                orphan_rows += _read_dir(spark, os.path.join(table, rel)).count()
             return (
                 phase,
                 len(table_versions(spark, table)),
@@ -297,7 +295,7 @@ def ann_ivfpq_residual_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_residual_topk_prebuilt,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     ivf_dir = os.path.join(_index_root(sf_dir), "ivf16")
     res_dir = os.path.join(_index_root(sf_dir), "respq8x16")
     ensure_ivf_medoid_index(emb, ivf_dir, n_cells=16)
@@ -366,7 +364,7 @@ def versioned_compact_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_compact_audit_")
     try:
         write_versioned(docs.filter(F.col("doc_id") % 4 == 0), table, id_col="doc_id")
@@ -462,7 +460,7 @@ def late_interaction_maxsim_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width pivot keeps the double-addition order engine-exact."""
     from funnel_report_etl_pipeline__spark.operators.similarity import maxsim_topk
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     toks = emb.select(
         (F.col("vec_id") % 50).alias("doc"),
         F.floor(F.col("vec_id") / 50).alias("tp"),
@@ -585,12 +583,13 @@ def late_interaction_maxsim_pruned_q(spark: SparkSession, sf_dir: str) -> DataFr
         _nearest_medoid_cells,
         maxsim_topk,
     )
+    from funnel_report_etl_pipeline__spark.sources.sinks import _read_dir
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     ivf_dir = os.path.join(_index_root(sf_dir), "ivf16")
     ensure_ivf_medoid_index(emb, ivf_dir, n_cells=16)
-    med = spark.read.parquet(os.path.join(ivf_dir, "cells.parquet"))
-    assign = spark.read.parquet(os.path.join(ivf_dir, "assignments.parquet"))
+    med = _read_dir(spark, os.path.join(ivf_dir, "cells.parquet"))
+    assign = _read_dir(spark, os.path.join(ivf_dir, "assignments.parquet"))
 
     toks = emb.select(
         F.col("vec_id"),
@@ -738,7 +737,7 @@ def rrf_trimodal_fusion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long"),
     ).select("doc_id", "sem_rank")
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     corpus_toks = emb.select(
         F.col("vec_id").alias("doc"),
         F.lit(0).cast("long").alias("tp"),
@@ -853,7 +852,7 @@ def versioned_tombstone_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_tombstone_audit_")
     try:
         write_versioned(docs.filter(F.col("doc_id") % 3 < 2), table, id_col="doc_id")

@@ -29,10 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 
 # ---------------------------------------------------------------------------
@@ -84,7 +81,7 @@ def ann_ivf_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     root = tempfile.mkdtemp(prefix="spark_graft_ann_inc_")
     try:
         low = [
@@ -219,7 +216,7 @@ def versioned_merge_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_merge_audit_")
     try:
         write_versioned(docs.filter(F.col("doc_id") % 4 < 2), table, id_col="doc_id")

@@ -27,10 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 
 # ---------------------------------------------------------------------------
@@ -113,7 +110,7 @@ def versioned_span_feed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_span_feed_")
     try:
         write_versioned(docs.filter(F.col("doc_id") % 4 < 2), table, id_col="doc_id")
@@ -208,7 +205,7 @@ def versioned_partition_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     table = tempfile.mkdtemp(prefix="spark_graft_part_audit_")
     try:
         write_versioned(
@@ -341,7 +338,7 @@ def versioned_timetravel_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_timetravel_")
     try:
         write_versioned(docs.filter(F.col("doc_id") % 3 == 0), table, id_col="doc_id")

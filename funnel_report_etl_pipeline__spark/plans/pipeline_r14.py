@@ -33,10 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 
 # ---------------------------------------------------------------------------
@@ -139,7 +136,7 @@ def dedup_minhash_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_mhi_tbl_")
     root = tempfile.mkdtemp(prefix="spark_graft_mhi_idx_")
     idx = f"{root}/idx"
@@ -254,7 +251,7 @@ def versioned_update_span_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     pick = min(r["lang"] for r in docs.select("lang").distinct().collect())
     table = tempfile.mkdtemp(prefix="spark_graft_updspan_")
     try:
@@ -372,7 +369,7 @@ def versioned_recommit_cdc_audit_q(spark: SparkSession, sf_dir: str) -> DataFram
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_cdc_")
     try:
         write_versioned(docs.filter(F.col("doc_id") % 3 == 0), table, id_col="doc_id")
@@ -477,7 +474,7 @@ def versioned_sql_timetravel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "text")
     table = tempfile.mkdtemp(prefix="spark_graft_sqltt_")
     views = ("r14_hist_v1", "r14_hist_head", "r14_hist_ts2")
     try:

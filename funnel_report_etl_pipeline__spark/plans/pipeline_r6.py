@@ -20,15 +20,12 @@ from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.functions.hints import maybe_broadcast
 from funnel_report_etl_pipeline__spark.plans.registry import register
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 from funnel_report_etl_pipeline__spark.schemas import (
     DISCOVERY_COLUMNS,
     OTP_COLUMNS,
     STAGE_COLUMNS,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # Entity key: user_id % 17, as the reference's string Entity_ID. The four
@@ -52,7 +49,7 @@ def _entity_inputs(
     trunc/cast semantics are exact on both engines); discovery cells blank
     out every 7th row to exercise the NULLIF('') path
     (report_engine.py:149-153)."""
-    ev = _t(spark, sf_dir, "events").withColumn(
+    ev = catalog_table(spark, sf_dir, "events").withColumn(
         "entity", (F.col("user_id") % 17).cast("string")
     )
     ent = F.col("entity").cast("int")
@@ -263,7 +260,7 @@ def incremental_daily_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the merge order observable). At 100 TB this is the difference
     between scanning one day and scanning the table: the snapshot is
     day-partitioned parquet and only the delta day is read."""
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     day = F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd").alias("day")
 
     def partial(df: DataFrame) -> DataFrame:
@@ -316,7 +313,7 @@ def linear_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     one purchase-grain count window, one view-grain re-aggregation. The
     per-share division is a single IEEE double op; the SUM over shares
     goes through decimal so credit totals are partitioning-independent."""
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"), "user_id", F.col("ts").alias("vts")
     )
@@ -388,7 +385,7 @@ def vocab_tokenize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort); the id join is a broadcast against token-grain rows — token
     grain is inherent to tokenization, and the shuffle is one grouped
     reassembly keyed by doc_id."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "tok")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
@@ -453,7 +450,7 @@ def fuzzy_dedup_names_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplicated NAME table, not the row-grain part table: at 100 TB the
     name cardinality is what matters, and the edit-distance compute is
     |block|² per block, never |corpus|²."""
-    part = _t(spark, sf_dir, "part")
+    part = catalog_table(spark, sf_dir, "part")
     names = (
         part.groupBy("p_name")
         .agg(F.count("*").cast("long").alias("n_parts"))
@@ -542,7 +539,7 @@ def pagerank_coorder_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2.3 s measured at sf0.1); on a cluster the same repartition is what
     # co-locates the order groups
     li = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition(spark.sparkContext.defaultParallelism, "l_orderkey")
     )
@@ -646,7 +643,7 @@ def skew_key_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped count, a 1-row broadcast total, and a TakeOrdered top-k; the
     share is a single double division (deterministic, no accumulated
     float order)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     c = ev.groupBy("user_id").agg(F.count("*").cast("long").alias("n_events"))
     tot = c.agg(F.sum("n_events").cast("long").alias("total"))
     w = Window.orderBy(F.col("n_events").desc(), F.col("user_id"))
@@ -684,7 +681,7 @@ def doc_length_percentile_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark exact `percentile` pairs with DuckDB `quantile_cont` (both
     linear interpolation — the `median_order_gap` pattern); the 1-row
     bounds frame broadcasts into the per-source scan."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     b = docs.agg(
         F.percentile("n_chars", F.lit(0.25)).alias("lo"),
         F.percentile("n_chars", F.lit(0.99)).alias("hi"),
@@ -746,7 +743,7 @@ def snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     populated. At 100 TB: both sides bucket/partition on the key, the
     join is co-located, and only (key, hash) ever shuffles — the content
     hash travels instead of the row. One summary row per class."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog_table(spark, sf_dir, "orders")
 
     def snap(df: DataFrame, price) -> DataFrame:
         return df.select(
@@ -837,7 +834,7 @@ def triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench scale by AQE; swap to shuffle_hash when |V| outgrows the
     driver. Wedges are a degree aggregate, exact integers throughout."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition(32, "l_orderkey")
     )
@@ -954,7 +951,7 @@ def _km_final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame twin of ``_KM_CTES``: the (vec_id, cid) assignment after
     2 Lloyd iterations. See ``kmeans_lloyd_clusters_q`` for the exactness
     and scale argument."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     q = emb.select(
         "vec_id", F.posexplode("embedding").alias("dim", "x")
     ).select(
@@ -1079,7 +1076,7 @@ def ks_drift_value_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     window ORDER BY sorts NULLs first while DuckDB sorts them last, so an
     unfiltered NULL would silently shift the prefix sets apart (a KS over
     "undefined" observations is meaningless anyway)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = catalog_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     s = ev.select(
         "value",
         F.when(F.dayofmonth("ts") <= 15, 1).otherwise(0).alias("in_a"),
@@ -1153,17 +1150,17 @@ def shipping_priority_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are engine-deterministic."""
     cut = F.lit("1998-07-01 00:00:00").cast("timestamp")
     cust = (
-        _t(spark, sf_dir, "customer")
+        catalog_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        catalog_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") < cut)
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") > cut)
         .select("l_orderkey", "l_extendedprice", "l_discount")
     )
@@ -1264,7 +1261,7 @@ def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop being few."""
     from funnel_report_etl_pipeline__spark.operators.similarity import _dot, _norm
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = catalog_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("q_label"),
@@ -1359,11 +1356,11 @@ def referential_integrity_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame
             .select(F.lit(fk).alias("fk"), "n_child", "n_orphans")
         )
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    part = _t(spark, sf_dir, "part")
+    li = catalog_table(spark, sf_dir, "lineitem")
+    orders = catalog_table(spark, sf_dir, "orders")
+    cust = catalog_table(spark, sf_dir, "customer")
+    nation = catalog_table(spark, sf_dir, "nation")
+    part = catalog_table(spark, sf_dir, "part")
 
     okeys = orders.select(F.col("o_orderkey").alias("__ok")).distinct()
     pkeys = part.select(F.col("p_partkey").alias("__pk")).distinct()
@@ -1436,7 +1433,7 @@ def partition_freshness_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, hour) — map-side combinable, grain bounded by types × hours
     regardless of event volume — then a per-type lag window over the
     tiny distinct frame and a 1-row broadcast global span."""
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     h = ev.select(
         "event_type", F.expr("unix_micros(ts) DIV 3600000000").alias("hr")
     ).distinct()
@@ -1496,7 +1493,7 @@ def cross_source_duplication_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join — the single-source tail (most grams) never joins."""
     from funnel_report_etl_pipeline__spark.operators.dedup import gram_rows
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = catalog_table(spark, sf_dir, "documents").select(
         F.col("doc_id"), F.col("source").alias("src"), "text"
     )
     g = (
@@ -1552,7 +1549,7 @@ def kmeans_cluster_purity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cluster argmax with a lowest-label tie-break — grain bounded by
     k × labels. Purity is one exact division of integers."""
     a2 = _km_final_assignment(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
+    emb = catalog_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     lab = (
         a2.join(emb, "vec_id")
         .groupBy("cid", "label")
@@ -1607,8 +1604,8 @@ def local_supplier_volume_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the doubles are partitioning-independent."""
     cut_lo = F.lit("1996-01-01 00:00:00").cast("timestamp")
     cut_hi = F.lit("1998-01-01 00:00:00").cast("timestamp")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation").join(
+    region = catalog_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = catalog_table(spark, sf_dir, "nation").join(
         F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey", "n_name")
     # the size-gated hint wraps the customer SCAN, never the
@@ -1618,14 +1615,14 @@ def local_supplier_volume_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this 150-row frame at sf0.001 — which would trip any size gate and
     # pin a needless shuffle (round-9 hints lesson). The bounded nation
     # frame (≤25 rows) broadcasts unconditionally after.
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    cust = catalog_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     orders = (
-        _t(spark, sf_dir, "orders")
+        catalog_table(spark, sf_dir, "orders")
         .filter((F.col("o_orderdate") >= cut_lo) & (F.col("o_orderdate") < cut_hi))
         .select("o_orderkey", "o_custkey")
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    supp = catalog_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    li = catalog_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     rev = (
@@ -1679,7 +1676,7 @@ def revenue_anomaly_days_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     order volume, and all flagged-day arithmetic is the same IEEE ops on
     identical inputs in both engines."""
     d = (
-        _t(spark, sf_dir, "orders")
+        catalog_table(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("day"))
         .agg(
             F.sum(F.col("o_totalprice").cast("decimal(22,4)"))

@@ -31,10 +31,7 @@ from funnel_report_etl_pipeline__spark.plans.pipeline_r5 import (
     bm25_scored_frame,
 )
 from funnel_report_etl_pipeline__spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 
 # ---------------------------------------------------------------------------
@@ -100,7 +97,7 @@ def user_rfm_segments_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     message if the purchasing-user count ever exceeds the accuracy
     regime, instead of letting the gate surface an opaque hash
     mismatch."""
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     u = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
@@ -219,13 +216,13 @@ def nation_market_share_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem rows are pre-pruned by the broadcast part filter before the
     orders join. Volume sums in decimal(22,4) (partition-invariant); the
     share is one double division per year row."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    li = catalog_table(spark, sf_dir, "lineitem")
+    orders = catalog_table(spark, sf_dir, "orders")
+    part = catalog_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    cust = catalog_table(spark, sf_dir, "customer")
+    sup = catalog_table(spark, sf_dir, "supplier")
+    nation = catalog_table(spark, sf_dir, "nation")
+    region = catalog_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     cn = nation.alias("cn")
     sn = nation.alias("sn")
     vol = (
@@ -294,11 +291,11 @@ def product_type_profit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the key both sides already carry. Per-line profit is computed in
     decimal BEFORE the sum (one rounding point per row, same on both
     engines) so the grouped total is partition-invariant."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders")
+    li = catalog_table(spark, sf_dir, "lineitem")
+    part = catalog_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    sup = catalog_table(spark, sf_dir, "supplier")
+    nation = catalog_table(spark, sf_dir, "nation")
+    orders = catalog_table(spark, sf_dir, "orders")
     profit_line = (
         F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
         - F.col("p_retailprice") * F.col("l_quantity") * F.lit(0.1)
@@ -356,11 +353,11 @@ def volume_shipping_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Supplier/customer broadcast through size-gated hints (nation hard);
     the lineitem⋈orders fact join is the single shuffle. Revenue in
     decimal(22,4)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = catalog_table(spark, sf_dir, "lineitem")
+    sup = catalog_table(spark, sf_dir, "supplier")
+    orders = catalog_table(spark, sf_dir, "orders")
+    cust = catalog_table(spark, sf_dir, "customer")
+    nation = catalog_table(spark, sf_dir, "nation")
     sn = nation.alias("sn")
     cn = nation.alias("cn")
     pair = (
@@ -415,13 +412,13 @@ def returned_item_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-20 is a
     TakeOrderedAndProject on (revenue DESC, c_custkey) — fully
     tie-broken, never a global sort."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = catalog_table(spark, sf_dir, "customer")
+    orders = catalog_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = _t(spark, sf_dir, "nation")
+    li = catalog_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    nation = catalog_table(spark, sf_dir, "nation")
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -465,8 +462,8 @@ def customer_order_distribution_q(spark: SparkSession, sf_dir: str) -> DataFrame
     which is exactly what Catalyst picks; the two aggregations are
     key-grain with map-side partials. COUNT(o_orderkey) — not COUNT(*) —
     so the null-extended row counts zero."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
+    cust = catalog_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = catalog_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -500,11 +497,11 @@ def promo_revenue_pct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole query is one map-side conditional aggregation — zero hash
     exchanges beyond the final 1-row gather. Both decimal sums are exact,
     so the single double division is the only rounding point."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = catalog_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-05-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-06-01 00:00:00").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part")
+    part = catalog_table(spark, sf_dir, "part")
     rev = (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))).cast(
         "decimal(22,4)"
     )
@@ -561,9 +558,9 @@ def large_volume_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a size-gated hint. l_quantity sums are whole numbers stored as double
     (exact integers < 2^53 — order-independent), cast through DOUBLE
     identically in the oracle."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    cust = catalog_table(spark, sf_dir, "customer")
+    orders = catalog_table(spark, sf_dir, "orders")
+    li = catalog_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("__sq"))
@@ -612,14 +609,14 @@ def lapsed_highvalue_customers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the positive aggregate, recent-orders keys pre-aggregated then ANTI
     join (at scale the distinct recent-buyer key set shuffles; the date
     filter pushes to the orders scan), one grouped aggregate."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = catalog_table(spark, sf_dir, "customer")
     bal = F.col("c_acctbal").cast("decimal(22,4)")
     pos = cust.filter(F.col("c_acctbal") > 0).agg(
         F.sum(bal).cast("decimal(38,4)").alias("total_pos"),
         F.count("*").cast("long").alias("n_pos"),
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        catalog_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-01-01 00:00:00").cast("timestamp"))
         .select(F.col("o_custkey").alias("c_custkey"))
         .distinct()

@@ -39,10 +39,7 @@ from funnel_report_etl_pipeline__spark.operators.dedup import (
     minhash_signatures,
 )
 from funnel_report_etl_pipeline__spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 
 # ---------------------------------------------------------------------------
@@ -83,11 +80,11 @@ def small_quantity_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal(22,4); the /7.0 'yearly' scaling (Q17's constant) is the
     single rounding point. Oracle keeps the textbook correlated form —
     the green hash row proves the decorrelation is semantics-preserving."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = catalog_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     brand = (
-        _t(spark, sf_dir, "part")
+        catalog_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") == "Brand#13")
         .select("p_partkey")
     )
@@ -147,7 +144,7 @@ def top_supplier_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint. Ties: revenue compares as exact decimal(22,4) — both
     engines keep every max-tied supplier, no arbitrary pick; the final
     cast to double happens after the comparison."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = catalog_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
@@ -162,7 +159,7 @@ def top_supplier_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     mx = rev.agg(F.max("total_revenue").alias("__mx"))
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = catalog_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         rev.crossJoin(F.broadcast(mx))
         .filter(F.col("total_revenue") == F.col("__mx"))
@@ -209,10 +206,10 @@ def disjunctive_brand_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a codegen'd filter. One 1-row aggregate, no hash exchange at all.
     Revenue in decimal(22,4); quantity bounds compare whole-number doubles
     — exact on both engines."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = catalog_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    part = catalog_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     q = F.col("l_quantity")
     cond = (
         (
@@ -309,12 +306,12 @@ def sole_return_supplier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything downstream is (order, supplier)-grain. This chain form is
     registered deliberately as the EXISTS/NOT-EXISTS plan-shape evidence
     the round-7 verdict asked for."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = catalog_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_returnflag"
     )
     ret = li.filter(F.col("l_returnflag") == "R").select("l_orderkey", "l_suppkey")
     ord_f = (
-        _t(spark, sf_dir, "orders")
+        catalog_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
@@ -333,7 +330,7 @@ def sole_return_supplier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l1.l_suppkey") != F.col("l3.l_suppkey")),
         "left_anti",
     )
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = catalog_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         sole.join(maybe_broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
@@ -414,7 +411,7 @@ def embedding_drift_by_label_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     array); at extreme corpus sizes the explode + grouped-dot shape
     (three row×dim-grain shuffles) trades wire volume for codegen and
     becomes preferable — same integer-exact semantics either way."""
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = catalog_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         F.transform(
@@ -543,7 +540,7 @@ def minhash_band_skew_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     count with map-side partials and the audit itself is a 8-row final
     agg. Only (doc_id, band) pairs ever shuffle — never text. All
     outputs are integers: bit-exact on any engine and any partitioning."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     grams = drop_frequent_grams(
         gram_rows(docs, id_col="doc_id", text_col="text", ngram=3), 1000
     )
@@ -604,12 +601,12 @@ def order_priority_return_check_q(spark: SparkSession, sf_dir: str) -> DataFrame
     semi join stops at the first match per key instead of multiplying
     rows like an inner join + distinct would. One priority-grain count
     follows with map-side partials. All outputs integers."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = catalog_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
     ret = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
         .select("l_orderkey")
     )
@@ -664,7 +661,7 @@ def sole_return_supplier_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the first aggregate is order-grain or smaller; the orders 'F'
     semi-join and both aggs key on the same column family for AQE
     exchange reuse."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = catalog_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_returnflag"
     )
     os_grain = li.groupBy("l_orderkey", "l_suppkey").agg(
@@ -683,11 +680,11 @@ def sole_return_supplier_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "__sole", "__n_r_lines")
     )
     ord_f = (
-        _t(spark, sf_dir, "orders")
+        catalog_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = catalog_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         per_order.join(ord_f, per_order.l_orderkey == ord_f.o_orderkey, "left_semi")
         .join(maybe_broadcast(sup), F.col("__sole") == F.col("s_suppkey"))
@@ -741,7 +738,7 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic arithmetic — identical on any engine, no windows, no
     state. (Tail chunks are shorter than the window; every token position
     is covered by construction since stride < window.)"""
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = catalog_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("__toks")
     )
     starts = F.sequence(
@@ -818,8 +815,8 @@ def min_cost_supplier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the gate hints at gate scale and degrades to AQE past it.
     Determinism: each division is one IEEE op on both engines; MIN and
     the equality compare see bit-identical doubles."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    nation = _t(spark, sf_dir, "nation")
+    region = catalog_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    nation = catalog_table(spark, sf_dir, "nation")
     eu_keys = [
         r.n_nationkey
         for r in nation.join(
@@ -829,16 +826,16 @@ def min_cost_supplier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
     eu_sup = (
-        _t(spark, sf_dir, "supplier")
+        catalog_table(spark, sf_dir, "supplier")
         .filter(F.col("s_nationkey").isin(eu_keys))
         .select("s_suppkey", "s_name", "s_nationkey")
     )
     promo = (
-        _t(spark, sf_dir, "part")
+        catalog_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "PROMO")
         .select("p_partkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = catalog_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_suppkey",
         (F.col("l_extendedprice") / F.col("l_quantity")).alias("__unit"),
@@ -908,12 +905,12 @@ def important_nation_value_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides of the share compare go through one correctly-rounded
     decimal-to-double cast and one IEEE multiply each, identical ops on
     both engines. The output cast to double reuses the same exact sum."""
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    sup = catalog_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = catalog_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     sup_nat = sup.join(
         F.broadcast(nation), sup.s_nationkey == nation.n_nationkey
     ).select("s_suppkey", "n_name")
-    li = _t(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice")
+    li = catalog_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice")
     val = (
         li.join(maybe_broadcast(sup_nat), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("n_name")
@@ -966,16 +963,16 @@ def supplier_part_variety_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the group re-agg — no corpus-grain window, no expand blowup
     (single distinct column)."""
     bad = (
-        _t(spark, sf_dir, "supplier")
+        catalog_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 1800)
         .select("s_suppkey")
     )
     pt = (
-        _t(spark, sf_dir, "part")
+        catalog_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") != "Brand#1")
         .select("p_partkey", "p_brand", "p_type")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = catalog_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(maybe_broadcast(pt), li.l_partkey == pt.p_partkey)
         .join(
@@ -1040,11 +1037,11 @@ def excess_shipment_suppliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     are whole-number doubles, so the sums and the x5/x4 integer
     multiplies are exact on both engines."""
     lg = (
-        _t(spark, sf_dir, "part")
+        catalog_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("large%"))
         .select("p_partkey")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = catalog_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
     )
@@ -1061,7 +1058,7 @@ def excess_shipment_suppliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = catalog_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return sup.join(
         keys, sup.s_suppkey == keys.l_suppkey, "left_semi"
     ).orderBy("s_suppkey")
@@ -1166,7 +1163,7 @@ def minhash_jaccard_calibration_q(spark: SparkSession, sf_dir: str) -> DataFrame
     and the calibration table is a ≤29-row final aggregate. Integer
     counts everywhere; the two ratios are single IEEE divisions of exact
     integers — bit-identical on both engines."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     # Round-15 A/B note: localCheckpointing grams/sigs to collapse the
     # 6x/4x subtree recomputation was tried and REVERTED — at sf0.1 in
     # the 1 GB bench JVM the materialization (token-grain rows pinned as
@@ -1264,7 +1261,7 @@ def k_anonymity_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     division + floor on both engines, exact at any partitioning (banding
     IS the generalization step of the k-anonymity protocol, so the audit
     and the release transform share code by construction)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = catalog_table(spark, sf_dir, "customer")
     g = cust.groupBy(
         "c_mktsegment",
         "c_nationkey",
@@ -1318,7 +1315,7 @@ def forecast_revenue_change_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal(22,4) after the one IEEE multiply both engines round
     identically. Selectivity checked at every SF: 152/6k rows at
     sf0.001, 1.25k/60k at 0.01, 12.2k/600k at 0.1."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -1370,8 +1367,8 @@ def shipping_class_priority_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale with the corpus, AQE may still pick one at toy SF), and the
     2-group final agg is map-side-combined. Counting only — every value
     integer-exact on any partitioning."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    orders = catalog_table(spark, sf_dir, "orders")
+    li = catalog_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("A", "R")
         & (F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-01-01 00:00:00").cast("timestamp"))
@@ -1432,7 +1429,7 @@ def l_diversity_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     any partitioning. Customers with no orders have no observed
     sensitive value and drop out (inner join), matching the release
     semantics: only rows that WOULD ship can leak."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = catalog_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
         "c_nationkey",
@@ -1440,7 +1437,7 @@ def l_diversity_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bal_bucket"
         ),
     )
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
+    orders = catalog_table(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
     grp = (
         orders.join(
             maybe_broadcast(cust), orders.o_custkey == cust.c_custkey
@@ -1562,8 +1559,8 @@ def bloom_prefilter_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts the dominant fact shuffle by the filter's selectivity for the
     cost of one 128 KiB broadcast and k codegen'd probes per row.
     Beyond-reference (the reference has no relational engine)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = catalog_table(spark, sf_dir, "orders")
+    li = catalog_table(spark, sf_dir, "lineitem")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
         "o_orderkey"
     )
@@ -1629,7 +1626,7 @@ def weighted_reservoir_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — a bounded per-partition heap, merged on the
     driver; no global sort, no corpus-grain window (the rnk window runs
     over the 64 already-selected rows). Beyond-reference."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13), 16, 10).cast(
         "long"
     )
@@ -1743,13 +1740,13 @@ def t_closeness_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the gv -> gsize -> tg chain re-aggregates the same QI keys so
     the exchanges are QI-cardinality-sized.  Output is the band
     histogram: <= 21 rows, never corpus-grain."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = catalog_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
         "c_nationkey",
         F.floor(F.col("c_acctbal") / F.lit(2000)).cast("long").alias("bal_bucket"),
     )
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
+    orders = catalog_table(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
     qi = ["c_mktsegment", "c_nationkey", "bal_bucket"]
     j = orders.join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
     gv = j.groupBy(*qi, "o_orderpriority").agg(
@@ -1888,7 +1885,7 @@ def cms_frequency_calibration_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth is a filter of the SAME key-grain frame, so the second
     corpus scan disappears too. The probe stage joins a fixed key list
     against the broadcast-sized sketch (24k rows, corpus-independent)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog_table(spark, sf_dir, "lineitem")
     seeds = F.array(*[F.lit(s) for s in range(CMS_D)])
     # key-grain pre-aggregation: the one corpus-sized pass. sum(count)
     # per (seed, bucket) == count(*) over the exploded rows, exactly.
@@ -2010,7 +2007,7 @@ def conversion_lift_ztest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     into ONE row — no hash exchange at all (the one Exchange is the
     SinglePartition gather every scalar aggregate pays), no join, output
     bounded at 1 row."""
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     weekend = F.weekday("ts") >= 5
     purchase = F.col("event_type") == "purchase"
     c = ev.agg(
@@ -2117,7 +2114,7 @@ def zipf_token_slope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``orderBy().limit(200)`` plans as TakeOrderedAndProject (bounded
     per-partition heaps, no global sort); the rank window runs over the
     200-row constant frame, and the moments collapse to 1 row."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     t = docs.select(F.explode(F.split(F.col("text"), " ")).alias("term"))
     f = t.groupBy("term").agg(F.count("*").cast("long").alias("freq"))
     top = f.orderBy(F.col("freq").desc(), "term").limit(ZIPF_TOP)
@@ -2218,7 +2215,7 @@ def jaccard_prefix_filter_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame
     as exact INTEGER arithmetic (floor((4*sz+4)/5) — no 0.8 float whose
     binary representation could flip a boundary), and the final Jaccard
     mirrors the exact twin's expression tree bit-for-bit."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     g = gram_rows(docs, "doc_id", "text", 3).withColumnRenamed("id", "doc_id")
     sizes = g.groupBy("doc_id").agg(F.count("*").alias("sz"))
     gfreq = g.groupBy("gram").agg(F.count("*").alias("df"))
@@ -2329,7 +2326,7 @@ def degree_assortativity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback) before ONE scalar moment aggregate — no corpus-pair
     materialization anywhere."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition(32, "l_orderkey")
     )
@@ -2421,7 +2418,7 @@ def weighted_sample_per_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sources x k), never corpus-grain, and the output is a constant
     |sources| x 8 frame.  This is the per-group analogue of the global
     sampler's TakeOrderedAndProject."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     u = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13), 16, 10
     ).cast("long")
@@ -2563,7 +2560,7 @@ def bpe_merge_induction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_wf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE corpus-scale pass: the word-frequency table."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
@@ -2733,7 +2730,7 @@ def _k_core_peel(spark: SparkSession, sf_dir: str, k: int, rounds: int) -> DataF
     10.3 s warm for identical output."""
     par = spark.sparkContext.defaultParallelism
     li = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition(par, "l_orderkey")
     )

@@ -43,10 +43,6 @@ from funnel_report_etl_pipeline__spark.plans.registry import register
 from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 # ---------------------------------------------------------------------------
 # Grouped OLS regression from exact moment sums
 # ---------------------------------------------------------------------------
@@ -94,10 +90,10 @@ def ols_brand_price_quantity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-accumulation order is engine- and partitioning-dependent.
     At 100 TB: the only corpus-grain work is the scan + map-side
     partial; nothing but 25 moment rows crosses the cluster."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = catalog_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    part = catalog_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     m = (
         li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
@@ -168,7 +164,7 @@ def chi_square_flag_status_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     product, the documented scale-irrelevant case. At 100 TB nothing
     but the cell counts leaves the scan stage."""
     cells = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("observed"))
     )
@@ -236,7 +232,7 @@ def markov_event_transitions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     double divisions — exact inputs, one rounding, identical on both
     engines. At 100 TB: one user-grain shuffle + one 25-row aggregate;
     nothing else moves."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = catalog_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -314,8 +310,8 @@ def assoc_rules_brand_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF-portable). At 100 TB the one growing stage is the basket
     aggregate on uniform order keys; a basket-size cap would bound the
     explode the same way the LSH stop-gram guard does."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = catalog_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    part = catalog_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = (
         li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy(F.col("l_orderkey").alias("okey"))
@@ -406,7 +402,7 @@ def priority_change_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     because every stage is customer-partitioned — the 100 TB SCD2 run
     is the same two windows, one exchange, no corpus-grain state."""
     o = (
-        _t(spark, sf_dir, "orders")
+        catalog_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") < 150)
         .select("o_custkey", "o_orderkey", "o_orderdate", "o_orderpriority")
     )
@@ -483,7 +479,7 @@ def ewma_revenue_anomaly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the one corpus aggregate, the documented post-agg exemption).
     """
     d = (
-        _t(spark, sf_dir, "orders")
+        catalog_table(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("day"))
         .agg(dsum("o_totalprice").alias("rev"))
     )
@@ -563,7 +559,7 @@ def benchmark_contamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is one scan + one doc-grain shuffle; the broadcast is
     benchmark-sized (fixed), honoring the no-corpus-sized-broadcast
     invariant."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     bench_grams = (
         gram_rows(docs.filter(F.col("source") == "src0"), ngram=4)
         .select(F.md5("gram").alias("h"))
@@ -658,7 +654,7 @@ def community_modularity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot pin. At 100 TB: one fact self-join (the probed co-order
     shape), |V|-grain degree frame, vocab-grain output."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition(32, "l_orderkey")
     )
@@ -670,7 +666,7 @@ def community_modularity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    lab = _t(spark, sf_dir, "part").select(
+    lab = catalog_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("id"), F.col("p_brand").alias("community")
     )
     lu = lab.withColumnsRenamed({"id": "u", "community": "cu"})
@@ -822,8 +818,8 @@ def gini_impurity_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment the closing casts round, identically on both engines).
     Customer is a size-gated dimension broadcast. Output is
     segment-grain (5 rows) whatever the corpus size."""
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = catalog_table(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
+    cust = catalog_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     pc = (
         orders.join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy(
@@ -902,7 +898,7 @@ def session_bounce_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     /1e6 seconds conversion as a single IEEE op on both engines. At
     100 TB: user-grain shuffle, session-grain collapse, calendar-
     bounded output."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    ev = catalog_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     is_new = (
@@ -992,7 +988,7 @@ def lang_id_confusion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate."""
     from funnel_report_etl_pipeline__spark.operators.text import lang_id
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    docs = catalog_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     pred = lang_id(docs).select("doc_id", "pred_lang")
     gold = docs.select("doc_id", F.col("lang").alias("gold_lang"))
     c = (
@@ -1061,7 +1057,7 @@ def two_hop_reach_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge build dominates (the probed co-order shape); everything after
     it is K·degree²-bounded."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        catalog_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition(32, "l_orderkey")
     )
@@ -1190,7 +1186,7 @@ def table_profile_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct (engine-specific HLL — deliberately not
     hash-gated; `approx_distinct_users` carries that family's check
     pattern)."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog_table(spark, sf_dir, "orders")
 
     def prof(col: str, numeric, ts: bool = False):
         mn: F.Column | None
@@ -1275,7 +1271,7 @@ def weekday_seasonality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark 1=Sunday, DuckDB 0=Sunday). Revenue in exact decimal; one
     7-row frame, one 1-row global broadcast, one fixed division tree.
     """
-    o = _t(spark, sf_dir, "orders").select("o_orderdate", "o_totalprice")
+    o = catalog_table(spark, sf_dir, "orders").select("o_orderdate", "o_totalprice")
     weekday = (
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-05").cast("date")) % 7
     ).cast("long")
@@ -1350,8 +1346,8 @@ def winsorized_revenue_mean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact) and the closing division. At 100 TB swap the exact
     percentile for approx_percentile (GK) and keep the same clamp —
     `user_rfm_segments_approx` carries that pattern's gate story."""
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = catalog_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    cust = catalog_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     oc = orders.join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey).select(
         F.col("c_mktsegment").alias("segment"), F.col("o_totalprice").alias("price")
     )
@@ -1410,7 +1406,7 @@ def cumulative_unique_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     because each user contributes on precisely one day. All integers.
     At 100 TB: one user-grain shuffle (map-side combined), day-grain
     everything after."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
+    ev = catalog_table(spark, sf_dir, "events").select("user_id", "ts")
     firsts = ev.groupBy("user_id").agg(
         F.min(F.date_trunc("day", F.col("ts"))).alias("first_day")
     )
@@ -1456,7 +1452,7 @@ def asof_join_forward_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality reversed."""
     from funnel_report_etl_pipeline__spark.operators.asof import asof_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", "event_id", "ts"
     )
@@ -1508,7 +1504,7 @@ def asof_join_nearest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     safety, as in both gated sibling queries)."""
     from funnel_report_etl_pipeline__spark.operators.asof import asof_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", "event_id", "ts"
     )
@@ -1572,7 +1568,7 @@ def equidepth_price_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties at a boundary all land in the lower bucket. At 100 TB: swap
     the exact percentile for approx_percentile (GK) and keep the same
     binning chain — the `winsorized_revenue_mean` note's pattern."""
-    o = _t(spark, sf_dir, "orders").select("o_totalprice")
+    o = catalog_table(spark, sf_dir, "orders").select("o_totalprice")
     qs = [0.125, 0.250, 0.375, 0.500, 0.625, 0.750, 0.875]
     b = o.agg(
         *[
@@ -1633,7 +1629,7 @@ def window_dist_funcs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain is the nation key — scale-safe; the filter prunes the scan.
     """
     cust = (
-        _t(spark, sf_dir, "customer")
+        catalog_table(spark, sf_dir, "customer")
         .filter(F.col("c_nationkey") < 3)
         .select("c_nationkey", "c_custkey", "c_acctbal")
     )
@@ -1679,7 +1675,7 @@ def grouping_sets_mixed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the SQL front-end (the same raw-`spark.sql` gate path as
     `sql_correlated_subquery`) so the GROUPING SETS grammar itself is
     what is verified."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("__gs_orders")
+    catalog_table(spark, sf_dir, "orders").createOrReplaceTempView("__gs_orders")
     return spark.sql("""
         SELECT o_orderpriority, o_orderstatus,
                CAST(COUNT(*) AS BIGINT) AS n_orders,

@@ -46,12 +46,9 @@ from funnel_report_etl_pipeline__spark.functions.core import (
 )
 from funnel_report_etl_pipeline__spark.functions.hints import maybe_broadcast
 from funnel_report_etl_pipeline__spark.plans.registry import register
+from funnel_report_etl_pipeline__spark.sources.readers import catalog_table
 
 _SKETCH_ACCURACY = 1_000_000
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _regime_guard(spark: SparkSession, name: str, n_col: str):
@@ -109,7 +106,7 @@ def equidepth_price_histogram_approx_q(
     exact twin at boundary ties, which is the documented CBO-histogram
     trade (engines build equi-depth stats from sketches for exactly this
     reason). Per-bucket counts and [lo, hi] bounds stay exact."""
-    o = _t(spark, sf_dir, "orders").select("o_totalprice")
+    o = catalog_table(spark, sf_dir, "orders").select("o_totalprice")
     qs = ", ".join(str(q) for q in _OCTILES)
     b = o.agg(
         F.expr(
@@ -180,8 +177,8 @@ def winsorized_revenue_mean_approx_q(
     values, the standard trimmed-estimator formulation. Downstream is
     identical: LEAST/GREATEST clamp (selection — bit-exact), decimal sum,
     one closing division."""
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = catalog_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    cust = catalog_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     oc = orders.join(
         maybe_broadcast(cust), orders.o_custkey == cust.c_custkey
     ).select(
@@ -267,7 +264,7 @@ def session_bounce_stats_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame
     sketch quantile is an observed duration (DuckDB `quantile_disc`
     twin); the /1e6 seconds conversion is one IEEE op on both
     engines."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    ev = catalog_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     is_new = (
@@ -364,7 +361,7 @@ def media_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern). At 100 TB: one Python hop (Arrow, per-batch yield), two
     hash-grain exchanges; perceptual buckets cap at the 64×64 stub
     geometry grid, and a real pHash's wider space only shrinks them."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = catalog_table(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.substring("text", 1, 32), "UTF-8").alias("payload")
     )
     from funnel_report_etl_pipeline__spark.operators.multimodal import (
@@ -448,7 +445,7 @@ def modality_mixture_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         binary_meta,
     )
 
-    docs = attach_binary_payload(_t(spark, sf_dir, "documents"))
+    docs = attach_binary_payload(catalog_table(spark, sf_dir, "documents"))
 
     meta = binary_meta(docs, "payload", "doc_id")
     mcode = (
@@ -536,7 +533,7 @@ def time_decay_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized share and value·share are the same two IEEE ops on both
     engines, then decimal-summed. At 100 TB: the join shuffles on
     user_id once; windows are purchase-grain."""
-    ev = _t(spark, sf_dir, "events")
+    ev = catalog_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"), "user_id", F.col("ts").alias("vts")
     )
@@ -618,7 +615,7 @@ def phrase_proximity_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (proximity, doc_id) is a total order so the selected set is
     engine-deterministic; the trailing rnk window orders the 20
     already-selected rows."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = catalog_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     tok = d.select(
@@ -785,7 +782,7 @@ def dedup_cluster_quality_canon_q(spark: SparkSession, sf_dir: str) -> DataFrame
         _QC_W_WLEN,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = catalog_table(spark, sf_dir, "documents")
     pairs = minhash_dedup_pairs(docs, threshold=0.8).select("id_a", "id_b")
     clusters = dedup_assign_clusters(docs, pairs)
     toks = F.split(F.col("text"), " ")
@@ -863,7 +860,7 @@ def stratified_fixed_n_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stratum exchange, so the shuffle moves O(strata × n) survivors
     plus spill — not the corpus — and per-stratum state never exceeds n
     rows. At 100 TB: one stratum-keyed exchange of pre-limited rows."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    d = catalog_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     hk = F.md5(F.col("doc_id").cast("string"))
     w = Window.partitionBy("source").orderBy(hk, "doc_id")
     return (

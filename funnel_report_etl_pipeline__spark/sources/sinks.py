@@ -9,6 +9,8 @@ these helpers are that conversion plus the general partitioned writer.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -316,18 +318,14 @@ def ensure_training_shards(
     recomputed from the existing files (pinned by file-mtime tests). A
     mismatch rewrites shards + meta — atomically-enough for a
     single-writer daily job (concurrent writers need a lock or a
-    run-id-suffixed directory swap, out of scope here)."""
+    run-id-suffixed directory swap, out of scope here). The meta
+    (``<out_path>_meta.parquet``) is read and written locally
+    (`_read_meta` / `_write_meta`): an absent or unfinished one means a
+    first run; a corrupt one raises."""
     spark = df.sparkSession
     meta_path = out_path.rstrip("/") + "_meta.parquet"
 
-    def _saved_meta() -> dict | None:
-        try:
-            rows = spark.read.parquet(meta_path).collect()
-            return rows[0].asDict() if rows else None
-        except Exception:  # noqa: BLE001 — missing/garbled meta = first run
-            return None
-
-    m = _saved_meta()
+    m = _read_meta(meta_path)
     if change_token is not None:
         if (
             m is not None
@@ -353,10 +351,10 @@ def ensure_training_shards(
         ):
             return _shards_manifest(spark, out_path, id_col)
     manifest = write_training_shards(df, out_path, n_shards=n_shards, id_col=id_col)
-    spark.createDataFrame(
-        [(n_in, sig_in, n_shards, change_token or "")],
-        "n_rows long, sig long, n_shards long, token string",
-    ).coalesce(1).write.mode("overwrite").parquet(meta_path)
+    _write_meta(
+        meta_path,
+        {"n_rows": n_in, "sig": sig_in, "n_shards": n_shards, "token": change_token or ""},
+    )
     return manifest
 
 
@@ -533,6 +531,15 @@ def compact_small_files(
 # (pinned in tests/test_plan_shapes.py), before → after: MERGE 16 → 8,
 # compaction + vacuum 10 → 4, a read over one merge tombstone 3 → 2,
 # the single-merge change feed 6 → 4.
+#
+# The same pair serves the engine's other state. The one-row metas of
+# the ANN and MinHash indexes (operators/ann_index.py, dedup_index.py)
+# and of `ensure_training_shards` are written by `_write_meta` and read
+# by `_read_meta`, both on `_write_local_parquet_dir` /
+# `_read_manifest_dir`; the index artifacts (cells, assignments,
+# codebooks, codes, buckets, pairs, tombstone masks) are read through
+# `_read_dir`. The package has one footer-pinned scan
+# (`_pinned_schema_scan`) and one small-table writer/reader pair.
 
 _MANIFEST_BASE_SCHEMA = (
     "version long, n_rows long, content_checksum long, batch_id long, "
@@ -604,6 +611,30 @@ def _read_manifest_dir(d: str):
     return _pa.concat_tables(
         [_pq.read_table(f) for f in files], promote_options="default"
     )
+
+
+def _write_meta(path: str, meta: dict) -> None:
+    """Write a one-row meta table (an index's or a shard export's
+    parameters and content signature) locally, every value as a string —
+    the shape Spark's writer gave it. No Spark job."""
+    import pyarrow as pa
+
+    _write_local_parquet_dir(
+        path, pa.Table.from_pylist([{k: str(v) for k, v in meta.items()}])
+    )
+
+
+def _read_meta(path: str) -> dict | None:
+    """The one-row meta table at ``path`` as a dict, read locally (no
+    Spark job). None when it is absent or its write never finished (no
+    `_SUCCESS`): the caller builds afresh. A committed meta that cannot
+    be read raises — corrupt index state is not silently rebuilt."""
+    import os
+
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        return None
+    rows = _read_manifest_dir(path).to_pylist()
+    return rows[0] if rows else None
 
 
 def _id_checksum_col(id_col: str) -> F.Column:
@@ -943,9 +974,9 @@ _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 def _pinned_schema_scan(spark: SparkSession, dirs: list[str]) -> DataFrame | None:
     """Multi-path scan with the footer schema pre-read locally via pyarrow
-    and pinned — the round-14 ANN `_read_artifact` device applied to FLAT
-    versioned data directories (round-14 verdict Next #5): skips the JVM
-    schema-inference job every snapshot assembly otherwise pays per scan.
+    and pinned, for FLAT directories the engine wrote (versioned data
+    directories, index artifacts): skips the JVM schema-inference job a
+    plain read pays per scan.
     Only fires when the footer schema of EVERY part file in every
     directory is IDENTICAL — a schema-evolved chain (a delta that added a
     column) falls back to the mergeSchema reader, so evolution semantics
@@ -999,9 +1030,11 @@ def _pinned_schema_scan(spark: SparkSession, dirs: list[str]) -> DataFrame | Non
 
 
 def _read_dir(spark: SparkSession, path: str, flat: bool = True) -> DataFrame:
-    """Read one data directory (a commit's staged read-back, a tombstone
-    directory): footer-pinned when it is flat (no schema-inference job),
-    by discovery otherwise."""
+    """Read one directory the engine wrote — a commit's staged read-back,
+    a tombstone directory, an index artifact (ANN cells, assignments,
+    codebooks and codes; MinHash buckets and pairs; index tombstone
+    masks): footer-pinned when it is flat (no schema-inference job), by
+    discovery otherwise."""
     return (_pinned_schema_scan(spark, [path]) if flat else None) or spark.read.parquet(
         path
     )
@@ -1665,24 +1698,27 @@ def _span_commit_changes(
                 tomb_dirs.append(os.path.join(table_dir, tomb_rel))
                 merge_tomb_dirs.append(os.path.join(table_dir, tomb_rel))
     cdc_paths = [p for p in cdc_paths if p]
-    cdc = (
-        spark.read.option("mergeSchema", "true").parquet(*cdc_paths)
-        if cdc_paths
-        else None  # CDC dirs are flat — one multi-path scan is legal
-    )
+    # every span directory is read once, and each frame serves every use
+    # below. CDC dirs are flat: one footer-pinned multi-path scan, by
+    # mergeSchema only when their footers differ. Tombstone dirs may be
+    # partition-scoped (round 14): `_read_dir` reads those by discovery.
+    cdc = _read_add_dirs(spark, cdc_paths, None) if cdc_paths else None
+    adds = _read_add_dirs(spark, add_dirs, layout) if add_dirs else None
+    tombs = {d: _read_dir(spark, d) for d in tomb_dirs}
+
+    def tomb_ids(dirs: list[str]) -> DataFrame:
+        return functools.reduce(
+            DataFrame.unionByName, [tombs[d].select(F.col(id_col)) for d in dirs]
+        )
 
     parts: list[DataFrame] = []
-    if add_dirs:
+    if adds is not None:
         parts.append(
-            _read_add_dirs(spark, add_dirs, layout).select(
-                F.col(id_col), F.lit(1).cast("long").alias("__w")
-            )
+            adds.select(F.col(id_col), F.lit(1).cast("long").alias("__w"))
         )
     if tomb_dirs:
-        # tombstone dirs may be partition-scoped (round 14) — the
-        # per-dir union reader handles flat and partitioned alike
         parts.append(
-            _read_tomb_ids(spark, tomb_dirs, id_col).select(
+            tomb_ids(tomb_dirs).select(
                 F.col(id_col), F.lit(-1).cast("long").alias("__w")
             )
         )
@@ -1720,12 +1756,10 @@ def _span_commit_changes(
     # ---- update candidates, all derived from span artifacts ----
     pos_parts: list[DataFrame] = []
     neg_parts: list[DataFrame] = []
-    if add_dirs:
-        pos_parts.append(
-            _read_add_dirs(spark, add_dirs, layout).select(F.col(id_col))
-        )
+    if adds is not None:
+        pos_parts.append(adds.select(F.col(id_col)))
     if tomb_dirs:
-        neg_parts.append(_read_tomb_ids(spark, tomb_dirs, id_col))
+        neg_parts.append(tomb_ids(tomb_dirs))
     if cdc is not None:
         pos_parts.append(
             cdc.filter(F.col("_change_type") == "insert").select(F.col(id_col))
@@ -1736,7 +1770,7 @@ def _span_commit_changes(
     cand_parts: list[DataFrame] = []
     rewritten = None
     if merge_tomb_dirs:
-        rewritten = _read_tomb_ids(spark, merge_tomb_dirs, id_col).distinct()
+        rewritten = tomb_ids(merge_tomb_dirs).distinct()
         cand_parts.append(rewritten)
     if pos_parts and neg_parts:
         pos = pos_parts[0]
@@ -1775,24 +1809,12 @@ def _span_commit_changes(
         # span tombstone to carry the partition columns (a legacy flat
         # dir or a NULL-partition victim disables the refinement — the
         # semi-join stays, correctness is untouched).
-        tombs_scoped = all(
-            set(pb) <= set(spark.read.parquet(d).columns) for d in tomb_dirs
-        )
+        tombs_scoped = all(set(pb) <= set(t.columns) for t in tombs.values())
         if tombs_scoped:
-            srcs = []
-            if add_dirs:
-                srcs.append(
-                    _read_add_dirs(spark, add_dirs, layout).select(
-                        *[F.col(c) for c in pb]
-                    )
-                )
-            for d in tomb_dirs:
-                srcs.append(
-                    spark.read.parquet(d).select(*[F.col(c) for c in pb])
-                )
-            allp = srcs[0]
-            for s in srcs[1:]:
-                allp = allp.unionByName(s)
+            srcs = list(tombs.values()) + ([adds] if adds is not None else [])
+            allp = functools.reduce(
+                DataFrame.unionByName, [d.select(*[F.col(c) for c in pb]) for d in srcs]
+            )
             # partition-grain collect (bounded by the table's partition
             # count, commit-log-like grain)
             pvals = {c: set() for c in pb}

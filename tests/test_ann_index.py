@@ -87,6 +87,61 @@ def test_ensure_rebuilds_on_corpus_change(spark, tmp_path):
     assert served == fresh
 
 
+def _spark_written_meta(spark, path: str, meta: dict) -> None:
+    """The meta writer indexes were built with before metas went local:
+    a 1-row Spark table, every value a string. Kept as the reference that
+    older indexes on disk still read the same."""
+    df = spark.createDataFrame([tuple(str(v) for v in meta.values())], list(meta))
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def test_meta_lifecycle_absent_unfinished_corrupt(spark, tmp_path):
+    """An absent meta builds; a meta directory whose write never finished
+    (no _SUCCESS) rebuilds; a committed meta that cannot be read raises
+    instead of silently rebuilding."""
+    import glob
+
+    import pyarrow as pa
+    import pytest
+
+    emb = _emb(spark)
+    idx = str(tmp_path / "ivf")
+    meta_dir = os.path.join(idx, "meta.parquet")
+    built = ensure_ivf_medoid_index(emb, idx, n_cells=8)  # absent meta: build
+    assert int(built["n_vectors"]) == emb.count()
+    assert os.path.exists(os.path.join(meta_dir, "_SUCCESS"))
+    before = _mtimes(idx)
+
+    os.remove(os.path.join(meta_dir, "_SUCCESS"))  # a crash mid meta write
+    rebuilt = ensure_ivf_medoid_index(emb, idx, n_cells=8)
+    assert rebuilt == built
+    assert os.path.exists(os.path.join(meta_dir, "_SUCCESS"))
+    assert _mtimes(idx) != before, "unfinished meta did not rebuild"
+
+    (part,) = glob.glob(os.path.join(meta_dir, "*.parquet"))
+    with open(part, "wb") as fh:
+        fh.write(b"not a parquet footer")
+    before = _mtimes(idx)
+    with pytest.raises(pa.ArrowInvalid):
+        ensure_ivf_medoid_index(emb, idx, n_cells=8)
+    assert _mtimes(idx) == before, "corrupt meta was rebuilt over"
+
+
+def test_spark_written_meta_reads_identically_and_keeps_serving(spark, tmp_path):
+    """An index whose meta the Spark writer left reads through the local
+    reader as the same strings, so ensure_* reuses it without a rebuild."""
+    from funnel_report_etl_pipeline__spark.sources.sinks import _read_meta
+
+    emb = _emb(spark)
+    idx = str(tmp_path / "ivf")
+    meta = ensure_ivf_medoid_index(emb, idx, n_cells=8)
+    _spark_written_meta(spark, os.path.join(idx, "meta.parquet"), meta)
+    assert _read_meta(os.path.join(idx, "meta.parquet")) == {k: str(v) for k, v in meta.items()}
+    before = _mtimes(idx)
+    assert ensure_ivf_medoid_index(emb, idx, n_cells=8) == meta
+    assert _mtimes(idx) == before, "an index with a Spark-written meta was rebuilt"
+
+
 def test_pq_ensure_idempotent_and_param_sensitive(spark, tmp_path):
     emb = _emb(spark)
     idx = str(tmp_path / "pq")
@@ -193,7 +248,7 @@ def test_concurrent_identical_build_is_discarded_not_installed(spark, tmp_path):
     # a "concurrent" builder finished its own tmp build just after us
     tmp = idx + ".build.fake"
     build_ivf_medoid_index(emb, tmp, n_cells=16)
-    meta = _install_index(spark, tmp, idx, is_current=lambda m: True)
+    meta = _install_index(tmp, idx, is_current=lambda m: True)
     assert int(meta["n_cells"]) == 16
     assert not os.path.exists(tmp), "loser's tmp build not cleaned up"
     assert _mtimes(idx) == before, "winner's installed index was touched"
@@ -213,7 +268,7 @@ def test_stale_index_swapped_atomically(spark, tmp_path):
     build_ivf_medoid_index(emb.filter(F.col("vec_id") < 50), idx, n_cells=8)  # stale
     tmp = idx + ".build.new"
     build_ivf_medoid_index(emb, tmp, n_cells=16)
-    meta = _install_index(spark, tmp, idx, is_current=lambda m: False)
+    meta = _install_index(tmp, idx, is_current=lambda m: False)
     assert int(meta["n_cells"]) == 16 and int(meta["n_vectors"]) == emb.count()
     assert not os.path.exists(tmp)
     assert not os.path.exists(idx + f".old.{os.getpid()}")

@@ -13,7 +13,7 @@ import pytest
 
 from funnel_report_etl_pipeline__spark.plans.registry import load_all
 
-from .conftest import SF_SMALL, py4j_round_trips
+from .conftest import SF_MED, SF_SMALL, py4j_round_trips
 
 SPECS = load_all()
 
@@ -132,14 +132,18 @@ def test_funnel_query_build_py4j_budget(spark, name):
 
 
 def test_event_path_topk_build_runs_no_spark_job(spark):
-    """events comes from the shared catalog, so building the plan infers no
-    parquet schema (a direct spark.read.parquet ran one job per build)."""
-    build = SPECS["event_path_topk"].fn
-    build(spark, SF_SMALL)
-    _, jobs = _jobs_under_group(
-        spark, "test_event_path_topk_build_runs_no_spark_job", lambda: build(spark, SF_SMALL)
-    )
-    assert jobs == 0, f"{jobs} jobs"
+    """Tables come from the shared catalog, so building a plan infers no
+    parquet schema (a direct spark.read.parquet ran one job per table per
+    build). Also pinned for one pipeline_r6 and one pipeline_r8 query whose
+    builds do no other driver-side work (3 and 2 jobs per build before)."""
+    for name in ("event_path_topk", "shipping_priority_topk", "small_quantity_revenue"):
+        build = SPECS[name].fn
+        build(spark, SF_SMALL)
+        _, jobs = _jobs_under_group(
+            spark, f"test_event_path_topk_build_runs_no_spark_job:{name}",
+            lambda: build(spark, SF_SMALL),
+        )
+        assert jobs == 0, f"{name}: {jobs} jobs"
 
 
 def _snapshot_and_merge_source(spark):
@@ -217,6 +221,54 @@ def test_versioned_commit_job_budgets(spark, tmp_path):
     v3, maint_jobs = _jobs_under_group(spark, f"{group}:maintain", maintain)
     assert v3 == v2 + 1 and sinks.read_versioned(spark, t).count() == 220
     assert maint_jobs <= 4, f"compact + vacuum ran {maint_jobs} jobs"
+
+
+def test_partitioned_span_change_feed_build_job_budget(spark, tmp_path):
+    """Building the update-detecting change feed over a span of a delete,
+    an append (re-adding some deleted ids) and a delete on a table
+    partitioned by `lang` runs at most 14 Spark jobs (22 when each use of
+    a span directory read it again and the tombstone scope check inferred
+    its schema a second time)."""
+    from funnel_report_etl_pipeline__spark.sources import sinks
+
+    t = str(tmp_path / "span")
+    docs = spark.read.parquet(f"{SF_MED}/documents.parquet")
+    v1 = sinks.write_versioned(
+        docs.filter("doc_id % 4 != 3"), t, id_col="doc_id", partition_by=["lang"]
+    )
+    sinks.delete_versioned(spark, t, docs.filter("doc_id % 10 = 0").select("doc_id"), "doc_id")
+    sinks.append_versioned(docs.filter("doc_id % 4 = 3 OR doc_id % 20 = 0"), t, id_col="doc_id")
+    v4 = sinks.delete_versioned(
+        spark, t, docs.filter("doc_id % 10 = 5").select("doc_id"), "doc_id"
+    )
+    feed, jobs = _jobs_under_group(
+        spark, "test_partitioned_span_change_feed_build_job_budget",
+        lambda: sinks.version_changes(spark, t, v1, v4, "doc_id", detect_updates=True),
+    )
+    ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    want = sorted(
+        [(i, "insert") for i in ids if i % 4 == 3 and i % 10 != 5]
+        + [(i, "delete") for i in ids if i % 20 == 10 or (i % 10 == 5 and i % 4 != 3)]
+    )
+    assert sorted((r["doc_id"], r["_change_type"]) for r in feed.collect()) == want
+    assert jobs <= 14, f"version_changes built in {jobs} jobs"
+
+
+def test_index_meta_write_and_read_run_no_spark_job(spark, tmp_path):
+    """An index or shard meta is written and read locally: zero Spark
+    jobs (Spark's writer ran at least one for the 1-row table)."""
+    from funnel_report_etl_pipeline__spark.sources import sinks
+
+    path = str(tmp_path / "meta.parquet")
+    meta = {"family": "ivf_medoid", "n_cells": 8, "corpus_sig": -42}
+
+    def roundtrip():
+        sinks._write_meta(path, meta)
+        return sinks._read_meta(path)
+
+    got, jobs = _jobs_under_group(spark, "test_index_meta_write_and_read_run_no_spark_job", roundtrip)
+    assert got == {"family": "ivf_medoid", "n_cells": "8", "corpus_sig": "-42"}
+    assert jobs == 0, f"{jobs} jobs"
 
 
 # The commit log has one batch reader, local pyarrow: the budgets below
