@@ -11,6 +11,9 @@ the driver. A tiny warm-up query first so JVM/codegen startup is not billed
 to the first benchmark entry; each query then gets one untimed warm-up run
 and the reported figure is the MEDIAN of 3 timed runs (single-machine noise
 here is ±30%, so a single sample can misstate a query by its own runtime).
+``BENCH_FULL.json`` also records, per query, the classes Spark compiled
+during its timed runs (``compiles``): 0 means the timed runs reused the
+warm-up's generated classes, i.e. they measured a steady state.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from funnel_report_etl_pipeline__spark.plans.registry import load_all  # noqa: E402
 from funnel_report_etl_pipeline__spark.session import (  # noqa: E402
+    codegen_compiles,
     get_spark,
     release_all_caches,
 )
@@ -63,6 +67,45 @@ def _warm_up(spark, sf_dir: str) -> None:
         spark.read.parquet(lineitem).limit(10_000).collect()
 
 
+def query_stats(spark, run, n_runs: int) -> dict:
+    """One query's ``stats`` entry: ``run()`` once untimed, then ``n_runs``
+    timed runs (twice that when the first set is noisy)."""
+    # one untimed warm-up run per query: bills one-time costs (parquet
+    # footer/file listing, whole-stage codegen JIT) to warm-up, so the timed
+    # runs measure steady-state throughput — the number that scales with
+    # data volume on a long-lived cluster. Results stay collect()-verified
+    # every time.
+    run()
+
+    def timed_runs(k: int) -> list[float]:
+        out = []
+        for _ in range(k):
+            t0 = time.perf_counter()
+            run()
+            out.append(time.perf_counter() - t0)
+        return out
+
+    compiled = codegen_compiles(spark)
+    samples = timed_runs(n_runs)
+    # A median well above the min means at least half the samples were
+    # inflated by something other than the query (GC pause, bench-process
+    # contention) — the round-3 phantom 2.79 s asof_join_events; round-5's
+    # 4.4 s cdc_chunk_dedup sat at 1.8x min and slipped the old 2x trigger,
+    # so retry at 1.5x.
+    retried = False
+    if statistics.median(samples) > 1.5 * min(samples):
+        retried = True
+        samples += timed_runs(n_runs)
+    return {
+        "median": round(statistics.median(samples), 3),
+        "min": round(min(samples), 3),
+        "spread": round(max(samples) - min(samples), 3),
+        "n": len(samples),
+        "compiles": codegen_compiles(spark) - compiled,
+        **({"retried": True} if retried else {}),
+    }
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or 0)
@@ -77,39 +120,10 @@ def main() -> int:
     stats: dict[str, dict] = {}
     for name in sorted(specs):
         try:
-            # one untimed warm-up run per query: bills one-time costs
-            # (parquet footer/file listing, whole-stage codegen JIT) to
-            # warm-up, so the timed runs measure steady-state throughput —
-            # the number that scales with data volume on a long-lived
-            # cluster. Results stay collect()-verified every time.
-            specs[name].fn(spark, sf_dir).collect()
-
-            def timed_runs(k: int) -> list[float]:
-                out = []
-                for _ in range(k):
-                    t0 = time.perf_counter()
-                    specs[name].fn(spark, sf_dir).collect()
-                    out.append(time.perf_counter() - t0)
-                return out
-
-            samples = timed_runs(n_runs)
-            # A median well above the min means at least half the samples
-            # were inflated by something other than the query (GC pause,
-            # bench-process contention) — the round-3 phantom 2.79 s
-            # asof_join_events; round-5's 4.4 s cdc_chunk_dedup sat at
-            # 1.8x min and slipped the old 2x trigger, so retry at 1.5x.
-            retried = False
-            if statistics.median(samples) > 1.5 * min(samples):
-                retried = True
-                samples += timed_runs(n_runs)
-            timings[name] = round(statistics.median(samples), 3)
-            stats[name] = {
-                "median": timings[name],
-                "min": round(min(samples), 3),
-                "spread": round(max(samples) - min(samples), 3),
-                "n": len(samples),
-                **({"retried": True} if retried else {}),
-            }
+            stats[name] = query_stats(
+                spark, lambda: specs[name].fn(spark, sf_dir).collect(), n_runs
+            )
+            timings[name] = stats[name]["median"]
         except Exception as e:  # one broken query must not zero the whole bench
             print(f"bench: {name} failed: {type(e).__name__}: {e}", file=sys.stderr)
             timings[name] = None  # machine-readable failure marker

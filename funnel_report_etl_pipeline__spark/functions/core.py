@@ -64,6 +64,12 @@ def pct_of_sql(value: str, total: str) -> str:
     )
 
 
+def sql_double(v: float) -> str:
+    """``v`` as a Spark SQL DOUBLE literal, the type ``F.lit`` gives a
+    Python float: ``0.8D``, since a bare ``0.8`` is DECIMAL(1,1)."""
+    return f"{float(v)!r}D"
+
+
 def dsum(col: Column | str, precision: int = 22, scale: int = 4) -> Column:
     """Order-independent exact sum, returned as double.
 

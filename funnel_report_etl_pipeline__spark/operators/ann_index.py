@@ -47,12 +47,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.operators.similarity import (
-    _dot,
+    _cosine,
     _nearest_medoid_cells,
-    _norm,
+    _topk_by_cosine,
+    _vectors,
     medoid_cells,
 )
 from funnel_report_etl_pipeline__spark.sources.sinks import (
+    _count_and_checksum,
     _read_dir,
     _read_meta,
     _write_meta,
@@ -84,13 +86,7 @@ def corpus_signature(corpus: DataFrame, id_col: str) -> tuple[int, int]:
     indexed id set — the BIGINT sum of each id's 32-bit md5 prefix, the
     same attestation ``write_training_shards`` manifests carry. Detects
     a changed/grown corpus behind a saved index without reading vectors."""
-    key = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    row = corpus.agg(
-        F.count("*").alias("n"), F.coalesce(F.sum(key), F.lit(0)).alias("sig")
-    ).collect()[0]
-    return int(row["n"]), int(row["sig"])
+    return _count_and_checksum(corpus, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -114,9 +110,7 @@ def build_ivf_medoid_index(
     med.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "cells.parquet"))
     spark.catalog.refreshByPath(os.path.join(out_dir, "cells.parquet"))
     saved_med = _read_dir(spark, os.path.join(out_dir, "cells.parquet"))
-    c = corpus.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).cast("array<double>").alias("__v")
-    )
+    c = _vectors(corpus, id_col, vec_col, "cid", "__v")
     assign = _nearest_medoid_cells(c, saved_med, "cid", 1)  # helper broadcasts
     assign.write.mode("overwrite").parquet(os.path.join(out_dir, "assignments.parquet"))
     n, sig = corpus_signature(corpus, id_col)
@@ -477,12 +471,8 @@ def ensure_ivf_index_versioned(
                 if n_masked is not None:
                     if has_inserts:
                         assign_path = os.path.join(out_dir, "assignments.parquet")
-                        newv = (
-                            corpus.join(new_ids, id_col, "semi")
-                            .select(
-                                F.col(id_col).alias("cid"),
-                                F.col(vec_col).cast("array<double>").alias("__v"),
-                            )
+                        newv = _vectors(
+                            corpus.join(new_ids, id_col, "semi"), id_col, vec_col, "cid", "__v"
                         )
                         done = _read_dir(spark, assign_path).select("cid")
                         fresh = _nearest_medoid_cells(
@@ -551,31 +541,13 @@ def cosine_topk_ivf_prebuilt(
     spark = corpus.sparkSession
     med = _read_dir(spark, os.path.join(index_dir, "cells.parquet"))
     assign = _live_assignments(spark, index_dir)  # tombstone-masked deletes
-    c = corpus.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("__v")
-    )
+    c = _vectors(corpus, id_col, vec_col, "cid", "cv")
+    q = _vectors(queries, id_col, vec_col, "qid", "__v")
     q_cell = _nearest_medoid_cells(q, med, "qid", n_probe)  # helper broadcasts
     qv = q.withColumnRenamed("__v", "qv").join(q_cell, "qid")
-    cand = (
-        c.join(assign, "cid")
-        .join(F.broadcast(qv), "cell")
-        .filter(F.col("qid") != F.col("cid"))
-    )
-    scored = cand.select(
-        "qid",
-        "cid",
-        (_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias(
-            "cosine"
-        ),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    cand = c.join(assign, "cid").join(F.broadcast(qv), "cell").filter("qid != cid")
+    scored = cand.selectExpr("qid", "cid", f"{_cosine('qv', 'cv')} AS cosine")
+    return _topk_by_cosine(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -880,28 +852,14 @@ def ivfpq_rerank_topk_prebuilt(
         queries, ivf_dir, pq_dir, k=m, n_probe=n_probe,
         n_segments=n_segments, seg_dim=seg_dim, id_col=id_col, vec_col=vec_col,
     ).select("qid", "cid")
-    c = corpus.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
+    c = _vectors(corpus, id_col, vec_col, "cid", "cv")
+    q = _vectors(queries, id_col, vec_col, "qid", "qv")
     rer = (
         cand.join(c, "cid")
         .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            "cid",
-            (_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias(
-                "cosine"
-            ),
-        )
+        .selectExpr("qid", "cid", f"{_cosine('qv', 'cv')} AS cosine")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
-    return (
-        rer.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _topk_by_cosine(rer, k)
 
 
 # ---------------------------------------------------------------------------

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from funnel_report_etl_pipeline__spark.functions.core import sql_double
+
 __all__ = [
     "normalize_text",
     "word_ngrams",
@@ -99,18 +101,20 @@ def gram_rows(
     (dup_ngram_coverage 0.93 s → 3.82 s, benchmark_contamination 1.33 s →
     3.92 s at sf0.1/local[32]) — the same lesson dup_span_dedup's round-6
     A/B recorded. Gram-frame RECOMPUTATION across consumers is handled at
-    the consumer (persist slots / localCheckpoint), not by making the
-    subtree narrow-but-slow.)
+    the consumer (``minhash_dedup_pairs`` localCheckpoints its grams once
+    per call), not by making the subtree narrow-but-slow.)
+
+    Like every MinHash-family builder here, the plan is built from SQL
+    expression strings: under PySpark 4 each Column-API call costs ~10-13
+    py4j round trips, a ``selectExpr`` string about one.
     """
-    tok = df.select(
-        F.col(id_col).alias("id"), F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok")
-    )
-    w = Window.partitionBy("id").orderBy("pos")
-    leads = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, ngram)]
+    tok = df.selectExpr(f"{id_col} AS id", f"posexplode(split({text_col}, ' ')) AS (pos, tok)")
+    over = "OVER (PARTITION BY id ORDER BY pos)"
+    leads = ["tok"] + [f"lead(tok, {j}) {over}" for j in range(1, ngram)]
     out = (
-        tok.select("id", *[c.alias(f"__t{j}") for j, c in enumerate(leads)])
-        .filter(F.col(f"__t{ngram - 1}").isNotNull())
-        .select("id", F.concat_ws(" ", *[f"__t{j}" for j in range(ngram)]).alias("gram"))
+        tok.selectExpr("id", *[f"{c} AS __t{j}" for j, c in enumerate(leads)])
+        .filter(f"__t{ngram - 1} IS NOT NULL")
+        .selectExpr("id", f"concat_ws(' ', {', '.join(f'__t{j}' for j in range(ngram))}) AS gram")
     )
     return out.distinct() if distinct else out
 
@@ -171,29 +175,22 @@ def minhash_signatures(
       rows-only; the md5 families are the value-verified twins over the
       identical plan shape."""
     if hash_family == "md5":
-        md5 = F.md5(F.col("gram"))
-        h1 = F.conv(F.substring(md5, 1, 15), 16, 10).cast("long")
-        h2 = F.conv(F.substring(md5, 16, 12), 16, 10).cast("long").bitwiseOR(F.lit(1))
+        h1 = "CAST(conv(substring(md5(gram), 1, 15), 16, 10) AS BIGINT)"
+        h2 = "(CAST(conv(substring(md5(gram), 16, 12), 16, 10) AS BIGINT) | 1)"
     elif hash_family == "md5w":
-        md5 = F.md5(F.col("gram"))
-        h1 = F.conv(F.substring(md5, 1, 15), 16, 10).cast("long")
-        h2 = (h1 % F.lit(1 << 47)).bitwiseOR(F.lit(1))
+        h1 = "CAST(conv(substring(md5(gram), 1, 15), 16, 10) AS BIGINT)"
+        h2 = f"(({h1} % {1 << 47}L) | 1)"
     elif hash_family == "xxhash64":
-        h1 = F.shiftrightunsigned(F.xxhash64(F.col("gram")), 4)
-        h2 = F.shiftrightunsigned(F.xxhash64(F.col("gram"), F.lit(1)), 16).bitwiseOR(
-            F.lit(1)
-        )
+        h1 = "shiftrightunsigned(xxhash64(gram), 4)"
+        h2 = "(shiftrightunsigned(xxhash64(gram, 1), 16) | 1)"
     else:
         raise ValueError(f"unknown hash_family: {hash_family!r} (md5 | md5w | xxhash64)")
-    hashed = grams.select("id", h1.alias("__h1"), h2.alias("__h2"))
+    hashed = grams.selectExpr("id", f"{h1} AS __h1", f"{h2} AS __h2")
     mins = hashed.groupBy("id").agg(
-        *[
-            F.min(F.col("__h1") + F.lit(i) * F.col("__h2")).alias(f"__h{i}")
-            for i in range(num_perm)
-        ]
+        *[F.expr(f"min(__h1 + ({i} * __h2)) AS __h{i}") for i in range(num_perm)]
     )
-    return mins.select(
-        "id", F.array(*[f"__h{i}" for i in range(num_perm)]).alias("sig")
+    return mins.selectExpr(
+        "id", f"array({', '.join(f'__h{i}' for i in range(num_perm))}) AS sig"
     )
 
 
@@ -203,21 +200,13 @@ def band_buckets(sigs: DataFrame, bands: int = 8, rows: int = 4) -> DataFrame:
     band's minhash values — engine-neutral (no murmur3), so an oracle
     groups identically. Shared by the LSH candidate join and the bucket
     skew audit."""
-    band = F.posexplode(
-        F.array(
-            *[
-                F.concat_ws(
-                    "-",
-                    *[
-                        F.element_at("sig", b * rows + r + 1).cast("string")
-                        for r in range(rows)
-                    ],
-                )
-                for b in range(bands)
-            ]
-        )
-    )
-    return sigs.select("id", band.alias("band_idx", "band_hash"))
+    keys = [
+        "concat_ws('-', "
+        + ", ".join(f"CAST(element_at(sig, {b * rows + r + 1}) AS STRING)" for r in range(rows))
+        + ")"
+        for b in range(bands)
+    ]
+    return sigs.selectExpr("id", f"posexplode(array({', '.join(keys)})) AS (band_idx, band_hash)")
 
 
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 8, rows: int = 4) -> DataFrame:
@@ -231,11 +220,9 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 8, rows: int = 4) -> DataF
     return (
         a.join(
             b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
+            F.expr("a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.id < b.id"),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
 
@@ -254,8 +241,8 @@ def drop_frequent_grams(grams: DataFrame, max_doc_freq: int) -> DataFrame:
     any engine, SQL-replicable for the oracle."""
     hot = (
         grams.groupBy("gram")
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") > max_doc_freq)
+        .agg(F.expr("count(*) AS __df"))
+        .filter(f"__df > {int(max_doc_freq)}")
         .select("gram")
     )
     return grams.join(F.broadcast(hot), "gram", "left_anti").select(*grams.columns)
@@ -291,18 +278,14 @@ def jaccard_verify(
         grams = drop_frequent_grams(grams, max_gram_freq)
     # gram_rows emits distinct (id, gram) rows, so collect_list builds the
     # gram SET of each doc; sz is its cardinality
-    sets_ = grams.groupBy("id").agg(F.collect_list("gram").alias("gs"))
+    sets_ = grams.groupBy("id").agg(F.expr("collect_list(gram) AS gs"))
     j = (
         pairs.join(sets_.withColumnsRenamed({"id": "id_a", "gs": "ga"}), "id_a")
         .join(sets_.withColumnsRenamed({"id": "id_b", "gs": "gb"}), "id_b")
-        .withColumn("i", F.size(F.array_intersect("ga", "gb")))
-        .withColumn(
-            "jaccard",
-            F.col("i").cast("double")
-            / (F.size("ga") + F.size("gb") - F.col("i")),
-        )
+        .withColumn("i", F.expr("size(array_intersect(ga, gb))"))
+        .withColumn("jaccard", F.expr("CAST(i AS DOUBLE) / ((size(ga) + size(gb)) - i)"))
     )
-    return j.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+    return j.filter(f"jaccard >= {sql_double(threshold)}").select("id_a", "id_b", "jaccard")
 
 
 def minhash_dedup_pairs(

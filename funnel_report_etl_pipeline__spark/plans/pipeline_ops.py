@@ -777,10 +777,10 @@ def embedding_label_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from funnel_report_etl_pipeline__spark.operators.similarity import _norm
 
     emb = _t(spark, sf_dir, "embeddings")
-    norm = _norm(F.col("embedding").cast("array<double>"))
+    norm = _norm("CAST(embedding AS ARRAY<DOUBLE>)")
     return emb.groupBy("label").agg(
         F.count("*").alias("n_vecs"),
-        F.sum(norm.cast("decimal(28,12)")).cast("double").alias("total_norm"),
+        F.expr(f"CAST(sum(CAST({norm} AS DECIMAL(28,12))) AS DOUBLE) AS total_norm"),
     )
 
 

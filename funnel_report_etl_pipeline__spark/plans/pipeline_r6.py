@@ -1259,7 +1259,7 @@ def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast) side and the corpus is scanned once; an IVF/LSH-blocked
     variant (`similarity_ann_*`) bounds the candidate set when anchors
     stop being few."""
-    from funnel_report_etl_pipeline__spark.operators.similarity import _dot, _norm
+    from funnel_report_etl_pipeline__spark.operators.similarity import _cosine, _topk_by_cosine
 
     emb = catalog_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
@@ -1280,16 +1280,10 @@ def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             "cid",
             "c_label",
-            (
-                _dot(F.col("qv"), F.col("cv"))
-                / (_norm(F.col("qv")) * _norm(F.col("cv")))
-            ).alias("cosine"),
+            F.expr(_cosine("qv", "cv")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= 5
-    )
+    return _topk_by_cosine(scored, 5)
 
 
 @register(

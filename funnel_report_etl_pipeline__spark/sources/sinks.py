@@ -637,21 +637,24 @@ def _read_meta(path: str) -> dict | None:
     return rows[0] if rows else None
 
 
-def _id_checksum_col(id_col: str) -> F.Column:
+def _id_checksum_sql(id_col: str) -> str:
     """Order-independent per-row checksum term: the BIGINT value of the
     id's 32-bit md5 prefix (summed per snapshot — same attestation as
     `write_training_shards` manifests and the ANN `corpus_signature`)."""
-    return F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    return f"CAST(conv(substring(md5(CAST({id_col} AS STRING)), 1, 8), 16, 10) AS BIGINT)"
+
+
+def _id_checksum_col(id_col: str) -> F.Column:
+    return F.expr(_id_checksum_sql(id_col))
 
 
 def _checksum_agg(id_col: str) -> F.Column:
-    return F.coalesce(F.sum(_id_checksum_col(id_col)), F.lit(0)).alias("sig")
+    return F.expr(f"coalesce(sum({_id_checksum_sql(id_col)}), 0) AS sig")
 
 
 def _count_and_checksum(df: DataFrame, id_col: str) -> tuple[int, int]:
-    row = df.agg(F.count("*").alias("n"), _checksum_agg(id_col)).collect()[0]
+    """(row count, id checksum) of ``df`` in one aggregate."""
+    row = df.agg(F.expr("count(*) AS n"), _checksum_agg(id_col)).collect()[0]
     return int(row["n"]), int(row["sig"])
 
 

@@ -59,6 +59,17 @@ def py4j_round_trips(spark, fn):
     return out, sent
 
 
+def codegen_compiles(spark, fn):
+    """Run ``fn()``; return (its result, the classes Janino compiled while it
+    ran). A plan whose generated classes are all in Spark's generated-class
+    cache compiles none."""
+    from funnel_report_etl_pipeline__spark.session import codegen_compiles as compiled
+
+    before = compiled(spark)
+    out = fn()
+    return out, compiled(spark) - before
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

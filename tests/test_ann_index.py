@@ -368,7 +368,7 @@ def _aligned_cluster_corpus(spark, n=600, n_cells=16, sigma=0.15, dim=64):
 def _brute_top5(spark, emb):
     from pyspark.sql import Window
 
-    from funnel_report_etl_pipeline__spark.operators.similarity import _dot, _norm
+    from funnel_report_etl_pipeline__spark.operators.similarity import _cosine
 
     c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
     q = emb.filter(F.col("vec_id") % 60 == 1).select(
@@ -380,7 +380,7 @@ def _brute_top5(spark, emb):
         .select(
             "qid",
             "cid",
-            (_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias("cos"),
+            F.expr(_cosine("qv", "cv")).alias("cos"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))

@@ -13,7 +13,7 @@ import os
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _warm_up, tail_safe_line  # noqa: E402
+from bench import _warm_up, query_stats, tail_safe_line  # noqa: E402
 
 
 def _full(n: int) -> dict:
@@ -78,3 +78,19 @@ def test_warm_up_runs_without_lineitem(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_query_stats_counts_compiles_of_the_timed_runs(spark):
+    """``compiles`` counts the classes compiled during the timed runs only:
+    0 for a query whose warm-up compiled its classes, one per run for a
+    query that builds a new plan shape every run."""
+    plan = spark.range(5).selectExpr("id * 91733 AS x")
+    steady = query_stats(spark, plan.collect, 3)
+    assert set(steady) >= {"median", "min", "spread", "n", "compiles"}
+    assert steady["compiles"] == 0
+
+    shapes = iter(range(91734, 91800))
+    fresh = query_stats(
+        spark, lambda: spark.range(5).selectExpr(f"id * {next(shapes)} AS x").collect(), 3
+    )
+    assert fresh["compiles"] >= fresh["n"]

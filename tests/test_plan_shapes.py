@@ -13,7 +13,7 @@ import pytest
 
 from funnel_report_etl_pipeline__spark.plans.registry import load_all
 
-from .conftest import SF_MED, SF_SMALL, py4j_round_trips
+from .conftest import SF_MED, SF_SMALL, codegen_compiles, py4j_round_trips
 
 SPECS = load_all()
 
@@ -129,6 +129,62 @@ def test_funnel_query_build_py4j_budget(spark, name):
     build(spark, SF_SMALL)
     _, sent = py4j_round_trips(spark, lambda: build(spark, SF_SMALL))
     assert sent <= FUNNEL_QUERY_PY4J_BUDGET[name], f"{sent} py4j round trips"
+
+
+# py4j round trips of the corpus path's other builders, counted the same
+# way. The MinHash family, the cosine helpers and the IVF serve path are
+# built from SQL strings (tests/test_sql_builders.py pins them to their
+# Column-API forms). Measured: dedup_minhash_lsh 368 (Column API 3,936, 32
+# min-aggregates of ~6 Column calls each), IVF ensure of a current index
+# plus its top-k query 130 (1,209).
+DEDUP_MINHASH_PY4J_BUDGET = 400
+IVF_SERVE_PY4J_BUDGET = 150
+
+
+def test_dedup_minhash_lsh_build_py4j_budget(spark):
+    build = SPECS["dedup_minhash_lsh"].fn
+    build(spark, SF_SMALL)
+    _, sent = py4j_round_trips(spark, lambda: build(spark, SF_SMALL))
+    assert sent <= DEDUP_MINHASH_PY4J_BUDGET, f"{sent} py4j round trips"
+
+
+def test_ivf_ensure_and_query_build_py4j_budget(spark, tmp_path):
+    from funnel_report_etl_pipeline__spark.operators import ann_index
+
+    emb = spark.read.parquet(os.path.join(SF_SMALL, "embeddings.parquet"))
+    queries = emb.filter("vec_id % 97 = 0")
+    idx = str(tmp_path / "ivf8")
+
+    def serve():
+        ann_index.ensure_ivf_medoid_index(emb, idx, n_cells=8)
+        return ann_index.cosine_topk_ivf_prebuilt(emb, queries, idx, k=5, n_probe=2)
+
+    serve()
+    _, sent = py4j_round_trips(spark, serve)
+    assert sent <= IVF_SERVE_PY4J_BUDGET, f"{sent} py4j round trips"
+
+
+def test_warm_rerun_compiles_nothing(spark):
+    """Spark's generated-class cache holds the engine's working set: ~150
+    distinct plans (each literal is inlined into its class, so every plan
+    compiles its own), run twice, compile nothing the second time. Under
+    the default cache of 100 entries the second run recompiled them."""
+    from funnel_report_etl_pipeline__spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    plans = [
+        spark.range(4).selectExpr(f"id * {i} + {i % 7} AS x").filter(f"x <> {i + 1}")
+        for i in range(150)
+    ]
+
+    def run_all():
+        return [p.collect() for p in plans]
+
+    first, compiled = codegen_compiles(spark, run_all)
+    assert compiled >= 150, f"{compiled} classes: the plans do not compile distinct classes"
+    second, recompiled = codegen_compiles(spark, run_all)
+    assert second == first
+    assert recompiled == 0, f"{recompiled} classes recompiled on the warm re-run"
 
 
 def test_event_path_topk_build_runs_no_spark_job(spark):
