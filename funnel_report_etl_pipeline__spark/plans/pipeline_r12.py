@@ -7,9 +7,9 @@ update-aware change-data feed, and incremental ANN maintenance.
   post-merge state, never the deleted-not-yet-reinserted between that
   composing delete+append exposes (the round-11 ledger's #1 remaining
   gap). The audit also exercises the round-12 CDF upgrades end-to-end:
-  the single-merge O(changes) fast path (new ids -> insert, matched ids
-  -> physical 'update'), and the fallback's payload-fingerprint update
-  detection across a snapshot recommit (payload-only changes were
+  the one-merge span served from the commit's own directories (new ids
+  -> insert, matched ids -> physical 'update'), and payload-fingerprint
+  update detection across a snapshot recommit (payload-only changes were
   invisible to membership diffs — round-11 advice item #2).
 * `ann_ivf_incremental` — incremental index maintenance over a
   delta-committed corpus (operators/ann_index.py::
@@ -198,12 +198,12 @@ def versioned_merge_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     live count, the count of rows carrying the merged payload marker
     (proves the upsert REPLACED matched payloads and INSERTED new ids
     in one commit), and the (v-1 → v) change feed's insert/update
-    counts with detect_updates=True — the merge's O(changes) fast path
-    splits matched (update) from new (insert), and the recommit's
-    fallback detects the payload-only update that membership diffs
-    cannot see. Conflict-abort, duplicate-source rejection, atomicity
-    (no readable between-state) and fast-path-vs-fallback duplicate-id
-    agreement are pinned in tests/test_versioned_v2.py."""
+    counts with detect_updates=True — the merge's own directories split
+    matched (update) from new (insert), and the recommit's change file
+    carries the payload-only update that membership diffs cannot see.
+    Conflict-abort, duplicate-source rejection, atomicity (no readable
+    between-state) and fast-path-vs-fallback duplicate-id agreement are
+    pinned in tests/test_versioned_v2.py."""
     import shutil
     import tempfile
 

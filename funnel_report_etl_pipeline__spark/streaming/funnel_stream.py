@@ -607,9 +607,11 @@ def stream_versioned_changes(
     changes_df is (id_col, _change_type) from
     ``sources.sinks.version_changes``. This is versioning's payoff at
     100 TB: an incremental consumer processes versions as they commit
-    and NEVER re-reads a snapshot — for delta-kind commits the change
-    set is literally the committed delta directory (an O(changes) read,
-    no join); snapshot-kind commits fall back to the id anti-join diff.
+    and reads only each commit's own artifacts — a delta's or a
+    tombstone's directory (each row is its own insert or delete: no
+    join, no aggregate), a merge's two directories, a recommit's
+    commit-time CDC file. Only a recommit without a CDC file (a table
+    written before commit-time CDC) reads its two endpoint snapshots.
     The per-batch `.collect()` is commit-log grain (one row per
     version), never data grain. Version 1 emits against from_version=0:
     every row of the first snapshot is an insert. ``detect_updates``

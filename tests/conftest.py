@@ -197,7 +197,7 @@ _SLOW_PINNED = {
     "tests/test_pipeline_r6.py::test_local_supplier_volume_same_nation_only",  # 5.8s
     "tests/test_versioned_v2.py::test_cdf_fallback_detects_payload_updates_and_multiplicity",  # 5.7s
     "tests/test_versioned_v2.py::test_dead_fraction_triggers_compaction_despite_short_chain",  # 5.7s
-    "tests/test_versioned_r14.py::test_detect_updates_duplicate_id_rows_parity",  # 5.7s
+    "tests/test_versioned_r14.py::test_detect_updates_duplicate_id_rows_parity[mixed]",  # 5.7s
     "tests/test_similarity.py::test_lsh_single_table_no_probe_is_weaker",  # 5.6s
     "tests/test_versioned_r14.py::test_recommit_cdc_telescoping_revert_emits_no_update",  # 5.6s
     "tests/test_cli_report.py::test_single_day_equals_degenerate_range",  # 5.5s

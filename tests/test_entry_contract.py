@@ -162,3 +162,27 @@ def test_driver_window_composition_pinned():
     # fails here at registration time instead of accruing silent debt.
     outside = set(mod.queries()) - set(window)
     assert outside <= verified, sorted(outside - verified)
+
+
+def test_tool_imports_of_the_package_resolve():
+    """Every ``from funnel_report_etl_pipeline__spark… import name`` in
+    ``tools/*.py`` names something the package still has, so deleting an
+    engine helper cannot silently break a probe. Reads the tools with
+    ``ast``; runs none of them and starts no Spark session."""
+    import ast
+    import importlib
+
+    pkg = "funnel_report_etl_pipeline__spark"
+    missing = []
+    for path in sorted((REPO / "tools").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (isinstance(node, ast.ImportFrom) and (node.module or "").startswith(pkg)):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                if not hasattr(mod, alias.name):
+                    try:
+                        importlib.import_module(f"{node.module}.{alias.name}")
+                    except ModuleNotFoundError:
+                        missing.append(f"{path.name}:{node.lineno} {node.module}.{alias.name}")
+    assert not missing, missing

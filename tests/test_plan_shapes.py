@@ -243,7 +243,7 @@ def test_versioned_commit_job_budgets(spark, tmp_path):
     compaction + vacuum). Measured counts at local[4], each lower than
     before commit bookkeeping went local and staged read-backs were
     footer-pinned: MERGE 8 (was 16), a read over the merge tombstone 2
-    (was 3), the single-merge change feed 4 (was 6), compaction + vacuum
+    (was 3), the one-merge change feed 2 (was 6), compaction + vacuum
     4 (was 10)."""
     from funnel_report_etl_pipeline__spark.sources import sinks
 
@@ -267,7 +267,7 @@ def test_versioned_commit_job_budgets(spark, tmp_path):
         lambda: sinks.version_changes(spark, t, v1, v2, "doc_id").collect(),
     )
     assert sorted(r["doc_id"] for r in changes) == list(range(200, 220))
-    assert cdf_jobs <= 4, f"version_changes ran {cdf_jobs} jobs"
+    assert cdf_jobs <= 2, f"version_changes ran {cdf_jobs} jobs"
 
     def maintain():
         v = sinks.compact_versioned(spark, t, "doc_id")
@@ -277,6 +277,42 @@ def test_versioned_commit_job_budgets(spark, tmp_path):
     v3, maint_jobs = _jobs_under_group(spark, f"{group}:maintain", maintain)
     assert v3 == v2 + 1 and sinks.read_versioned(spark, t).count() == 220
     assert maint_jobs <= 4, f"compact + vacuum ran {maint_jobs} jobs"
+
+
+@pytest.mark.parametrize("kind", ["delta", "tombstone", "merge"])
+def test_one_commit_change_feed_job_budgets(spark, tmp_path, kind):
+    """Collecting the change feed of a one-commit span — what the
+    streaming change-feed consumer asks for at every commit — runs the
+    span's own directories in a fixed number of Spark jobs, with and
+    without detect_updates. A delta or a tombstone is one job: each row
+    is its own insert or delete, no aggregate. A MERGE is the map stage
+    of its net-multiplicity exchange plus the result (2), and 3 with
+    detect_updates: its rewritten ids are its updates, with no candidate
+    probe and no endpoint read (it ran 4 and 5 jobs when the one-merge
+    span had its own branch)."""
+    from funnel_report_etl_pipeline__spark.sources import sinks
+
+    t = str(tmp_path / kind)
+    docs, src = _snapshot_and_merge_source(spark)
+    v1 = sinks.write_versioned(docs, t, id_col="doc_id")
+    if kind == "delta":
+        v2 = sinks.append_versioned(src.filter("doc_id >= 200"), t, id_col="doc_id")
+        want = {(i, "insert") for i in range(200, 220)}
+    elif kind == "tombstone":
+        v2 = sinks.delete_versioned(spark, t, src.select("doc_id"), "doc_id")
+        want = {(i, "delete") for i in range(190, 200)}
+    else:
+        v2 = sinks.merge_versioned(spark, t, src, id_col="doc_id")
+        want = {(i, "insert") for i in range(200, 220)}
+    budgets = {"delta": (1, 1), "tombstone": (1, 1), "merge": (2, 3)}[kind]
+    for du, budget in zip((False, True), budgets):
+        rows, jobs = _jobs_under_group(
+            spark, f"test_one_commit_change_feed_job_budgets:{kind}:{du}",
+            lambda: sinks.version_changes(spark, t, v1, v2, "doc_id", detect_updates=du).collect(),
+        )
+        updates = {(i, "update") for i in range(190, 200)} if du and kind == "merge" else set()
+        assert sorted((r["doc_id"], r["_change_type"]) for r in rows) == sorted(want | updates)
+        assert jobs <= budget, f"{kind} detect_updates={du}: {jobs} jobs"
 
 
 def test_partitioned_span_change_feed_build_job_budget(spark, tmp_path):

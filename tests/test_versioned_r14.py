@@ -185,12 +185,21 @@ def _fallback(spark, t, va_v, vb_v, rewritten=None, detect_updates=True):
     return _multiplicity_changes(va, vb, "doc_id", detect_updates, rewritten)
 
 
+def _rewritten(spark, t):
+    """The table's merge-rewritten ids, read from its merge tombstone
+    directories as the fallback recovers them (None without a merge)."""
+    mt = [
+        os.path.join(t, r["tomb_dir"])
+        for r in version_manifest(spark, t).collect()
+        if (r["kind"] or "") == "merge" and r["tomb_dir"]
+    ]
+    return spark.read.parquet(*mt).select("doc_id").distinct() if mt else None
+
+
 def test_detect_updates_mixed_span_parity_and_no_full_endpoint(spark, tmp_path):
     """delete -> re-add-with-new-payload -> merge under detect_updates:
     the commit-artifact path must agree EXACTLY with the two-snapshot
     fallback (the round-13 judge's adversarial probe, now O(changes))."""
-    import os
-
     docs = _docs_t(spark)
     t = str(tmp_path / "tbl")
     write_versioned(docs.filter("doc_id % 4 < 2"), t, id_col="doc_id")
@@ -208,15 +217,7 @@ def test_detect_updates_mixed_span_parity_and_no_full_endpoint(spark, tmp_path):
         id_col="doc_id",
     )
     feed = version_changes(spark, t, 1, 5, "doc_id", detect_updates=True)
-    mt = [
-        os.path.join(t, r["tomb_dir"])
-        for r in version_manifest(spark, t).collect()
-        if (r["kind"] or "") == "merge" and r["tomb_dir"]
-    ]
-    rw = (
-        spark.read.parquet(*mt).select("doc_id").distinct() if mt else None
-    )
-    assert _feed_set(feed) == _feed_set(_fallback(spark, t, 1, 5, rw))
+    assert _feed_set(feed) == _feed_set(_fallback(spark, t, 1, 5, _rewritten(spark, t)))
 
 
 def test_detect_updates_disjoint_span_reads_no_snapshot(spark, tmp_path):
@@ -240,21 +241,41 @@ def test_detect_updates_disjoint_span_reads_no_snapshot(spark, tmp_path):
     assert _feed_set(feed) == _feed_set(_fallback(spark, t, 1, 3))
 
 
-def test_detect_updates_duplicate_id_rows_parity(spark, tmp_path):
-    """Duplicate-id tables: net multiplicity + candidate endpoint checks
-    must agree with the fallback when an id holds k>1 rows and the span
-    removes / re-adds subsets of them."""
+@pytest.mark.parametrize("span", ["mixed", "delta", "tombstone", "merge"])
+def test_detect_updates_duplicate_id_rows_parity(spark, tmp_path, span):
+    """Duplicate-id tables: the commit-artifact feed must agree with the
+    two-snapshot fallback, with and without detect_updates, when an id
+    holds k>1 rows and the span removes / re-adds subsets of them — over
+    a delta + tombstone span and over each one-commit span a streaming
+    consumer issues: one delta, one tombstone, one MERGE collapsing
+    duplicate ids."""
     docs = _docs_t(spark).filter("doc_id % 2 = 0")
     dup = docs.filter("doc_id % 6 = 0")
     t = str(tmp_path / "tbl")
     write_versioned(docs.unionByName(dup), t, id_col="doc_id")
-    # delta re-adds more copies of some ids, tombstone removes others
-    append_versioned(dup.filter("doc_id % 12 = 0"), t, id_col="doc_id")
-    delete_versioned(
-        spark, t, docs.filter("doc_id % 18 = 0").select("doc_id"), id_col="doc_id"
-    )
-    feed = version_changes(spark, t, 1, 3, "doc_id", detect_updates=True)
-    assert _feed_set(feed) == _feed_set(_fallback(spark, t, 1, 3))
+    if span in ("mixed", "delta"):
+        # a delta re-adds more copies of some ids
+        append_versioned(dup.filter("doc_id % 12 = 0"), t, id_col="doc_id")
+    if span in ("mixed", "tombstone"):
+        delete_versioned(
+            spark, t, docs.filter("doc_id % 18 = 0").select("doc_id"), id_col="doc_id"
+        )
+    if span == "merge":
+        # matched ids that hold two rows (doc_id % 12 = 0) collapse to
+        # one; the odd ids are new
+        merge_versioned(
+            spark, t,
+            _docs_t(spark).filter("doc_id % 4 = 0 OR doc_id % 10 = 1")
+            .withColumn("text", F.lit("M")),
+            id_col="doc_id",
+        )
+    to = table_versions(spark, t)[-1]
+    for du in (False, True):
+        feed = version_changes(spark, t, 1, to, "doc_id", detect_updates=du)
+        rw = _rewritten(spark, t) if du else None
+        assert _feed_set(feed) == _feed_set(
+            _fallback(spark, t, 1, to, rw, detect_updates=du)
+        ), f"detect_updates={du}"
 
 
 # ---------------------------------------------------------------------------
@@ -350,16 +371,15 @@ def test_cdc_crash_stays_invisible(spark, tmp_path):
 
 
 def test_cdc_opt_out_falls_back(spark, tmp_path):
-    """cdc=False recommits have no change file — the span falls back to
-    endpoint assembly and stays CORRECT (the pre-round-14 behavior)."""
-    import os
+    """A recommit without a change file — the on-disk shape of a table
+    written before commit-time CDC — sends the span to endpoint assembly,
+    and the feed stays CORRECT."""
+    import shutil
 
     docs = _docs_t(spark)
     t = str(tmp_path / "tbl")
     write_versioned(docs.filter("doc_id % 3 = 0"), t, id_col="doc_id")
-    write_versioned(
-        docs.filter("doc_id % 3 < 2"), t, id_col="doc_id", cdc=False
-    )
+    write_versioned(docs.filter("doc_id % 3 < 2"), t, id_col="doc_id")
     delete_versioned(
         spark, t, docs.filter("doc_id % 5 = 0").select("doc_id"), id_col="doc_id"
     )
@@ -367,7 +387,9 @@ def test_cdc_opt_out_falls_back(spark, tmp_path):
         int(r["version"]): r["data_dir"]
         for r in version_manifest(spark, t).collect()
     }
-    assert not os.path.isdir(os.path.join(t, dirs[2], "_changes"))
+    shutil.rmtree(os.path.join(t, dirs[2], "_changes"))
+    # endpoint assembly reads the base snapshot's data directory
+    assert any(dirs[1] in f for f in version_changes(spark, t, 1, 3, "doc_id").inputFiles())
     feed = version_changes(spark, t, 1, 3, "doc_id", detect_updates=True)
     assert _feed_set(feed) == _feed_set(_fallback(spark, t, 1, 3))
 
