@@ -1,28 +1,22 @@
 """Persistent MinHash-LSH near-dup index: sign once, maintain O(delta).
 
-Round-13 verdict Next #1: the ANN family got versioned O(delta)
-maintenance (`ann_index.ensure_ivf_index_versioned`) but the near-dup
-family's incremental path was exact-hash only — a daily crawl's near-dup
-check re-ran `dedup_minhash_lsh` over the FULL corpus (O(corpus)
-signatures + band joins per refresh). This module gives the MinHash-LSH
-family the same lifecycle over a versioned corpus table
-(sources/sinks.py):
+A daily crawl's near-dup check should not re-run `dedup_minhash_lsh`
+over the FULL corpus (O(corpus) signatures + band joins per refresh).
+This module gives the MinHash-LSH family the ANN indexes' lifecycle over
+a versioned corpus table (sources/sinks.py), through the same shared
+maintenance path (`ann_index._ensure_versioned`):
 
 * ``build_minhash_index`` — one full-corpus pass persisting the BAND
   BUCKET store (id, band_idx, band_hash) and the VERIFIED PAIR store
   (id_a, id_b, jaccard) as parquet;
-* ``ensure_minhash_index_versioned`` — reads the table's O(changes)
-  change feed since the indexed version; an additive span signs ONLY
-  the new documents and probes ONLY their band buckets against the
-  stored buckets (new↔old and new↔new candidates are complete because
-  any qualifying pair shares at least one band bucket and the store
-  holds every indexed doc's buckets), verifies candidates with exact
-  Jaccard over candidate-restricted gram sets, and APPENDS the fresh
-  buckets and pairs — O(delta·bands) signing + one bucket-store probe,
-  never a corpus re-sign. DELETES are MASKED (the ANN family's
-  tombstone-mask protocol, shared helpers — `_append_delete_mask` /
-  `_read_mask`), O(deleted) bytes; CHURN spans apply both halves in one
-  pass.
+* ``ensure_minhash_index_versioned`` — an additive span signs ONLY the
+  new documents and probes ONLY their band buckets against the stored
+  buckets (new↔old and new↔new candidates are complete because any
+  qualifying pair shares at least one band bucket and the store holds
+  every indexed doc's buckets), verifies candidates with exact Jaccard
+  over candidate-restricted gram sets, and APPENDS the fresh buckets
+  and pairs — O(delta·bands) signing + one bucket-store probe, never a
+  corpus re-sign. Deletes are masked, O(deleted) bytes;
 * ``minhash_pairs_prebuilt`` — serves the pair set with masked ids
   anti-joined out of BOTH sides; on a mask-free index this is exactly
   the stored pair table.
@@ -43,16 +37,6 @@ SERVING skew concern, surfaced by the registered `minhash_band_skew`
 audit and bounded at probe time by AQE skew-join handling, not by
 corpus-global signature rewrites.
 
-Maintenance rails (all force a full rebuild — the fresh directory
-install drops the mask with it): a payload UPDATE in the span (text
-rewritten → signature stale), a RE-ADD of a masked id (its stale
-bucket/pair rows cannot be replaced in place — parquet is immutable),
-a deleted id still live at head (duplicate-id rows: masking would hide
-a live document), and the mask growing past ``max_dead_fraction`` of
-scanned rows (the compaction-policy trigger shape). Crash-idempotent:
-bucket and pair appends anti-join rows already present, the mask append
-re-reads its size from the files, and the meta write is last.
-
 Reference parity note: the reference engine (report_engine.py,
 run_reports.py) has no dedup surface — this is beyond-reference
 LLM-pipeline capability per the round brief.
@@ -66,11 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from funnel_report_etl_pipeline__spark.operators.ann_index import (
-    _append_delete_mask,
-    _install_index,
+    _ensure_versioned,
     _read_mask,
-    _readded_masked_id,
-    _span_changes,
     corpus_signature,
 )
 from funnel_report_etl_pipeline__spark.operators.dedup import (
@@ -81,10 +62,7 @@ from funnel_report_etl_pipeline__spark.operators.dedup import (
 )
 from funnel_report_etl_pipeline__spark.sources.sinks import (
     _read_dir,
-    _read_meta,
     _write_meta,
-    read_versioned,
-    table_versions,
 )
 
 __all__ = [
@@ -243,178 +221,65 @@ def ensure_minhash_index_versioned(
     hash_family: str = "md5",
     max_dead_fraction: float = 0.5,
 ) -> dict:
-    """Incremental near-dup maintenance over a versioned corpus table —
-    the `ensure_ivf_index_versioned` pattern for the MinHash-LSH family
-    (round-13 verdict Next #1). Reads the table's O(changes) change feed
-    since ``indexed_version``; an insert-bearing span signs ONLY the new
-    documents (O(delta·bands) minhash work) and probes their buckets
-    against the stored bucket table; a delete-bearing span appends to
-    the tombstone mask (O(deleted)); a churn span does both in one pass.
-    Updates, re-adds of masked ids, partially-deleted duplicate ids and
-    a mask past ``max_dead_fraction`` rebuild (module docstring: rails).
+    """Maintain the near-dup index over a versioned corpus table
+    (`ann_index._ensure_versioned`: ledger, mask, rails, rebuild). Inserts
+    sign ONLY the new documents (O(delta·bands) minhash work), append
+    their buckets, probe them against the stored bucket table and append
+    the verified new pairs; no family rail beyond the shared ones, since
+    per-document-pure signatures have no quantizer to drift.
 
     Returns the meta dict plus ``maintenance`` ∈ {'current',
     'incremental', 'masked', 'churn', 'rebuilt'} (not persisted)."""
-    corpus = read_versioned(spark, table_dir)
-    meta = _read_meta(os.path.join(out_dir, "meta.parquet"))
-    n, sig = None, None
-    want = _params_meta(
-        num_perm, ngram, bands, rows_per_band, threshold, hash_family,
-        id_col, text_col,
-    )
+    bkt_path = os.path.join(out_dir, "buckets.parquet")
+    pair_path = os.path.join(out_dir, "pairs.parquet")
 
-    def params_match(m: dict) -> bool:
-        return all(str(m.get(k)) == str(v) for k, v in want.items())
-
-    def is_current(m: dict) -> bool:
-        nonlocal n, sig
-        if not params_match(m):
-            return False
-        if n is None:
-            n, sig = corpus_signature(corpus, id_col)
-        return int(m["n_docs"]) == n and int(m["corpus_sig"]) == sig
-
-    head = None
-    if meta is not None and is_current(meta):
-        if "indexed_version" not in meta:
-            stamped = {**meta, "indexed_version": table_versions(spark, table_dir)[-1]}
-            _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
-            return {**stamped, "maintenance": "current"}
-        if int(meta["indexed_version"]) == table_versions(spark, table_dir)[-1]:
-            return {**meta, "maintenance": "current"}
-        # signature-current but the ledger lags the head: the id
-        # signature is MEMBERSHIP-only — a span of membership-preserving
-        # payload rewrites (a merge re-upserting every id with new text)
-        # is invisible to it, so probe the span below instead of serving
-        # stale signatures (round-14 review finding; same fix applied to
-        # both ANN versioned ensure functions)
-    if meta is not None and params_match(meta) and "indexed_version" in meta:
-        head, ch, ch_kinds = _span_changes(
-            spark, table_dir, int(meta["indexed_version"]), id_col
+    def encode_inserts(corpus: DataFrame, new_ids: DataFrame) -> None:
+        new_bkts = _doc_buckets(
+            corpus.join(new_ids, id_col, "semi"), id_col, text_col, num_perm,
+            ngram, bands, rows_per_band, hash_family,
         )
-        if ch is not None and not ch_kinds:
-            # non-empty span with an EMPTY feed (pure compaction /
-            # no-op recommits): nothing changed — restamp the ledger
-            stamped = {**meta, "indexed_version": head}
-            _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
-            return {**stamped, "maintenance": "current"}
-        if ch is None and is_current(meta):
-            return {**meta, "maintenance": "current"}
-        if ch is not None and ch_kinds and ch_kinds <= {"insert", "delete"}:
-            new_ids = ch.filter(F.col("_change_type") == "insert").select(
-                F.col(id_col)
+        done = _read_dir(spark, bkt_path).select("id").distinct()
+        # crash-idempotent append: a replayed maintenance re-signs the
+        # delta but appends nothing twice
+        new_bkts.join(done, "id", "left_anti").write.mode("append").parquet(bkt_path)
+        spark.catalog.refreshByPath(bkt_path)
+        store = _read_dir(spark, bkt_path)
+        # probe ONLY the new docs' buckets against the store (which now
+        # includes them, so new↔new and new↔old candidates are both
+        # complete); masked ids in the store verify to nothing (no grams)
+        s, nb = store.alias("s"), new_bkts.alias("n")
+        cand = (
+            s.join(
+                nb,
+                (F.col("s.band_idx") == F.col("n.band_idx"))
+                & (F.col("s.band_hash") == F.col("n.band_hash"))
+                & (F.col("s.id") != F.col("n.id")),
             )
-            deleted = (
-                ch.filter(F.col("_change_type") == "delete")
-                .select(F.col(id_col).alias("cid"))
-                .distinct()
+            .select(
+                F.least(F.col("s.id"), F.col("n.id")).alias("id_a"),
+                F.greatest(F.col("s.id"), F.col("n.id")).alias("id_b"),
             )
-            has_inserts = "insert" in ch_kinds
-            has_deletes = "delete" in ch_kinds
-            readded_masked = has_inserts and _readded_masked_id(
-                spark, out_dir, new_ids, id_col
-            )
-            # fully-gone guard: a net-delete of one duplicate row keeps
-            # the id live — masking it would hide a live document
-            still_live = has_deletes and (
-                corpus.select(F.col(id_col).alias("cid"))
-                .join(deleted, "cid", "semi")
-                .limit(1)
-                .count()
-                > 0
-            )
-            if not readded_masked and not still_live:
-                if n is None:
-                    n, sig = corpus_signature(corpus, id_col)
-                n_masked = int(meta.get("n_masked", 0) or 0)
-                if has_deletes:
-                    masked = _append_delete_mask(
-                        spark, out_dir, deleted, n, max_dead_fraction
-                    )
-                    n_masked = masked  # None → dead fraction → rebuild
-                if n_masked is not None:
-                    if has_inserts:
-                        new_docs = corpus.join(new_ids, id_col, "semi")
-                        new_bkts = _doc_buckets(
-                            new_docs, id_col, text_col, num_perm, ngram,
-                            bands, rows_per_band, hash_family,
-                        )
-                        bkt_path = os.path.join(out_dir, "buckets.parquet")
-                        done = (
-                            _read_dir(spark, bkt_path).select("id").distinct()
-                        )
-                        # crash-idempotent append: a replayed maintenance
-                        # re-signs the delta but appends nothing twice
-                        new_bkts.join(done, "id", "left_anti").write.mode(
-                            "append"
-                        ).parquet(bkt_path)
-                        spark.catalog.refreshByPath(bkt_path)
-                        store = _read_dir(spark, bkt_path)
-                        # probe ONLY the new docs' buckets against the
-                        # store (which now includes them, so new↔new and
-                        # new↔old candidates are both complete); masked
-                        # ids in the store verify to nothing (no grams)
-                        s, nb = store.alias("s"), new_bkts.alias("n")
-                        cand = (
-                            s.join(
-                                nb,
-                                (F.col("s.band_idx") == F.col("n.band_idx"))
-                                & (F.col("s.band_hash") == F.col("n.band_hash"))
-                                & (F.col("s.id") != F.col("n.id")),
-                            )
-                            .select(
-                                F.least(F.col("s.id"), F.col("n.id")).alias("id_a"),
-                                F.greatest(F.col("s.id"), F.col("n.id")).alias("id_b"),
-                            )
-                            .distinct()
-                        )
-                        fresh = _verify_candidates(
-                            corpus, cand, id_col, text_col, ngram, threshold
-                        )
-                        pair_path = os.path.join(out_dir, "pairs.parquet")
-                        have = _read_dir(spark, pair_path).select(
-                            "id_a", "id_b"
-                        )
-                        fresh.join(
-                            have, ["id_a", "id_b"], "left_anti"
-                        ).write.mode("append").parquet(pair_path)
-                    new_meta = {
-                        **want,
-                        "n_docs": n,
-                        "corpus_sig": sig,
-                        "indexed_version": head,
-                        "n_masked": n_masked,
-                    }
-                    _write_meta(os.path.join(out_dir, "meta.parquet"), new_meta)
-                    label = (
-                        "churn"
-                        if has_inserts and has_deletes
-                        else ("incremental" if has_inserts else "masked")
-                    )
-                    return {**new_meta, "maintenance": label}
-    # first build, payload updates in the span, re-added masked ids,
-    # partially-deleted duplicate ids, dead fraction past the trigger,
-    # param change, or a legacy index without the version ledger: full
-    # rebuild (fresh directory install — the mask disappears with it)
-    head = head if head is not None else table_versions(spark, table_dir)[-1]
-    tmp = f"{out_dir}.build.{os.getpid()}"
-    build_minhash_index(
-        corpus, tmp, id_col, text_col, num_perm, ngram, bands,
-        rows_per_band, threshold, hash_family,
-    )
-
-    def install_current(m: dict) -> bool:
-        # version-aware install-race check: the membership-only id
-        # signature would declare a stale pre-rewrite index "current"
-        # and discard the fresh build (round-14 review finding, same
-        # fix as the ANN versioned ensure functions)
-        return (
-            is_current(m)
-            and str(m.get("indexed_version", "")) == str(head)
+            .distinct()
+        )
+        fresh = _verify_candidates(corpus, cand, id_col, text_col, ngram, threshold)
+        have = _read_dir(spark, pair_path).select("id_a", "id_b")
+        fresh.join(have, ["id_a", "id_b"], "left_anti").write.mode("append").parquet(
+            pair_path
         )
 
-    installed = _install_index(tmp, out_dir, install_current)
-    stamped = {**installed, "indexed_version": head}
-    stamped.pop("maintenance", None)
-    _write_meta(os.path.join(out_dir, "meta.parquet"), stamped)
-    return {**stamped, "maintenance": "rebuilt"}
+    return _ensure_versioned(
+        spark,
+        table_dir,
+        out_dir,
+        _params_meta(
+            num_perm, ngram, bands, rows_per_band, threshold, hash_family,
+            id_col, text_col,
+        ),
+        lambda c, tmp: build_minhash_index(
+            c, tmp, id_col, text_col, num_perm, ngram, bands, rows_per_band,
+            threshold, hash_family,
+        ),
+        encode_inserts,
+        max_dead_fraction=max_dead_fraction,
+        count_key="n_docs",
+    )

@@ -90,9 +90,9 @@ def load_all() -> dict[str, QuerySpec]:
 # names with zero external rows after CORRECTNESS_r08 — the round-8
 # verdict's top ask) plus every round-9 registration from day one; the
 # remaining slots keep round-8 entries that already hold fresh r08 rows.
-# Rotated-out queries still register — tools/verify_parity.py and
-# driver_sim check ALL entries, and every rotated-out name holds at least
-# one committed external green row (CORRECTNESS_r0{2..8}.json).
+# Rotated-out queries still register — tools/driver_sim.py checks ALL
+# entries, and every rotated-out name holds at least one committed
+# external green row (CORRECTNESS_r0{2..8}.json).
 # tests/test_entry_contract.py enforces the standing budget contract:
 # every never-externally-verified registration must sit INSIDE the
 # window, so rotation debt can never exceed one rotation.

@@ -1484,7 +1484,8 @@ def version_changes(
     costs O(changes) bytes. A span crossing a recommit without a CDC file
     (a table written before commit-time CDC) falls back to an id-grain
     multiplicity diff of the two assembled snapshots
-    (`_multiplicity_changes`); so does the empty span.
+    (`_multiplicity_changes`). The empty span (``from_version ==
+    to_version``) is an empty frame of the feed's schema, no Spark job.
 
     'update' contract (``detect_updates``; both routes answer the same
     history the same): an id present at BOTH endpoints emits one 'update'
@@ -1505,6 +1506,13 @@ def version_changes(
         )
     import os
 
+    if from_version == to_version:
+        # the optimizer prunes the always-false filter to an empty relation
+        return (
+            read_versioned(spark, table_dir, to_version)
+            .selectExpr(f"`{id_col}`", "CAST(NULL AS STRING) AS _change_type")
+            .where("false")
+        )
     between = [r for r in rows if from_version < r["version"] <= to_version]
     kinds = [
         (r["kind"] if "kind" in r.__fields__ else None) or "snapshot" for r in between

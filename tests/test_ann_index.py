@@ -74,17 +74,35 @@ def test_ensure_skips_rebuild_when_signature_matches(spark, tmp_path):
 
 
 def test_ensure_rebuilds_on_corpus_change(spark, tmp_path):
+    """A saved index is stale when its corpus changed (a filtered corpus:
+    other ids) or a build parameter did (then the same ids with other
+    vectors in another column, ``vec_col="e2"``): each ensure rebuilds
+    and serves the fresh build's answers."""
     emb = _emb(spark)
     idx = str(tmp_path / "ivf")
     ensure_ivf_medoid_index(emb, idx, n_cells=16)
     grown = emb.filter(F.col("vec_id") % 7 != 0)  # a changed corpus
-    meta = ensure_ivf_medoid_index(grown, idx, n_cells=16)
-    assert int(meta["n_vectors"]) == grown.count() != emb.count()
-    # the rebuilt index serves the NEW corpus's answers
-    q = grown.filter(F.col("vec_id") < 10)
-    fresh = {tuple(r) for r in cosine_topk_ivf_medoid(grown, q, k=5, n_cells=16, n_probe=2).collect()}
-    served = {tuple(r) for r in cosine_topk_ivf_prebuilt(grown, q, idx, k=5, n_probe=2).collect()}
-    assert served == fresh
+    revectored = grown.withColumn(  # grown's ids, other vectors
+        "e2", F.expr("transform(embedding, (x, i) -> x * (i + 1))")
+    )
+    for corpus, vec_col in ((grown, "embedding"), (revectored, "e2")):
+        meta = ensure_ivf_medoid_index(corpus, idx, n_cells=16, vec_col=vec_col)
+        assert meta["vec_col"] == vec_col
+        assert int(meta["n_vectors"]) == corpus.count()
+        q = corpus.filter(F.col("vec_id") < 10)
+        fresh = {
+            tuple(r)
+            for r in cosine_topk_ivf_medoid(
+                corpus, q, k=5, n_cells=16, n_probe=2, vec_col=vec_col
+            ).collect()
+        }
+        served = {
+            tuple(r)
+            for r in cosine_topk_ivf_prebuilt(
+                corpus, q, idx, k=5, n_probe=2, vec_col=vec_col
+            ).collect()
+        }
+        assert served == fresh and served
 
 
 def _spark_written_meta(spark, path: str, meta: dict) -> None:
@@ -392,7 +410,8 @@ def _brute_top5(spark, emb):
 
 def test_residual_loaded_index_serves_deterministically(spark, tmp_path):
     """ensure → serve → rebuild elsewhere → identical results; second
-    ensure is a pure read (no artifact file rewritten)."""
+    ensure is a pure read (no artifact file rewritten); the IVF index
+    rebuilt with other cells (every residual changes) makes it stale."""
     from funnel_report_etl_pipeline__spark.operators.ann_index import (
         ensure_ivf_medoid_index,
         ensure_ivfpq_residual_index,
@@ -408,6 +427,8 @@ def test_residual_loaded_index_serves_deterministically(spark, tmp_path):
     before = _mtimes(r1)
     assert ensure_ivfpq_residual_index(emb, r1, ivf)  # idempotent re-ensure
     assert _mtimes(r1) == before
+    ensure_ivf_medoid_index(emb, ivf, n_cells=8)
+    assert len(ensure_ivfpq_residual_index(emb, r1, ivf)["medoid_ids"].split(",")) == 8
     ensure_ivfpq_residual_index(emb, r2, ivf)
     a = {tuple(r) for r in ivfpq_residual_topk_prebuilt(q, ivf, r1, k=5).collect()}
     b = {tuple(r) for r in ivfpq_residual_topk_prebuilt(q, ivf, r2, k=5).collect()}

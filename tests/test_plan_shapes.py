@@ -279,7 +279,7 @@ def test_versioned_commit_job_budgets(spark, tmp_path):
     assert maint_jobs <= 4, f"compact + vacuum ran {maint_jobs} jobs"
 
 
-@pytest.mark.parametrize("kind", ["delta", "tombstone", "merge"])
+@pytest.mark.parametrize("kind", ["delta", "tombstone", "merge", "empty"])
 def test_one_commit_change_feed_job_budgets(spark, tmp_path, kind):
     """Collecting the change feed of a one-commit span — what the
     streaming change-feed consumer asks for at every commit — runs the
@@ -289,7 +289,8 @@ def test_one_commit_change_feed_job_budgets(spark, tmp_path, kind):
     of its net-multiplicity exchange plus the result (2), and 3 with
     detect_updates: its rewritten ids are its updates, with no candidate
     probe and no endpoint read (it ran 4 and 5 jobs when the one-merge
-    span had its own branch)."""
+    span had its own branch). The empty span (from == to) runs none and
+    keeps the feed's schema (it scanned the snapshot twice, 2 jobs)."""
     from funnel_report_etl_pipeline__spark.sources import sinks
 
     t = str(tmp_path / kind)
@@ -301,11 +302,17 @@ def test_one_commit_change_feed_job_budgets(spark, tmp_path, kind):
     elif kind == "tombstone":
         v2 = sinks.delete_versioned(spark, t, src.select("doc_id"), "doc_id")
         want = {(i, "delete") for i in range(190, 200)}
-    else:
+    elif kind == "merge":
         v2 = sinks.merge_versioned(spark, t, src, id_col="doc_id")
         want = {(i, "insert") for i in range(200, 220)}
-    budgets = {"delta": (1, 1), "tombstone": (1, 1), "merge": (2, 3)}[kind]
+    else:
+        v2, want = v1, set()
+    budgets = {"delta": (1, 1), "tombstone": (1, 1), "merge": (2, 3), "empty": (0, 0)}[kind]
     for du, budget in zip((False, True), budgets):
+        feed = sinks.version_changes(spark, t, v1, v2, "doc_id", detect_updates=du)
+        assert [(f.name, f.dataType.simpleString()) for f in feed.schema] == [
+            ("doc_id", "bigint"), ("_change_type", "string")
+        ]
         rows, jobs = _jobs_under_group(
             spark, f"test_one_commit_change_feed_job_budgets:{kind}:{du}",
             lambda: sinks.version_changes(spark, t, v1, v2, "doc_id", detect_updates=du).collect(),
@@ -344,6 +351,54 @@ def test_partitioned_span_change_feed_build_job_budget(spark, tmp_path):
     )
     assert sorted((r["doc_id"], r["_change_type"]) for r in feed.collect()) == want
     assert jobs <= 14, f"version_changes built in {jobs} jobs"
+
+
+def _file_mtimes(root) -> dict:
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+@pytest.mark.parametrize(
+    "family", ["ivf", "ivf_versioned", "residual_versioned", "minhash_versioned"]
+)
+def test_current_index_ensure_runs_only_the_signature(spark, tmp_path, family):
+    """An ensure_* on an up-to-date index runs the corpus signature's 2
+    Spark jobs (its aggregate's map stage and result) and rewrites no
+    file — the path every corpus_versioned pass and every daily job
+    with nothing changed takes."""
+    from functools import partial
+
+    from funnel_report_etl_pipeline__spark.operators import ann_index, dedup_index
+    from funnel_report_etl_pipeline__spark.sources import sinks
+
+    idx, t = str(tmp_path / "idx"), str(tmp_path / "tbl")
+    emb = spark.read.parquet(os.path.join(SF_SMALL, "embeddings.parquet"))
+    if family == "ivf":
+        ensure = partial(ann_index.ensure_ivf_medoid_index, emb, idx, n_cells=8)
+    elif family == "minhash_versioned":
+        docs = spark.read.parquet(os.path.join(SF_SMALL, "documents.parquet"))
+        sinks.write_versioned(docs.select("doc_id", "text"), t, id_col="doc_id")
+        ensure = partial(dedup_index.ensure_minhash_index_versioned, spark, t, idx)
+    else:
+        sinks.write_versioned(emb, t, id_col="vec_id")
+        ivf = str(tmp_path / "ivf")
+        ann_index.ensure_ivf_index_versioned(spark, t, ivf, n_cells=8)
+        ensure = (
+            partial(ann_index.ensure_ivf_index_versioned, spark, t, ivf, n_cells=8)
+            if family == "ivf_versioned"
+            else partial(ann_index.ensure_ivfpq_residual_index_versioned, spark, t, idx, ivf)
+        )
+    ensure()
+    before = _file_mtimes(tmp_path)
+    meta, jobs = _jobs_under_group(
+        spark, f"test_current_index_ensure_runs_only_the_signature:{family}", ensure
+    )
+    assert meta.get("maintenance", "current") == "current"
+    assert jobs == 2, f"{family}: {jobs} jobs"
+    assert _file_mtimes(tmp_path) == before, "a current ensure rewrote a file"
 
 
 def test_index_meta_write_and_read_run_no_spark_job(spark, tmp_path):

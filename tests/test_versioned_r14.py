@@ -224,7 +224,8 @@ def test_detect_updates_disjoint_span_reads_no_snapshot(spark, tmp_path):
     """The daily disjoint ingest-plus-takedown span has NO update
     candidates — detect_updates must not read any snapshot directory
     (the round-13 advice's medium finding: the ANN churn path claims
-    O(changes) and _span_changes always sets detect_updates=True)."""
+    O(changes) and index maintenance always reads the feed with
+    detect_updates=True)."""
     docs = _docs_t(spark)
     t = str(tmp_path / "tbl")
     write_versioned(docs.filter("doc_id % 4 < 2"), t, id_col="doc_id")

@@ -1,12 +1,13 @@
-"""Strict simulation of the external correctness driver.
+"""Strict simulation of the external correctness driver — the repo's one
+registry-vs-DuckDB parity gate.
 
-Unlike tools/verify_parity.py (which goes through the package's own
-``session.get_spark`` and stringifies datetimes), this loads
-``__spark_entry__.py`` via importlib with a PLAIN SparkSession — exactly
-what the external gate does — runs ``entry(spark)`` plus every
-``queries()`` entry at the given SF dir, and compares each result to its
+It loads ``__spark_entry__.py`` via importlib with a PLAIN SparkSession —
+exactly what the external gate does, not the package's own
+``session.get_spark`` — runs ``entry(spark)`` plus every ``queries()``
+entry at the given SF dir (default sf0.01), and compares each result to its
 ``oracle_sql()`` SQL run in DuckDB with RAW value equality (no
-stringification; rows sorted by all columns, columns sorted by name).
+stringification, so date-vs-timestamp mismatches show; rows sorted by all
+columns, columns sorted by name). Exits nonzero on any mismatch.
 
 Usage: python tools/driver_sim.py [--json OUT.json] [--changed-since REV]
        [--parallel N] [sf_dir] [query ...]
